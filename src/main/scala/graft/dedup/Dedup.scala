@@ -20,9 +20,12 @@ import graft.text.TextAnalysis
   * Execution notes (these made a 10×+ difference at sf0.1):
   *  - signature/sketch stages are persisted before self-joins — Spark
   *    duplicates the subtree on both join sides and per exploded band
-  *    otherwise, and higher-order md5 lambdas run interpreted (no
-  *    codegen), so recomputation is what kills you (at cluster scale
+  *    otherwise, so recomputation is what kills you (at cluster scale
   *    the same role is played by a checkpoint/staging table);
+  *  - the md5 kernels (minhash signatures, simhash bits, span window
+  *    digests) are native codegen'd expressions in graft.functions,
+  *    because higher-order lambdas run interpreted with per-element
+  *    closure dispatch;
   *  - the bucket self-join carries only (id, band, bucket); shingle
   *    sets rejoin AFTER candidate pairs are distinct, with no hint —
   *    AQE broadcasts the small side locally, and at cluster scale the
@@ -71,11 +74,13 @@ object Dedup {
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
       w: Int): DataFrame = {
     require(w >= 1, s"window w=$w must be >= 1")
-    // The span map pass runs twice (the two consumers' subtrees differ
-    // below their exchanges, so exchange reuse cannot fire) — that is
-    // a DETERMINISTIC 2× of one cheap single-MD5-per-window pass, not
-    // a reuse cliff, and persisting the span stream instead measured
-    // SLOWER (1.4 s vs 1.3 s min-of-2 at the 10× tier, Tune ab: the
+    // The span map pass runs twice per execution of this frame (the
+    // digest groupBy and the probe join differ below their exchanges,
+    // so exchange reuse cannot fire), and a caller's global ORDER BY
+    // adds a third run in its range-sampling job. That is a
+    // deterministic multiple of one cheap single-MD5-per-window pass,
+    // not a reuse cliff: persisting the span stream instead measured
+    // no faster (SCALE.md, "Span dedup persist vs recompute"; the
     // cache build is a full columnar pass over the operator's largest
     // intermediate). The Tune A/B that re-measures that call re-uses
     // THESE helpers, differing only in the persist.
@@ -91,24 +96,13 @@ object Dedup {
     */
   private[graft] def spanStream(df: DataFrame, idCol: String,
       textCol: String, w: Int): DataFrame = {
-    // tokenize into a projected column FIRST: slice(toks, i, w) inside
-    // the transform lambda re-evaluates its array subtree per window,
-    // so an inline split would run O(windows) times per doc — an
-    // attribute reference is evaluated once (CollapseProject keeps the
-    // barrier: the alias is non-cheap and multiply-referenced)
-    val toks = col("__toks")
-    // rolling windows; sequence() counts DOWN when start > stop, so
-    // short docs need the explicit empty-array branch. Digests ride the
-    // shuffle as 16-byte binary (unhex), not 32-char hex — the digest
-    // IS the shuffle key for the whole pipeline, so this halves key
-    // bytes on the window-explode stages (outputs are counts; the hex
-    // form never leaves the operator)
-    val wins = when(size(toks) >= w,
-      array_distinct(transform(sequence(lit(1), size(toks) - w + 1),
-        i => unhex(md5(concat_ws(" ", slice(toks, i, lit(w))))))))
-      .otherwise(array().cast("array<binary>"))
+    // Digests ride the shuffle as raw 16-byte md5s, not 32-char hex:
+    // the digest IS the shuffle key for the whole pipeline, so this
+    // halves key bytes on the window-explode stages (outputs are
+    // counts; the hex form never leaves the operator)
+    val wins = graft.functions.SketchExpressions.windowDigests(
+      split(trim(col(textCol)), "[ \\t\\n\\r\\f]+"), w, distinct = true)
     graft.ops.InputLayout.spread(df, col(idCol))
-      .select(col(idCol), split(trim(col(textCol)), "[ \\t\\n\\r\\f]+").as("__toks"))
       .select(col(idCol), explode_outer(wins).as("__dig"))
   }
 
@@ -144,7 +138,7 @@ object Dedup {
     * removing boilerplate shared across crawl records.
     *
     * Scale shape: positions ride the shuffle as (id, offset) longs and
-    * digests as 32-char strings — never the window text. Stages:
+    * digests as 16-byte md5s — never the window text. Stages:
     * window digests (map-side) → digest stats groupBy (owner, doc
     * count) → keyed join back → covered-position explode → per-doc
     * sorted position set (set-dedup inside the aggregate, binary-
@@ -170,10 +164,8 @@ object Dedup {
     // 16-byte binary digests for the same reason as duplicateSpans:
     // __dig keys the stats aggregate and the probe join
     val wins = base.select(col(idCol), posexplode(
-        when(size(toks) >= w,
-          transform(sequence(lit(1), size(toks) - w + 1),
-            i => unhex(md5(concat_ws(" ", slice(toks, i, lit(w)))))))
-          .otherwise(array().cast("array<binary>"))).as(Seq("__off", "__dig")))
+        graft.functions.SketchExpressions.windowDigests(toks, w, distinct = false))
+      .as(Seq("__off", "__dig")))
     val stats = wins.groupBy("__dig").agg(
       countDistinct(col(idCol)).as("__docs"),
       min(col(idCol)).as("__owner"))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{BooleanType, IntegerType}
 
 /** The single table of graft's custom Catalyst expressions as SQL
   * function builders. Consumed by both registration paths:
@@ -17,6 +17,12 @@ object GraftFunctions {
       s"$fn: $arg must be an integer literal, got $other")
   }
 
+  private def boolLit(e: Expression, fn: String, arg: String): Boolean = e match {
+    case Literal(v: Boolean, BooleanType) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn: $arg must be a boolean literal, got $other")
+  }
+
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "jaro_winkler" -> (exprs => JaroWinkler(exprs(0), exprs(1))),
     "poly_hash" -> (exprs => PolyHash(exprs.head)),
@@ -29,6 +35,10 @@ object GraftFunctions {
       WordShingles(exprs(0), intLit(exprs(1), "word_shingles", "n"))),
     "minhash_sig" -> (exprs =>
       MinHashSig(exprs(0), intLit(exprs(1), "minhash_sig", "k"))),
+    // window_digests(toks, w [, distinct = false])
+    "window_digests" -> (exprs => WindowDigests(exprs(0),
+      intLit(exprs(1), "window_digests", "w"),
+      exprs.lift(2).exists(boolLit(_, "window_digests", "distinct")))),
     "char_class_counts" -> (exprs => CharClassCounts(exprs.head)),
     "ahash_bands" -> (exprs =>
       AHashBands(exprs(0), intLit(exprs(1), "ahash_bands", "capChars"))),

@@ -3,11 +3,14 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd sketch primitives. These compute EXACTLY the same
@@ -139,6 +142,99 @@ object SketchOps {
       i += 1
     }
     new GenericArrayData(mins)
+  }
+
+  // windowDigests' joined-token scratch, grown on demand and kept per
+  // thread like the digest itself, up to 1 MB (a longer document's
+  // buffer is dropped with the call)
+  private val localJoin = ThreadLocal.withInitial[Array[Byte]](() =>
+    new Array[Byte](4096))
+
+  /** Rolling `w`-token window digests: element i is the raw 16-byte md5
+    * of tokens i..i+w-1 joined by single spaces, i.e. exactly
+    * `unhex(md5(concat_ws(' ', slice(toks, i + 1, w))))` for every
+    * window in order, null tokens skipped as concat_ws skips them. A
+    * null array or one with fewer than `w` tokens gives the empty
+    * array (the `size(toks) >= w` branch of that composable form).
+    *
+    * The tokens are laid out once as their space-joined bytes, so each
+    * window is a contiguous slice and costs one md5 update: no
+    * per-window string, no hex, no unhex. `distinct` keeps the first
+    * occurrence of each digest, in order (array_distinct's result),
+    * through an open-addressing set keyed on digest bytes: linear per
+    * document, where array_distinct over binary is quadratic.
+    */
+  def windowDigests(toks: ArrayData, w: Int, distinct: Boolean): ArrayData = {
+    val m = if (toks == null) 0 else toks.numElements()
+    if (m < w) return new GenericArrayData(Array.empty[Any])
+    // st(j)/en(j) bound token j in the joined bytes. A null token takes
+    // the start of the next non-null token and the end of the previous
+    // one, so the slice [st(i), en(i+w-1)) of any window skips nulls
+    // and is empty (negative) when the window holds no token at all.
+    val st = new Array[Int](m)
+    val en = new Array[Int](m)
+    var buf = localJoin.get()
+    var pos = 0
+    var last = -1
+    var j = 0
+    while (j < m) {
+      if (toks.isNullAt(j)) st(j) = -1
+      else {
+        val s = toks.getUTF8String(j)
+        val sep = if (last < 0) 0 else 1
+        if (pos + sep + s.numBytes() > buf.length) {
+          buf = java.util.Arrays.copyOf(buf,
+            math.max(buf.length * 2, pos + sep + s.numBytes()))
+          if (buf.length <= (1 << 20)) localJoin.set(buf)
+        }
+        if (sep == 1) { buf(pos) = ' '.toByte; pos += 1 }
+        s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
+        st(j) = pos
+        pos += s.numBytes()
+        last = pos
+      }
+      en(j) = last
+      j += 1
+    }
+    var next = pos + 1
+    j = m - 1
+    while (j >= 0) {
+      if (st(j) < 0) st(j) = next else next = st(j)
+      j -= 1
+    }
+    val md = localMd.get()
+    md.reset()
+    val n = m - w + 1
+    val out = new Array[Any](n)
+    val d = localBuf.get()
+    // distinct mode: slot -> 1 + index into out, table at least twice
+    // the window count; md5 bytes are uniform, so 4 of them hash
+    var mask = 0
+    var slots: Array[Int] = null
+    if (distinct) {
+      var cap = 16
+      while (cap < 2 * n) cap <<= 1
+      mask = cap - 1
+      slots = new Array[Int](cap)
+    }
+    var kept = 0
+    var i = 0
+    while (i < n) {
+      val len = en(i + w - 1) - st(i)
+      if (len > 0) md.update(buf, st(i), len)
+      md.digest(d, 0, 16)
+      if (!distinct) { out(kept) = d.clone(); kept += 1 }
+      else {
+        var h = ((d(0) & 0xff) | (d(1) & 0xff) << 8 | (d(2) & 0xff) << 16 |
+          (d(3) & 0xff) << 24) & mask
+        while (slots(h) != 0 &&
+            !java.util.Arrays.equals(out(slots(h) - 1).asInstanceOf[Array[Byte]], d))
+          h = (h + 1) & mask
+        if (slots(h) == 0) { out(kept) = d.clone(); kept += 1; slots(h) = kept }
+      }
+      i += 1
+    }
+    new GenericArrayData(if (kept == n) out else out.take(kept))
   }
 
   private def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
@@ -392,6 +488,33 @@ case class MinHashSigFast(child: Expression, k: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** [[SketchOps.windowDigests]]. Not null-intolerant: a null token array
+  * yields the empty array, as the composable form it replaces does.
+  */
+case class WindowDigests(child: Expression, w: Int, distinct: Boolean)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "window_digests"
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (w < 1) TypeCheckResult.TypeCheckFailure(
+      s"$prettyName: window w must be >= 1, got $w")
+    else SketchOps.requireArrayOf(prettyName, StringType, child.dataType)
+  override def eval(input: InternalRow): Any =
+    SketchOps.windowDigests(child.eval(input).asInstanceOf[ArrayData], w, distinct)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.SketchOps.windowDigests(
+          ${c.isNull} ? null : ${c.value}, $w, $distinct);""",
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 case class SimHashBits(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -490,6 +613,8 @@ object SketchExpressions {
     GraftShim.column(MinHashSig(GraftShim.expression(shingles), k))
   def minhashSigFast(shingles: Column, k: Int): Column =
     GraftShim.column(MinHashSigFast(GraftShim.expression(shingles), k))
+  def windowDigests(tokens: Column, w: Int, distinct: Boolean): Column =
+    GraftShim.column(WindowDigests(GraftShim.expression(tokens), w, distinct))
   def simhashBits(tokens: Column): Column =
     GraftShim.column(SimHashBits(GraftShim.expression(tokens)))
   def simhash64(tokens: Column): Column =

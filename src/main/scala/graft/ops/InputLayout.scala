@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Input-parallelism guard for the map-heavy operator entries (guide
@@ -39,7 +41,7 @@ object InputLayout {
     val target = sc.defaultParallelism
     val cur =
       try df.queryExecution.sparkPlan.execute().getNumPartitions
-      catch { case _: Throwable => target }
+      catch { case NonFatal(_) => target }
     if (cur * 2 <= target) df.repartition(target, key) else df
   }
 

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -35,7 +37,7 @@ object StageCache {
     * released stage recomputes it rather than failing.
     */
   def releaseAll(): Unit = synchronized {
-    stages.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
+    stages.foreach(df => try df.unpersist(false) catch { case NonFatal(_) => () })
     stages.clear()
   }
 

@@ -89,7 +89,7 @@ object TextAnalysis {
     val gateHex = if (rate256 >= 256) lit("g") else lit(f"$rate256%02x")
     // empty-array guard: sequence(1, 0) counts DOWN to [1, 0] and
     // zip_with pads toks with null, which would mask up to 2 phantom
-    // tokens — same trap Dedup.duplicateSpans and bigramsT branch on
+    // tokens — same trap bigramsT branches on
     def gateAt(i: Column): Column =
       substring(md5(concat(id.cast("string"), lit(":"), i.cast("string"))), 1, 2)
         .lt(gateHex)

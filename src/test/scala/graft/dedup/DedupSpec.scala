@@ -1,7 +1,9 @@
 package graft.dedup
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions.lit
+import graft.functions.SketchExpressions
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -313,6 +315,67 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.duplicateSpans(short, "doc_id", "text", w = 4)
       .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
     assert(got === Seq((1L, 0L, 0L), (2L, 0L, 0L)))
+  }
+
+  // The composable form the native window_digests kernel replaced,
+  // kept as its reference: every window's unhex(md5(concat_ws)) in
+  // order, array_distinct on top in the duplicateSpans form.
+  private def hofWindows(toks: Column, w: Int, distinct: Boolean): Column = {
+    val all = transform(sequence(lit(1), size(toks) - w + 1),
+      i => unhex(md5(concat_ws(" ", slice(toks, i, lit(w))))))
+    when(size(toks) >= w, if (distinct) array_distinct(all) else all)
+      .otherwise(array().cast("array<binary>"))
+  }
+
+  test("window_digests ≡ the transform/slice/md5 chain on hostile texts") {
+    val texts: Seq[String] = Seq(null, "", " ", "   ", "\t \n",
+      "a\tb\nc\rd\fe f", "a\u000Bb c\u000B d e",
+      "  lead and trail spaces  ", "\ttab lead", "tab trail\t",
+      "héllo wörld 日本語 テキスト ñ ß 🙂 end",
+      "a b a b a b a b", "x x x x x x", "one", "two words",
+      "exactly four tok ens", "a  b\t\tc\n\nd")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val toks = split(trim(col("text")), "[ \\t\\n\\r\\f]+")
+    // null array elements, which split never produces but SQL callers
+    // can pass: concat_ws skips them
+    val arrs = Seq(Seq("a", null, "b", "c"), Seq(null, null, "x", null),
+      Seq[String](null, null, null), Seq("", "a", null, ""))
+      .zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("doc_id", "toks")
+    def hexAll(c: Column): Column = transform(c, d => hex(d))
+    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      withSQLConf("spark.sql.codegen.factoryMode" -> codegen,
+          "spark.sql.codegen.wholeStage" -> (codegen == "CODEGEN_ONLY").toString) {
+        for (w <- Seq(1, 2, 3, 4, 8); distinct <- Seq(false, true);
+             (in, t) <- Seq((df, toks), (arrs, col("toks")))) {
+          in.select(col("doc_id"),
+              hexAll(SketchExpressions.windowDigests(t, w, distinct)).as("k"),
+              hexAll(hofWindows(t, w, distinct)).as("r"))
+            .collect().foreach { r =>
+              assert(r.getSeq[String](1) === r.getSeq[String](2),
+                s"doc ${r.getLong(0)} w=$w distinct=$distinct $codegen")
+            }
+        }
+      }
+    }
+    // the fixture must reach every branch it claims to
+    val n = df.select(col("doc_id"),
+        size(SketchExpressions.windowDigests(toks, 2, distinct = false)),
+        size(SketchExpressions.windowDigests(toks, 2, distinct = true)))
+      .as[(Long, Int, Int)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(n(0L) === ((0, 0)), "null text")
+    assert(n(11L) === ((7, 2)), "repeated windows collapse in distinct mode")
+    assert(n(13L) === ((0, 0)), "fewer tokens than w")
+    assert(n(6L) === ((3, 3)), "U+000B must not split")
+  }
+
+  test("duplicateSpans: one 50k-token document has 49993 8-token spans") {
+    // the quadratic array_distinct form took seconds per such document
+    val text = (0 until 50000).map(i => s"t$i").mkString(" ")
+    val got = Dedup.duplicateSpans(Seq((1L, text)).toDF("doc_id", "text"),
+        "doc_id", "text", w = 8)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(got === Seq((1L, 49993L, 0L)))
   }
 
   private def md5hex(s: String): String =

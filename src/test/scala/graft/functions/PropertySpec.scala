@@ -359,4 +359,29 @@ class PropertySpec extends AnyFunSuite {
         s"self-concat variance on $tokens")
     }
   }
+
+  test("window_digests: equals md5 of each space-joined window, nulls skipped") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    for (_ <- 1 to trials; w <- Seq(1, 2, 3, 5)) {
+      // a small pool makes repeated windows common; nulls test the
+      // concat_ws convention (skipped, no doubled separator)
+      val toks: Seq[String] = (0 until rnd.nextInt(14)).map { _ =>
+        if (rnd.nextInt(8) == 0) null else tokenPool(rnd.nextInt(5))
+      }
+      val arr = new GenericArrayData(
+        toks.map(t => if (t == null) null else UTF8String.fromString(t)).toArray[Any])
+      val all =
+        if (toks.length < w) Seq.empty
+        else toks.sliding(w).map(win => md5hex(win.filter(_ != null).mkString(" "))).toSeq
+      for (distinct <- Seq(false, true)) {
+        val got = SketchOps.windowDigests(arr, w, distinct)
+        val gotHex = (0 until got.numElements()).map(i =>
+          got.getBinary(i).map("%02x".format(_)).mkString)
+        assert(gotHex === (if (distinct) all.distinct else all),
+          s"toks=$toks w=$w distinct=$distinct")
+      }
+    }
+    assert(SketchOps.windowDigests(null, 1, distinct = true).numElements() === 0)
+  }
 }

@@ -34,4 +34,22 @@ class RegistrySpec extends SparkTestBase {
       """).collect()(0)
     assert(row.isNullAt(0) && row.isNullAt(1))
   }
+
+  test("window_digests from SQL: raw md5 per window, distinct mode, null input") {
+    Registry.registerAll(spark)
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02X".format(_)).mkString
+    val row = spark.sql(
+      """SELECT transform(window_digests(array('a', 'b', 'a', 'b'), 2),
+                          d -> hex(d)) AS all2,
+                transform(window_digests(array('a', 'b', 'a', 'b'), 2, true),
+                          d -> hex(d)) AS dist2,
+                window_digests(CAST(NULL AS array<string>), 2) AS nul,
+                window_digests(array('a'), 2) AS short
+      """).collect()(0)
+    assert(row.getSeq[String](0) === Seq("a b", "b a", "a b").map(md5hex))
+    assert(row.getSeq[String](1) === Seq("a b", "b a").map(md5hex))
+    assert(row.getSeq[Array[Byte]](2).isEmpty && row.getSeq[Array[Byte]](3).isEmpty)
+  }
 }
