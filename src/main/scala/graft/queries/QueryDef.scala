@@ -1,6 +1,13 @@
 package graft.queries
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One registered operator query: a Spark DataFrame program plus (when
   * SQL-expressible) an equivalent DuckDB SQL oracle over the same parquet
@@ -13,10 +20,97 @@ final case class QueryDef(
     oracle: Option[String],
     fn: (SparkSession, String) => DataFrame)
 
-/** Parquet fixture tables (TESTDATA.md). */
+/** Parquet fixture tables (TESTDATA.md), read through a per-session
+  * schema pin.
+  *
+  * A plain `spark.read.parquet(path)` infers the schema on every call:
+  * one footer-merge Spark job plus driver work (~100 ms), paid by every
+  * query builder for every fixture it reads. Instead each
+  * (session, path) keeps one pin: the schema inferred the first time,
+  * together with the fingerprint it was inferred under —
+  *  - the sorted leaf files under the path as (name, length,
+  *    modificationTime), from one driver-side Hadoop listing (no job);
+  *  - every session conf under `spark.sql.parquet.` and
+  *    `spark.sql.legacy.parquet.`, which change what inference returns
+  *    (`binaryAsString`, the `nanosAsLong` that `eventsRaw` sets, ...).
+  * A read whose fingerprint matches the pin skips inference and reads
+  * with the pinned schema; any other read infers again and replaces the
+  * pin, so there is one pin per path.
+  *
+  * Why a fingerprint and not a static schema per table: the same names
+  * are read from several dataset dirs and generations (the events `ts`
+  * has shipped as two parquet types), and some dirs are rewritten in
+  * place under a live session (Bench's sf1 tier writes
+  * `mode("overwrite")`), so a pin is only valid for the files and confs
+  * it was inferred from. Limit: a rewrite that keeps every file name and
+  * length and lands inside the filesystem's mtime granularity is not
+  * detected. Spark-written files carry a fresh UUID in their names, so
+  * this takes a non-Spark writer reusing the same name and size.
+  *
+  * Pins are per session (a `newSession()` starts empty; its confs may
+  * differ) and the session is held weakly. Inference never runs under a
+  * lock: two cold callers may both infer, and the last one stores.
+  */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class Fingerprint(files: Seq[(String, Long, Long)],
+      confs: Seq[(String, String)])
+  private final case class Pin(fingerprint: Fingerprint, schema: StructType)
+
+  private val pins =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Pin]]()
+
+  private def sessionPins(spark: SparkSession): ConcurrentHashMap[String, Pin] =
+    pins.synchronized {
+      var m = pins.get(spark)
+      if (m == null) { m = new ConcurrentHashMap[String, Pin](); pins.put(spark, m) }
+      m
+    }
+
+  private def fingerprint(spark: SparkSession, path: String): Fingerprint = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: the located statuses listFiles builds
+    // read each local file's permissions, which forks a process per file
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+    val files =
+      try leaves(fs.getFileStatus(p)).map(f =>
+        (f.getPath.toString, f.getLen, f.getModificationTime))
+      catch { case _: FileNotFoundException => Nil }
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    Fingerprint(files.sorted, confs.toSeq.sorted)
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, inferred at most
+    * once per session while the path's files and parquet confs stay the
+    * same. The fingerprint is taken BEFORE inferring: a rewrite racing
+    * the inference then leaves a pin that no longer matches (re-inferred
+    * next time), never a stale schema under a current fingerprint. A
+    * path with no files (missing, or a glob) is never pinned, so its
+    * read fails or resolves as a plain read would.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val m = sessionPins(spark)
+    val fp = fingerprint(spark, path)
+    val hit = m.get(path)
+    if (hit != null && hit.fingerprint == fp) hit.schema
+    else {
+      val schema = spark.read.parquet(path).schema
+      if (fp.files.nonEmpty) m.put(path, Pin(fp, schema))
+      schema
+    }
+  }
+
+  /** The paths pinned in this session, with their schemas. */
+  private[queries] def pinned(spark: SparkSession): Map[String, StructType] =
+    sessionPins(spark).asScala.map { case (k, v) => k -> v.schema }.toMap
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
 
   /** The events fixture has shipped `ts` two ways across testdata
     * generations: parquet TIMESTAMP(NANOS) (read nanos-as-long via the
@@ -24,20 +118,25 @@ object Tables {
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) (reads as TIMESTAMP_NTZ).
     * Branch on the resolved type so both land on the same microsecond
     * TimestampType column; the NTZ cast is value-preserving because the
-    * session timezone is UTC (asserted at session build).
+    * session timezone is UTC (asserted at session build). Shared by the
+    * batch read and the events stream.
     */
-  def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
+  def microsTs(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(spark, dir, "events")
-    raw.schema("ts").dataType match {
+    events.schema("ts").dataType match {
       case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        events.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
+        events.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => events
     }
+  }
+
+  /** The events table, `ts` normalised by `microsTs`. */
+  def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    microsTs(t(spark, dir, "events"))
   }
 
   /** Collision-free key for per-dataset /tmp sink paths and SQL view

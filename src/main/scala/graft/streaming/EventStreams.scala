@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
+
+import graft.queries.Tables
 
 /** Structured Streaming over the `events` table (extension beyond the
   * all-batch reference — SURVEY.md §2.13). Two canonical shapes:
@@ -25,32 +26,20 @@ object EventStreams {
     * file streams).
     */
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    // the fixture has shipped ts as TIMESTAMP(NANOS) (→ long via the
-    // legacy conf) and TIMESTAMP(MICROS, NTZ) across testdata
-    // generations — branch on the resolved batch schema, same as
-    // Tables.eventsRaw (UTC session makes the NTZ cast lossless).
-    // SESSION-WIDE side effect, deliberately not restored: the conf
-    // must hold when the lazy stream actually reads its files, not
-    // just while this builder runs, and the harness sessions
-    // (Bench/Verify/tests) already pin it at build time. A caller
-    // embedding this in a session that batch-reads OTHER nano-
+    // same schema and `ts` normalisation as the batch read
+    // (Tables.eventsRaw). SESSION-WIDE side effect, deliberately not
+    // restored: the conf must hold when the lazy stream actually reads
+    // its files, not just while this builder runs, and the harness
+    // sessions (Bench/Verify/tests) already pin it at build time. A
+    // caller embedding this in a session that batch-reads OTHER nano-
     // timestamp parquet afterward should be aware those columns will
     // surface as LongType too.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema: StructType = spark.read
-      .parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$sfDir/events.parquet")
     // file streams need a directory source; glob-filter to the one table
-    val stream = spark.readStream.schema(schema)
+    Tables.microsTs(spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => stream
-    }
+      .parquet(sfDir))
   }
 
   /** Hourly per-type rollup. Works identically on a static frame (batch
