@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-query stage profiler (dev tool, Tune/JobProbe family): runs the
+/** Per-query stage profiler (dev tool, Tune family): runs the
   * named REGISTERED queries through the Bench protocol (noop sink,
   * min-of-2, cache hygiene between runs) and prints, for the best rep,
   * every stage's wall, task count, shuffle bytes and GC — the

@@ -1,25 +1,40 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
-/** Variant-timing harness for the sf1 heavy-tail dedup queries (dev
-  * tool, like Prof): min-of-2 wall clock + Spark job count per
-  * pipeline, run through count() with Bench-style cache hygiene.
-  * This is the harness behind the round-8 adoptions (no-persist
-  * one-shot minhash, df>=2 prefix pruning, exactly-once simhash
-  * banding); keep it pointed at the CURRENT operators so a regression
-  * in any of them shows up as a delta here before it shows in Bench.
-  * Usage: runMain graft.Tune [sfDir]   (sfDir: Bench's /tmp/graft_sf1)
+/** Tier instrument for the measured dedup defaults: min-of-2 wall
+  * clock, Spark job count, spill, shuffle bytes and GC per cell, run
+  * through count() with Bench-style cache hygiene on prefix-disjoint
+  * documents tiers built from the sf0.1 fixture. Each mode backs one
+  * live numeric default and re-measures it on the production route:
+  *
+  *  - `pv1000`: [[Dedup.VerifyPrefilterDefault]] (16-bit pre-verify
+  *    vs one-phase verify at the 1000× tier);
+  *  - `mhrv10`, `mhrv30`, `mhrv`: [[Dedup.RendezvousMinPairs]] (the
+  *    carry vs rendezvous verify at the 10×, 30×, 100× and 1000×
+  *    tiers, bracketing the crossover);
+  *  - `spillp`: the shuffle-partition guidance in
+  *    `Dedup.verifyRendezvousThresholded` (10M docs, p ∈ {256, 512,
+  *    1024}).
+  *
+  * The modes that measured retired shapes are gone; their numbers and
+  * the commit that last held their code are listed under "Retired
+  * instruments" in SCALE.md.
+  *
+  * Usage: runMain graft.Tune <sf0.1 dir> <mode>
   */
 object Tune {
+  /** The modes [[main]] accepts, in the order documented above. */
+  private val Modes: Seq[String] = Seq("pv1000", "mhrv10", "mhrv30", "mhrv", "spillp")
+
   /** Build (once) a prefix-disjoint ×`copies` documents tier at
     * `dstDir` from `srcDir` — the same construction Bench's sf1 tier
     * uses (token tag c0..c9 / c00..c99 keeps shingle spaces disjoint
     * across copies so per-copy duplicate density scales linearly;
-    * doc_id spaces disjoint by a 10M stride). Lets the sf10/cc modes
-    * run on a fresh host without a prior Bench pass.
+    * doc_id spaces disjoint by a 10M stride). Lets every mode run on a
+    * fresh host without a prior Bench pass.
     */
   private def ensureDocsTier(spark: SparkSession, srcDir: String,
       dstDir: String, copies: Int): Unit = {
@@ -40,44 +55,11 @@ object Tune {
       .write.mode("overwrite").parquet(s"$dstDir/documents.parquet")
   }
 
-  /** ×`copies` embeddings tier: vec_id stride 10M; each copy's FIRST
-    * component is nudged by 1e-5·copy so super-copies never tie in a
-    * top-k window (timing must not hinge on tie-break order — the
-    * nudge only needs DISTINCTNESS per copy, not growth with the copy
-    * index) while sims/cell geometry stay realistic: even at
-    * copies=100 the largest shift is 1e-3 of a unit-scale component
-    * (the previous 1e-3 stride shifted the last copy by 0.099 — ~100×
-    * the realism the tier promises).
-    *
-    * TIER DIRS ARE VERSIONED (r14 ADVICE): the `_SUCCESS` early-return
-    * keeps whatever a previous session built, so a change to THIS
-    * generation recipe silently keeps measuring stale data on hosts
-    * with existing tiers — the stale-representation pitfall. Callers
-    * use `_v2`-suffixed dirs for the 1e-5-stride recipe; bump the
-    * suffix whenever the recipe changes again.
-    */
-  private def ensureEmbTier(spark: SparkSession, srcDir: String,
-      dstDir: String, copies: Int): Unit = {
-    if (new java.io.File(s"$dstDir/embeddings.parquet/_SUCCESS").exists) return
-    require(srcDir.contains("sf0.1"),
-      s"tier builder expects the sf0.1 fixture as source, got $srcDir")
-    println(s"[tune] building $dstDir ($copies copies of $srcDir embeddings)")
-    val e = spark.read.parquet(s"$srcDir/embeddings.parquet")
-    (0 until copies).map { c =>
-      e.withColumn("vec_id", col("vec_id") + lit(c * 10000000L))
-        .withColumn("embedding", transform(col("embedding"),
-          (x, i) => when(i === 0, (x + lit((c * 1e-5).toFloat)).cast("float"))
-            .otherwise(x)))
-    }.reduce(_.unionByName(_))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dstDir/embeddings.parquet")
-  }
-
   /** The 1000×-documents tier (5M docs): 10 super-copies of the 100×
     * tier, d0..d9 token tags keep shingle spaces disjoint across
     * super-copies (duplicate density — hence the true answer — stays
-    * linear), doc_id stride 1e9. Shared by the sf100 table and the
-    * ss1000 adjudication probe.
+    * linear), doc_id stride 1e9. Shared by the pv1000 and mhrv cells
+    * and, through [[ensureTier4000]], the spillp sweep.
     */
   private def ensureTier1000(spark: SparkSession): Unit = {
     val t1000 = "/tmp/graft_sf100"
@@ -97,9 +79,8 @@ object Tune {
   /** The 20M-doc tier (4 super-copies of the 1000× tier): tag e0..e3
     * keeps shingle spaces disjoint across super-copies (duplicate
     * density — the true answer — stays linear); doc_id stride 1e10
-    * (sf100 ids < 1e10). Shared by the sf1000 fourth-decade cells and
-    * the spillp partition sweep (its first 2 super-copies = 10M docs).
-    * Returns the tier dir.
+    * (sf100 ids < 1e10). The spillp partition sweep reads its first 2
+    * super-copies (10M docs). Returns the tier dir.
     */
   private def ensureTier4000(spark: SparkSession): String = {
     val t4 = "/tmp/graft_sf1000"
@@ -119,7 +100,14 @@ object Tune {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
+    // arguments are checked before any session exists: a typo must not
+    // cost a JVM's worth of Spark start-up, let alone run a tier build
+    val usage = s"usage: Tune <sf0.1 dir> <mode>, mode one of ${Modes.mkString(", ")}"
+    val mode = args.lift(1).getOrElse(
+      throw new IllegalArgumentException(s"missing mode; $usage"))
+    if (!Modes.contains(mode))
+      throw new IllegalArgumentException(s"unknown mode '$mode'; $usage")
+    val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -136,8 +124,8 @@ object Tune {
     val shWrite = new java.util.concurrent.atomic.AtomicLong(0L)
     val shRead = new java.util.concurrent.atomic.AtomicLong(0L)
     val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-stage attribution buffer (mhdiag prints it): which exchange
-    // owns the bytes, by stage id/name/tasks
+    // per-stage attribution buffer (dumpStages prints it): which
+    // exchange owns the bytes, by stage id/name/tasks
     val REP_MARK = "__rep_boundary__"
     val stageLog = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, Long, Long, Int)]
@@ -165,47 +153,24 @@ object Tune {
           }
         }
       })
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-
-    // optional third arg: case-insensitive substring filter on the
-    // experiment name, so one A/B pair can be iterated on without
-    // paying for the whole suite (runMain graft.Tune DIR ab fuzzy)
-    val nameFilter = args.drop(2).headOption.map(_.toLowerCase)
-    // the sf10/p100/ngvar modes AGGREGATE time() returns into scaling
-    // tables; a filter arg there would silently fold skipped runs'
-    // sentinel into the table (min(MaxValue, 0.0) = 0.0 looked like a
-    // real cell). Skipped runs return NaN (poisons any aggregate
-    // loudly), and the table modes reject a filter arg outright.
-    val mode = args.drop(1).headOption
-    if (mode.exists(Set("sf10", "p100", "ngvar").contains))
-      require(nameFilter.isEmpty,
-        s"Tune ${mode.get} builds aggregate tables from every " +
-          "experiment; a name filter would corrupt the table — drop " +
-          s"the '${nameFilter.get}' argument")
     // heap is a PER-INSTRUMENT env pin (r15 VERDICT task 7 / SCALE.md
     // r15): 96g (+AlwaysPreTouch) helps allocation-heavy sf1-tier
     // bench arms but STARVES the page cache that the doc-tier cells'
     // 26 GB+ shuffles need — identical code measured 321-389 s at 96g
     // vs 165-232 s at 32g. Committed doc-tier SCALE numbers are 32g
-    // numbers; warn loudly when a tier class runs at the other env so
-    // a session can't silently produce incomparable cells. (Bench owns
-    // the opposite pin: it warns when the sf1 subset runs BELOW 60 GB.)
+    // numbers, and every mode here runs doc-tier cells; warn loudly at
+    // the other env so a session can't silently produce incomparable
+    // cells. (Bench owns the opposite pin: it warns when the sf1
+    // subset runs BELOW 60 GB.)
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
-    val docTierModes = Set("sf10", "sf100", "sf1000", "mhrv", "mhrv10",
-      "mhrv30", "mh1000", "mhrvd", "mhdiag", "mhbytes", "mhp", "mhagg",
-      "mhwarm", "ss1000", "p100", "ng100", "paranl", "para", "paraskew",
-      "pv1000", "spillp", "admgrow", "annt", "annt5m", "cc", "repr",
-      "fuzzyxo", "fuzzyxo2")
-    if (mode.exists(docTierModes.contains) && heapGb > 64)
-      println(f"[tune] WARNING: mode '${mode.get}' runs doc-tier cells — " +
+    if (heapGb > 64)
+      println(f"[tune] WARNING: mode '$mode' runs doc-tier cells — " +
         f"32g instruments — on a $heapGb%.0f GB heap. Large heaps " +
         "starve the page cache big shuffles need (SCALE.md r15: " +
         "321-389 s at 96g vs 165-232 s at 32g, identical code); this " +
         "session's cells are NOT comparable to committed doc-tier " +
         "numbers. Re-run without SPARK_DRIVER_MEM=96g.")
     def time(name: String)(f: => DataFrame): Double = {
-      if (nameFilter.exists(s => !name.toLowerCase.contains(s)))
-        return Double.NaN
       val ts = (1 to 2).map { _ =>
         graft.ops.StageCache.releaseAll()
         spark.catalog.clearCache()
@@ -237,18 +202,17 @@ object Tune {
       best._1
     }
 
-    // Per-execution stage attribution over the listener log (shared by
-    // the mhdiag/mhrv dumps). Spark SQL stage names are the action
-    // call site (e.g. "count at Tune.scala:161"), so distinct stages
-    // within ONE execution commonly share a name — grouping by name
-    // alone collapses them to a single max row and under-reports the
-    // execution's shuffle. The log is instead split at the rep
-    // sentinels time() appends, each stage gets an occurrence index
-    // within its rep (stages of one rep are logged in stage-id order,
-    // and a given logical exchange keeps its position across reps),
-    // and the report is the per-(name, occurrence) max across reps —
-    // reconciling against the cell's printed shW (a single-execution
-    // number), not 2× it.
+    // Per-execution stage attribution over the listener log. Spark SQL
+    // stage names are the action call site (e.g. "count at
+    // Tune.scala:161"), so distinct stages within ONE execution
+    // commonly share a name — grouping by name alone collapses them to
+    // a single max row and under-reports the execution's shuffle. The
+    // log is instead split at the rep sentinels time() appends, each
+    // stage gets an occurrence index within its rep (stages of one rep
+    // are logged in stage-id order, and a given logical exchange keeps
+    // its position across reps), and the report is the per-(name,
+    // occurrence) max across reps — reconciling against the cell's
+    // printed shW (a single-execution number), not 2× it.
     def dumpStages(tag: String): Unit = stageLog.synchronized {
       println(s"[tune] -- stages >100MB for $tag (per execution; " +
         "max across the timed reps) --")
@@ -286,1728 +250,141 @@ object Tune {
       stageLog.clear()
     }
 
-    // ---- paragraph-dedup tier cells (r13): three decades for the
-    // CCNet paragraph keep-first pipeline in one run. count() on the
-    // operator's bare output lets Catalyst eliminate the unique-key
-    // LEFT join and prune the whole dedup subtree (the first sf10
-    // para cells read 0.1 s / 0 shuffle MB that way) — the timed plan
-    // filters on kept_md5 so every stage must execute. Partitions
-    // scale with the tier for the same reason as sf100's loop.
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 para
-    if (args.drop(1).headOption.contains("para")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val tiers = Seq(("para @10x", "/tmp/graft_sf1", "32"),
-        ("para @100x", "/tmp/graft_sf10", "32"),
-        ("para @1000x", "/tmp/graft_sf100", "128"))
-      val best = Array.fill(tiers.size)(Double.MaxValue)
-      for (rep <- 1 to 2; i <- tiers.indices) {
-        val (name, dir, p) = tiers(i)
-        spark.conf.set("spark.sql.shuffle.partitions", p)
-        val d = spark.read.parquet(s"$dir/documents.parquet")
-        val t = time(f"$name%s r$rep")(
-          Dedup.paragraphDedup(d, "doc_id", "text", 20)
-            .where(col("kept_md5") =!= lit("")))
-        if (!t.isNaN) best(i) = math.min(best(i), t)
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      println("[tune] ---- para_dedup scaling (alpha = log10 t-ratio; 1.0 = linear) ----")
-      for (i <- 1 until tiers.size) {
-        val (a, b) = (best(i - 1), best(i))
-        if (a != Double.MaxValue && b != Double.MaxValue && a > 0) {
-          val alpha = math.log(b / a) / math.log(10.0)
-          val flag = if (alpha > 1.02) "  ** SUPERLINEAR **" else ""
-          println(f"[tune] ${tiers(i - 1)._1}%s -> ${tiers(i)._1}%s: " +
-            f"${a}%7.2f s -> ${b}%8.2f s   alpha $alpha%5.2f$flag")
-        }
-      }
-      spark.stop(); return
+    // The production minhash pipeline pinned to one side of the
+    // RendezvousMinPairs gate: Long.MaxValue keeps every candidate set
+    // below it (the carry verify, after the gate's persist + count),
+    // 0 keeps every set above it (the rendezvous verify with the
+    // default pre-verify). The gate conf is read when the plan is
+    // built, which time() does inside the timed window — so each cell
+    // pays exactly what the gate's chosen route pays in production.
+    def minhashOnRoute(d: DataFrame, gate: Long): DataFrame = {
+      spark.conf.set(Dedup.RendezvousMinPairsConfKey, gate.toString)
+      try Dedup.minhashPairs(d, "doc_id", "text", 2, 16, 8, 0.1)
+      finally spark.conf.unset(Dedup.RendezvousMinPairsConfKey)
     }
+    val carryRoute = Long.MaxValue
+    val rendezvousRoute = 0L
 
-    // ---- paragraph-dedup SKEW A/B (r13): the probe that DECIDED the
-    // production winner formulation. The initial design assumed a
-    // row_number window sorts every hot-digest copy in one task and
-    // shipped the map-combinable min(struct)+join-back instead; this
-    // A/B measured the window FASTER on both corpora and the plan
-    // audit showed why — WindowGroupLimit (Spark 3.5+) collapses the
-    // rn==1 winner map-side, so the window is skew-safe too and saves
-    // the join-back's text exchange. Production is now the window;
-    // the agg+join twin stays as the portable pre-3.5 shape. Corpora
-    // at the 100× tier (500k docs): NATURAL and SKEWED (a constant
-    // 20-token boilerplate paragraph prepended to every 3rd doc → one
-    // digest with ~167k copies). Interleaved arms, outputs pinned
-    // equal in DedupSpec.
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 paraskew
-    if (args.drop(1).headOption.contains("paraskew")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      val d = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      val boiler = (1 to 20).map(i => s"boilertok$i").mkString(" ")
-      val skewed = d.withColumn("text",
-        when(col("doc_id") % 3 === 0,
-          concat_ws(" ", lit(boiler), col("text"))).otherwise(col("text")))
-        .localCheckpoint(true)
-      val corpora = Seq(("natural", d), ("skewed", skewed))
-      val arms: Seq[(String, DataFrame => DataFrame)] = Seq(
-        ("agg+join", dd =>
-          Dedup.paragraphDedupAggJoin(dd, "doc_id", "text", 20)
-            .where(col("kept_md5") =!= lit(""))),
-        ("window", dd => Dedup.paragraphDedup(dd, "doc_id", "text", 20)
-          .where(col("kept_md5") =!= lit(""))))
-      // plan-shape audit: WindowGroupLimit firing is the premise of
-      // the production choice — if an engine version ever stops
-      // rewriting rn==1, this line flags that the portable agg+join
-      // twin should take over
-      println("[tune] window plan: " +
-        (if (arms(1)._2(d).queryExecution.executedPlan.toString
-             .contains("WindowGroupLimit")) "WindowGroupLimit FIRES"
-         else "no WindowGroupLimit (full sort per dig partition) — " +
-           "prefer paragraphDedupAggJoin on this engine"))
-      for (rep <- 1 to 2; (cname, dd) <- corpora; (aname, mk) <- arms)
-        time(f"para $aname%-8s $cname%-7s r$rep")(mk(dd))
-      spark.stop(); return
-    }
-
-    // ---- fuzzy-decontamination crossover sweep (r13): the broadcast
-    // guard's 100k-doc default sits between a measured-good 50k and a
-    // measured-superlinear 500k — this sweep measures BOTH plans at
-    // index sizes bracketing the cap, so the cap itself becomes a
-    // measurement instead of an interpolation. Fixed ~1M-doc corpus
-    // slice of the 1000× tier; index slices are id-disjoint
-    // deterministic subsamples of a second slice. Broadcast arm forces
-    // its plan with maxIndexDocs=0; incremental arm calls the fallback
-    // shape directly. Usage: runMain graft.Tune /root/testdata/sf0.1 fuzzyxo
-    if (args.drop(1).headOption.contains("fuzzyxo")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      val corpus = d.filter(col("doc_id") % 5 === 0)
-      val idxPool = d.filter(col("doc_id") % 5 === 1)
-      val sizes = Seq(50000, 100000, 200000, 400000)
-      for (rep <- 1 to 2; nIdx <- sizes) {
-        val bench = idxPool.filter(
-          pmod(xxhash64(col("doc_id")), lit(1000000L)) < nIdx)
-        val iv = Dedup.minhashIndexView(bench, "doc_id", "text")
-        time(f"bcast idx=${nIdx / 1000}%3dk r$rep")(
-          Dedup.minhashPairsBroadcastIndex(iv, corpus, "doc_id", "text",
-            threshold = 0.1, maxIndexDocs = 0))
-        time(f"incr  idx=${nIdx / 1000}%3dk r$rep")(
-          Dedup.incrementalMinhashPairsFromIndex(iv,
-            Dedup.minhashIndexView(corpus, "doc_id", "text"), 0.1))
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- DELTA-shape verify A/B (r14): mhrv bracketed the crossover
-    // for the SELF-join shape only; the incremental probe (delta vs
-    // corpus — also the fuzzy-decon fallback and the admission probe)
-    // has different geometry (asymmetric sides, two group maps), and
-    // the fuzzyxo2 gateB cells read its rendezvous form slower than
-    // r13's carry at the same bracket. Two geometries, interleaved:
-    // B = [4.5M corpus probing a 500k index]; C = the mh1000 split
-    // (2.5M delta vs 2.5M corpus).
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 mhrvd
-    if (args.drop(1).headOption.contains("mhrvd")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      val geoms = Seq(
-        ("B 4.5Mx500k", () => (d.filter(col("doc_id") % 10 =!= 0),
-          d.filter(col("doc_id") % 10 === 0)),
-          32),
-        ("C 2.5Mx2.5M", () => (d.filter(col("doc_id") % 2 === 1),
-          d.filter(col("doc_id") % 2 === 0)),
-          128))
-      for (block <- 1 to 2; (gname, mk, p) <- geoms) {
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-        val (delta, corpus) = mk()
-        def dIdx = Dedup.minhashIndexView(delta, "doc_id", "text")
-        def cIdx = Dedup.minhashIndexView(corpus, "doc_id", "text")
-        time(f"incr carry $gname b$block") {
-          Dedup.verifyCarry(Dedup.deltaCollisions(cIdx, dIdx),
-            dIdx.shingles, cIdx.shingles)
-            .filter(col("jaccard") >= 0.1)
-        }
-        time(f"incr rv    $gname b$block") {
-          Dedup.verifyRendezvous(Dedup.deltaCollisions(cIdx, dIdx),
-            dIdx.shingles, cIdx.shingles, minPairs = 0L)
-            .filter(col("jaccard") >= 0.1)
-        }
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- two-sided broadcast-probe gate re-sweep (r14, cell comments
-    // refreshed r15 after commit de266ac retired the product-gate
-    // default): the PRODUCTION gate is now the absolute 2M-doc
-    // broadcast-size bound alone (maxProductDocs defaults to 0 = off),
-    // so the gate picks BROADCAST at both brackets — no fallback line
-    // anywhere. Each bracket keeps a real interleaved A/B reference by
-    // FORCING the not-picked plan (the incremental fallback) — done =
-    // the gate's broadcast choice is the measured winner at BOTH
-    // brackets (r14 measured: A 13.8/28.2 vs 25.4/49.4 s; B 39.2/44.5
-    // vs 82.3/112.9 s).
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 fuzzyxo2
-    if (args.drop(1).headOption.contains("fuzzyxo2")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      // bracket A: [1M corpus × 400k index] — index < 2M → gate
-      // broadcasts (no fallback line)
-      val corpusA = d.filter(col("doc_id") % 5 === 0)
-      def benchA = d.filter(col("doc_id") % 5 === 1)
-        .filter(pmod(xxhash64(col("doc_id")), lit(1000000L)) < 400000)
-      // bracket B: [4.5M corpus × 500k index] — the r12 string-era
-      // "interaction wall" bracket; index still < 2M → gate broadcasts
-      // here too (no fallback line), and the forced-incremental ref
-      // checks the r14 re-adjudication still holds on current code
-      val corpusB = d.filter(col("doc_id") % 10 =!= 0)
-      def benchB = d.filter(col("doc_id") % 10 === 0)
-      for (rep <- 1 to 2) {
-        time(f"gateA [1M x 400k] r$rep")(
-          Dedup.minhashPairsBroadcastIndex(
-            Dedup.minhashIndexView(benchA, "doc_id", "text"), corpusA,
-            "doc_id", "text", threshold = 0.1))
-        time(f"refA  incr forced r$rep")(
-          Dedup.incrementalMinhashPairsFromIndex(
-            Dedup.minhashIndexView(benchA, "doc_id", "text"),
-            Dedup.minhashIndexView(corpusA, "doc_id", "text"), 0.1))
-        time(f"gateB [4.5M x 500k] r$rep")(
-          Dedup.minhashPairsBroadcastIndex(
-            Dedup.minhashIndexView(benchB, "doc_id", "text"), corpusB,
-            "doc_id", "text", threshold = 0.1))
-        time(f"refB  incr forced r$rep")(
-          Dedup.incrementalMinhashPairsFromIndex(
-            Dedup.minhashIndexView(benchB, "doc_id", "text"),
-            Dedup.minhashIndexView(corpusB, "doc_id", "text"), 0.1))
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- ANN probe tiers (r13): fixed 100-query probe set against a
-    // growing corpus (1×/10×/100× embeddings = ~5k/50k/500k vecs).
-    // Expectation: BOTH search paths are Θ(N) at a fixed pivot count —
-    // the cells pin the constants (brute = Q×N sims behind the
-    // broadcast nested loop; IVF = N×P assignment + Q×N×nprobe/P probe
-    // arithmetic) and that neither spills nor goes superlinear. The
-    // rank<=k filter forces the windowed sims, so count() cannot prune
-    // the search (unlike the para_dedup left-join lesson above).
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 annt
-    if (args.drop(1).headOption.contains("annt")) {
-      import graft.similarity.Ann
-      ensureEmbTier(spark, sfDir, "/tmp/graft_emb10_v2", 10)
-      ensureEmbTier(spark, sfDir, "/tmp/graft_emb100_v2", 100)
-      val q0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .orderBy("vec_id").limit(100).select("vec_id", "embedding")
-        .localCheckpoint(true)
-      val tiers = Seq(("@1x", s"$sfDir"), ("@10x", "/tmp/graft_emb10_v2"),
-        ("@100x", "/tmp/graft_emb100_v2"))
-      val arms: Seq[(String, DataFrame => DataFrame)] = Seq(
-        ("ann_brute", c => Ann.bruteForceTopK(q0, c, 10, excludeSelf = false)),
-        ("ann_ivf", c =>
-          Ann.ivfTopK(q0, c, 10, nPivots = 16, excludeSelf = false)))
-      val best = Array.fill(arms.size, tiers.size)(Double.MaxValue)
-      for (rep <- 1 to 2; ti <- tiers.indices; ai <- arms.indices) {
-        val (tname, dir) = tiers(ti); val (aname, mk) = arms(ai)
-        val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
-        val t = time(f"$aname%s $tname%s r$rep")(mk(corpus))
-        if (!t.isNaN) best(ai)(ti) = math.min(best(ai)(ti), t)
-      }
-      println("[tune] ---- ANN corpus scaling (alpha = log10 t-ratio; 1.0 = linear) ----")
-      for (ai <- arms.indices; ti <- 1 until tiers.size) {
-        val (a, b) = (best(ai)(ti - 1), best(ai)(ti))
-        if (a != Double.MaxValue && b != Double.MaxValue && a > 0) {
-          val alpha = math.log(b / a) / math.log(10.0)
-          val flag = if (alpha > 1.02) "  ** SUPERLINEAR **" else ""
-          println(f"[tune] ${arms(ai)._1}%s ${tiers(ti - 1)._1}%s -> ${tiers(ti)._1}%s: " +
-            f"${a}%7.2f s -> ${b}%8.2f s   alpha $alpha%5.2f$flag")
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- ANN 5M-vector tier (r15, verdict task 6): the annt evidence
-    // stops at the 100× tier; this extends the IVF search and the
-    // incremental-IVF maintenance probe to a 5M-vector corpus (25
-    // super-copies of the 100× tier — the largest round-number tier
-    // that keeps the whole corpus + cells comfortably in memory at
-    // local[32]/96g). Fixed 100-query probe set, nPivots=16 — the same
-    // geometry as annt, so the 200k cell here is the bridge to the
-    // annt table. Expectation stays Θ(N): assignment is N×P map-side
-    // arithmetic, the probe is Q×N/P sims behind the rank window.
-    // alpha is per-decade (log10 of the t-ratio / log10 25).
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 annt5m
-    if (args.drop(1).headOption.contains("annt5m")) {
-      import graft.similarity.Ann
-      ensureEmbTier(spark, sfDir, "/tmp/graft_emb100_v2", 100)
-      val emb5m = "/tmp/graft_emb5m_v2"
-      if (!new java.io.File(s"$emb5m/embeddings.parquet/_SUCCESS").exists) {
-        println(s"[tune] building $emb5m (25 super-copies of /tmp/graft_emb100_v2)")
-        val e = spark.read.parquet("/tmp/graft_emb100_v2/embeddings.parquet")
-        // vec_id stride 1e9 (inner tier ids < 1e9); first-component
-        // nudge j·1e-3 — combined with the inner tier's c·1e-5 the
-        // total shift (100j+c)·1e-5 is unique per (super, inner) copy,
-        // so top-k ties never decide a timing, max shift 0.024
-        (0 until 25).map { j =>
-          e.withColumn("vec_id", col("vec_id") + lit(j * 1000000000L))
-            .withColumn("embedding", transform(col("embedding"),
-              (x, i) => when(i === 0, (x + lit((j * 1e-3).toFloat)).cast("float"))
-                .otherwise(x)))
-        }.reduce(_.unionByName(_))
-          .repartition(64)
-          .write.mode("overwrite").parquet(s"$emb5m/embeddings.parquet")
-      }
-      val q0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .orderBy("vec_id").limit(100).select("vec_id", "embedding")
-        .localCheckpoint(true)
-      val tiers = Seq(("@200k", "/tmp/graft_emb100_v2", "32"),
-        ("@5M", emb5m, "128"))
-      val arms: Seq[(String, DataFrame => DataFrame)] = Seq(
-        ("ivf", c => Ann.ivfTopK(q0, c, 10, nPivots = 16,
-          excludeSelf = false)),
-        // incremental maintenance: the even half owns pivots + cell
-        // index, the odd half is the day-2 delta assigned map-side
-        ("ivf_inc", c => Ann.ivfTopKIncremental(q0,
-          c.filter(col("vec_id") % 2 === 0),
-          c.filter(col("vec_id") % 2 === 1), 10, 16,
-          excludeSelf = false)),
-        // r16 task 5: the LSH family had no >=5M-vector evidence —
-        // same geometry as q_ann_lsh/q_ann_lsh2 (8 hyperplanes,
-        // single- and multi-probe)
-        ("lsh", c => Ann.lshTopK(q0, c, 10, nBits = 8, nprobe = 1,
-          excludeSelf = false)),
-        ("lsh2", c => Ann.lshTopK(q0, c, 10, nBits = 8, nprobe = 2,
-          excludeSelf = false)))
-      val best = Array.fill(arms.size, tiers.size)(Double.MaxValue)
-      for (rep <- 1 to 2; ti <- tiers.indices; ai <- arms.indices) {
-        val (tname, dir, p) = tiers(ti); val (aname, mk) = arms(ai)
-        spark.conf.set("spark.sql.shuffle.partitions", p)
-        val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
-        val t = time(f"$aname%-7s $tname%s r$rep")(mk(corpus))
-        if (!t.isNaN) best(ai)(ti) = math.min(best(ai)(ti), t)
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      println("[tune] ---- ANN 200k -> 5M scaling (alpha per decade; 1.0 = linear) ----")
-      for (ai <- arms.indices) {
-        val (a, b) = (best(ai)(0), best(ai)(1))
-        if (a != Double.MaxValue && b != Double.MaxValue && a > 0) {
-          val alpha = math.log(b / a) / math.log(25.0)
-          val flag = if (alpha > 1.02) "  ** SUPERLINEAR **" else ""
-          println(f"[tune] ${arms(ai)._1}%-7s ${a}%7.2f s -> ${b}%8.2f s   " +
-            f"alpha $alpha%5.2f$flag")
-        }
-      }
-      // r16 task 5: recall@5 AT the 5M tier (the recall evidence
-      // previously stopped at the sf0.01 oracle fixtures). Exact brute
-      // top-5 over all 5M vectors is the ground truth; recall = shared
-      // (qid, nid) rows / (|queries| × 5), in basis points like the
-      // q_ann_recall report.
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      val c5m = spark.read.parquet(s"$emb5m/embeddings.parquet")
-      val brute = Ann.bruteForceTopK(q0, c5m, 5, excludeSelf = false)
-        .select("qid", "nid").localCheckpoint(true)
-      val denom = brute.count()
-      def recallBp(name: String, got: DataFrame): Unit = {
-        val hits = brute.intersect(got.select("qid", "nid")).count()
-        println(f"[tune] recall@5 @5M $name%-12s ${hits * 10000 / denom}%5d bp " +
-          f"($hits%d/$denom%d)")
-      }
-      recallBp("ivf", Ann.ivfTopK(q0, c5m, 5, nPivots = 16,
-        excludeSelf = false))
-      recallBp("lsh np=1", Ann.lshTopK(q0, c5m, 5, nBits = 8, nprobe = 1,
-        excludeSelf = false))
-      recallBp("lsh np=2", Ann.lshTopK(q0, c5m, 5, nBits = 8, nprobe = 2,
-        excludeSelf = false))
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- fourth-decade spot-cells for the flagship dedup arms (r15,
-    // verdict task 4): the scale story rests on 1×/10×/100×/1000× (5M
-    // docs); these cells push cluster_star to 20M docs (4 super-copies
-    // of the 1000× tier) and minhash_fast to 10M (the first 2 of those
-    // copies — its verify exchanges ~26 GB/5M docs and shuffle files
-    // live until the action completes, so 20M would need ~104 GB of
-    // /tmp headroom this 79 GB-free sandbox does not have; the 10M
-    // bound is recorded as the infeasibility line for 20M). Both run
-    // against an in-session 1000× reference cell so the ratio is not
-    // cross-session. A daemon samples /tmp free space so peak-disk
-    // rides the result line; per-cell gc/shW columns come from time().
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 sf1000 [filter]
-    // ---- truncated-hash pre-verify A/B at the 1000× tier (r16 task
-    // 1): one-phase rendezvous verify (spark.graft.verifyPrefilter=
-    // false) vs the two-phase truncated pre-verify (=true), interleaved
-    // in one JVM on the production minhash pipeline. The contested
-    // term is the verify exchange's bytes (~26 GB per 5M docs, the
-    // r15 disk wall): phase 1 ships high-32-bit ints (half the bytes),
-    // phase 2 re-ships full arrays only for pairs whose truncated
-    // Jaccard upper bound clears the threshold. Survivor share =
-    // result rows / candidate pairs (the r14 mhrv candidate counts),
-    // so the expected byte ratio is ~(0.5 + s) : 1. shW/shR per cell
-    // come from time(); dumpStages attributes which exchange moved.
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 pv1000
-    if (args.drop(1).headOption.contains("pv1000")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      for (block <- 1 to 2) {
-        for ((label, pf) <- Seq(("1phase", "off"), ("2ph32", "32"),
-            ("2ph16", "16"))) {
-          stageLog.synchronized(stageLog.clear())
-          spark.conf.set(graft.dedup.Dedup.VerifyPrefilterConfKey, pf)
-          time(f"mh $label%s @1000x b$block") {
-            Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1)
-          }
-          dumpStages(s"$label b$block")
-        }
-      }
-      spark.conf.unset(graft.dedup.Dedup.VerifyPrefilterConfKey)
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- delta+varint encoding adjudication (r16 task 1, option a):
-    // measures what delta+varint-encoding the sorted xxhash64 shingle
-    // arrays would actually save. Expectation from first principles:
-    // the hashes are uniform over 2^64, so a sorted m-element set has
-    // mean gap 2^64/m (~2^57 for m≈100) — the set's entropy is
-    // ~m·(64 − log2 m + 1.44) bits, i.e. the raw 8 B/elem encoding is
-    // already within ~10% of optimal, and 7-bit varints of ~57-bit
-    // deltas need 9 B/elem: EXPANSION. This instrument computes the
-    // exact encoded size (zigzag varint for the first value, unsigned
-    // varints of the wrapped deltas) over the real shingle sets so the
-    // adjudication is measured, not argued. The encoder is a Scala UDF
-    // by design — it is a measuring instrument, never a query path.
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 vbytes
-    if (args.drop(1).headOption.contains("vbytes")) {
-      def varintLen(v: Long): Int = { // unsigned LEB128 length
-        var x = v; var n = 1
-        while ((x >>> 7) != 0) { x = x >>> 7; n += 1 }
-        n
-      }
-      val encBytes = udf((xs: Seq[Long]) => {
-        if (xs.isEmpty) 1L // just the count byte
-        else {
-          val first = xs.head
-          val zz = (first << 1) ^ (first >> 63) // zigzag
-          var total = varintLen(xs.size.toLong) + varintLen(zz).toLong
-          var i = 1
-          while (i < xs.size) {
-            total += varintLen(xs(i) - xs(i - 1)) // wrapped = unsigned delta
-            i += 1
-          }
-          total
-        }
-      })
-      val sh = docs.select(
-        Dedup.hashShingles(Dedup.shingles(col("text"), 2)).as("sh"))
-      val r = sh.agg(
-        sum(size(col("sh")).cast("long") * 8L).as("raw_bytes"),
-        sum(encBytes(col("sh"))).as("varint_bytes"),
-        sum(size(col("sh")).cast("long")).as("elems"),
-        count(lit(1)).as("docs"),
-        avg(size(col("sh"))).as("avg_m")).collect()(0)
-      val (raw, enc, elems) =
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      val avgM = r.getDouble(4)
-      val entropyB = (64.0 - math.log(avgM) / math.log(2.0) + 1.44) / 8.0
-      println(f"[tune] vbytes over ${r.getLong(3)} docs (avg m=$avgM%.1f): " +
-        f"raw ${raw / 1048576.0}%.1f MB (8.00 B/elem) vs delta+varint " +
-        f"${enc / 1048576.0}%.1f MB (${enc.toDouble / elems}%.2f B/elem); " +
-        f"set-entropy floor ≈ $entropyB%.2f B/elem")
-      println(if (enc >= raw)
-        "[tune] vbytes verdict: delta+varint EXPANDS the payload — encoding does not pay"
-      else f"[tune] vbytes verdict: delta+varint saves ${(raw - enc) * 100.0 / raw}%.1f%%")
-      spark.stop(); return
-    }
-
-    // ---- verify-stage shuffle-partition sweep at the 10M-doc tier
-    // (r16 task 2): the r15 fourth-decade cell measured 91.4 GB of
-    // spill at 10M docs / p=256 (2.05× the 5M tier's bytes but 44× its
-    // spill) — per-partition verify payload outgrew the execution
-    // memory per slot. The initial shuffle-partition count is the
-    // per-partition memory cap (AQE coalesces down, never up), so this
-    // sweeps p ∈ {256, 512, 1024} on the production minhash pipeline
-    // at 10M docs, one rep per p (the wall is disk/spill, not JIT —
-    // and a 2-rep sweep would double an ~hour of runtime for noise
-    // this instrument doesn't need). Usage: ... spillp
-    if (args.drop(1).headOption.contains("spillp")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val t4 = ensureTier4000(spark)
-      val d2000 = spark.read.parquet(s"$t4/documents.parquet")
-        .filter(col("doc_id") < 20000000000L) // first 2 super-copies = 10M
-      def freeGb: Double = new java.io.File("/tmp").getUsableSpace / 1e9
-      for (p <- Seq(256, 512, 1024)) {
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-        println(f"[tune] /tmp free before p=$p: $freeGb%.1f GB")
-        val t0 = System.nanoTime()
-        val s0 = spill.get(); val (w0, r0, g0) =
-          (shWrite.get(), shRead.get(), gcMs.get())
-        try {
-          val n = Dedup.minhashPairs(d2000, "doc_id", "text", 2, 16, 8, 0.1)
-            .count()
-          val t = (System.nanoTime() - t0) / 1e9
-          println(f"[tune] minhash_fast @10M p=$p%-5d ${t}%7.2f s  " +
-            f"$n%9d rows  spill ${(spill.get() - s0) / 1048576}%6d MB  " +
-            f"shW ${(shWrite.get() - w0) / 1048576}%6d MB  " +
-            f"shR ${(shRead.get() - r0) / 1048576}%6d MB  " +
-            f"gc ${(gcMs.get() - g0) / 1000.0}%6.1f s")
-        } catch {
-          case e: Exception =>
-            println(s"[tune] @10M p=$p FAILED: ${e.getMessage.take(200)}")
-        }
-        graft.ops.StageCache.releaseAll()
-        spark.catalog.clearCache()
-        System.gc()
-        println(f"[tune] /tmp free after  p=$p: $freeGb%.1f GB")
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- q_ngram_prefix variance attribution (r16 task 6; open since
-    // r10): the arm shows one-rep outliers (16 s against a 5-7 s min
-    // in the r15 protocol validation) with no named mechanism. This
-    // runs the REGISTERED query (same plan as the bench arm) at the
-    // 10× tier for 8 visible reps — no min-of-2 masking — printing
-    // per-rep wall/jobs/spill/shW/gc and, for any rep ≥1.5× the
-    // session median, that rep's per-stage task counts and bytes (an
-    // AQE skew-split or replan shows as a task-count delta; a GC/host
-    // stall shows as same-tasks-slower; pair with
-    // SPARK_GRAFT_JVM_OPTS="-Xlog:gc*=info:file=/tmp/gc_ngp.log" to
-    // split those). Usage: runMain graft.Tune /root/testdata/sf0.1 ngp10
-    if (args.drop(1).headOption.contains("ngp10")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      val reps = 8
-      val walls = new Array[Double](reps)
-      val repStages = new Array[Seq[(Int, String, Long, Long, Int)]](reps)
-      for (i <- 0 until reps) {
-        graft.ops.StageCache.releaseAll()
-        spark.catalog.clearCache()
-        System.gc()
-        stageLog.synchronized(stageLog.clear())
-        val j0 = jobs.get()
-        val s0 = spill.get(); val (w0, g0) = (shWrite.get(), gcMs.get())
-        val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries("q_ngram_prefix")(
-          spark, "/tmp/graft_sf1").count()
-        walls(i) = (System.nanoTime() - t0) / 1e9
-        val j = ListenerSettle.settled(jobs) - j0
-        println(f"[tune] ngram_prefix rep$i ${walls(i)}%6.2f s  $j%3d jobs  " +
-          f"$n%8d rows  spill ${(spill.get() - s0) / 1048576}%5d MB  " +
-          f"shW ${(shWrite.get() - w0) / 1048576}%5d MB  " +
-          f"gc ${(gcMs.get() - g0) / 1000.0}%5.1f s")
-        repStages(i) = stageLog.synchronized(stageLog.filter(_._2 != REP_MARK).toList)
-      }
-      val med = walls.sorted.apply(reps / 2)
-      for (i <- 0 until reps if walls(i) >= 1.5 * med) {
-        println(f"[tune] -- outlier rep$i (${walls(i)}%.2f s vs median $med%.2f): " +
-          "stages (id, tasks, shW MB, shR MB) --")
-        repStages(i).sortBy(_._1).foreach { s =>
-          println(f"[tune]   stage ${s._1}%5d  tasks ${s._5}%4d  " +
-            f"shW ${s._3 / 1048576}%5d  shR ${s._4 / 1048576}%5d  ${s._2}%s")
-        }
-        // task-count histogram vs the median-wall rep: a skew-split /
-        // replan difference shows here even when stage ids shift
-        val mi = walls.indexOf(med)
-        val tcount = (st: Seq[(Int, String, Long, Long, Int)]) =>
-          st.map(_._5).sorted.mkString(",")
-        println(s"[tune]   outlier task counts: ${tcount(repStages(i))}")
-        println(s"[tune]   median  task counts: ${tcount(repStages(mi))}")
-      }
-      println(f"[tune] ngram_prefix walls: ${walls.map(w => f"$w%.2f").mkString(" ")}")
-      spark.stop(); return
-    }
-
-    // ---- admission cost vs staged-index growth (r16 task 3): fixed
-    // 1k-doc batches (sf0.1 split 5 ways) admitted against staged
-    // indexes of 50k / 500k / 5M docs (the 10×/100×/1000× tiers). The incremental probe is
-    // bucket-pruned, so the HYPOTHESIS is near-flat per-batch wall;
-    // the known linear term is the per-batch SCAN of the staged bucket
-    // + shingle parquet (the broadcast probe join streams the corpus
-    // side map-locally — no corpus shuffle — but a scan is a scan).
-    // Each index is staged directly (bulk write of the index view +
-    // _index_params stamp, the CorpusStreams layout) so the cell
-    // measures admission, not bootstrap. Usage: ... admgrow
-    if (args.drop(1).headOption.contains("admgrow")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val fs = new org.apache.hadoop.fs.Path("/tmp")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def stageIndex(corpus: DataFrame, dir: String): Unit = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        if (fs.exists(p)) fs.delete(p, true)
-        val idx = Dedup.minhashIndexView(corpus, "doc_id", "text")
-        idx.shingles.select(col("id"),
-            Dedup.hashShingles(col("sh")).as("sh"))
-          .write.parquet(s"$dir/shingles")
-        idx.buckets.write.parquet(s"$dir/buckets")
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(s"$dir/_index_params"), true)
-        try out.write(
-          "n=2,k=16,bands=8,kernel=fast,repr=xxh64".getBytes("UTF-8"))
-        finally out.close()
-      }
-      // identical batch content at every index size: sf0.1 docs,
-      // id-shifted into a space disjoint from every tier's ids
-      val batches = (0 until 5).map { b =>
-        docs.filter(col("doc_id") % 5 === b)
-          .withColumn("doc_id", col("doc_id") + lit(900000000000L))
-          .localCheckpoint(true)
-      }
-      val tiers = Seq(
-        ("50k", "/tmp/graft_sf1/documents.parquet"),
-        ("500k", "/tmp/graft_sf10/documents.parquet"),
-        ("5M", "/tmp/graft_sf100/documents.parquet"))
-      for ((tname, path) <- tiers) {
-        val idxDir = s"/tmp/graft_admgrow_$tname"
-        val corpus = spark.read.parquet(path)
-        println(s"[tune] staging $tname index...")
-        stageIndex(corpus, idxDir)
-        // batches run against a GROWING index by design — admission
-        // appends are the steady state being measured; batch b sees
-        // base + b admitted 1k-batches, a <10% perturbation of even
-        // the smallest tier
-        for ((b, i) <- batches.zipWithIndex) {
-          val j0 = jobs.get()
-          val t0 = System.nanoTime()
-          val admitted = graft.streaming.CorpusStreams
-            .admitBatch(b, idxDir, "doc_id", "text").count()
-          val t = (System.nanoTime() - t0) / 1e9
-          println(f"[tune] admit @$tname%-5s batch$i ${t}%6.2f s  " +
-            f"${ListenerSettle.settled(jobs) - j0}%3d jobs  " +
-            f"$admitted%6d admitted")
-          graft.ops.StageCache.releaseAll()
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(idxDir), true)
-      }
-      spark.stop(); return
-    }
-
-    if (args.drop(1).headOption.contains("sf1000")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val t4 = ensureTier4000(spark)
-      val minFree = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
-      val sampler = new Thread(() => while (true) {
-        minFree.updateAndGet(m =>
-          math.min(m, new java.io.File("/tmp").getUsableSpace)); Thread.sleep(2000)
-      })
-      sampler.setDaemon(true); sampler.start()
-      def freeGb: Double = new java.io.File("/tmp").getUsableSpace / 1e9
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      val d4000 = spark.read.parquet(s"$t4/documents.parquet")
-      // first two super-copies = 10M docs (ids < 2e10)
-      val d2000 = d4000.filter(col("doc_id") < 20000000000L)
-      def cell(name: String)(f: => DataFrame): Unit = {
-        println(f"[tune] /tmp free before $name: $freeGb%.1f GB")
-        try { time(name)(f); () } catch {
-          case e: Exception =>
-            println(s"[tune] $name FAILED: ${e.getMessage.take(200)}")
-        }
-        println(f"[tune] /tmp free after  $name: $freeGb%.1f GB " +
-          f"(session min ${minFree.get / 1e9}%.1f GB)")
-      }
-      // cheap arm first; partition count scales with the tier (the
-      // initial shuffle-partition count is the per-partition memory
-      // cap — see the sf100 loop's rationale)
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      cell("cluster_star @1000x (5M)")(
-        Dedup.clusters(Dedup.simhashPairs64(d1000, "doc_id", "text", 3),
-          driverEdgeLimit = 0))
-      spark.conf.set("spark.sql.shuffle.partitions", "256")
-      cell("cluster_star @4000x (20M)")(
-        Dedup.clusters(Dedup.simhashPairs64(d4000, "doc_id", "text", 3),
-          driverEdgeLimit = 0))
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      cell("minhash_fast @1000x (5M)")(
-        Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1))
-      spark.conf.set("spark.sql.shuffle.partitions", "256")
-      cell("minhash_fast @2000x (10M)")(
-        Dedup.minhashPairs(d2000, "doc_id", "text", 2, 16, 8, 0.1))
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      println(f"[tune] /tmp free-space floor across the session: " +
-        f"${minFree.get / 1e9}%.1f GB")
-      spark.stop(); return
-    }
-
-    // ---- newline-paragraph dedup scale cells (r15, verdict task 7):
-    // q_paragraph_newline had only sf0.01 oracle evidence; these cells
-    // measure paragraphDedupNewline at the 10× and 100× documents
-    // tiers. The standard tier builder destroys newlines (it re-joins
-    // tokens with spaces), so a dedicated variant re-inserts '\n'
-    // every 20 tokens AFTER the per-copy token tagging: paragraph
-    // counts scale linearly, cross-copy paragraphs never collide
-    // (tags), and the trailing separator leaves some docs an empty
-    // final paragraph — the empty-run path stays exercised at scale.
-    // kept_md5 filter defeats unique-key LEFT-join elimination (the
-    // para-cell lesson above). Usage: runMain graft.Tune
-    // /root/testdata/sf0.1 paranl
-    if (args.drop(1).headOption.contains("paranl")) {
-      def ensureNl(dstDir: String, copies: Int): Unit = {
-        if (new java.io.File(s"$dstDir/documents.parquet/_SUCCESS").exists) return
-        println(s"[tune] building $dstDir ($copies newline-paragraph copies)")
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val width = if (copies > 10) 2 else 1
-        (0 until copies).map { c =>
-          val tag = "c" + s"%0${width}d".format(c)
-          val tagged = transform(split(trim(col("text")), "[ \\t\\n\\r\\f]+"),
-            t => concat(lit(tag), t))
-          docs.withColumn("doc_id", col("doc_id") + lit(c * 10000000L))
-            .withColumn("text", concat_ws("",
-              transform(tagged, (t, i) => concat(t,
-                when((i + 1) % 20 === 0, lit("\n")).otherwise(lit(" "))))))
-        }.reduce(_.unionByName(_))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dstDir/documents.parquet")
-      }
-      ensureNl("/tmp/graft_sf1nl", 10)
-      ensureNl("/tmp/graft_sf10nl", 100)
-      val tiers = Seq(("para_nl @10x", "/tmp/graft_sf1nl"),
-        ("para_nl @100x", "/tmp/graft_sf10nl"))
-      val best = Array.fill(tiers.size)(Double.MaxValue)
-      for (rep <- 1 to 2; i <- tiers.indices) {
-        val (name, dir) = tiers(i)
-        val d = spark.read.parquet(s"$dir/documents.parquet")
-        val t = time(f"$name%s r$rep")(
-          Dedup.paragraphDedupNewline(d, "doc_id", "text")
-            .where(col("kept_md5") =!= lit("")))
-        if (!t.isNaN) best(i) = math.min(best(i), t)
-      }
-      if (best.forall(_ != Double.MaxValue) && best(0) > 0) {
-        val alpha = math.log(best(1) / best(0)) / math.log(10.0)
-        val flag = if (alpha > 1.02) "  ** SUPERLINEAR **" else ""
-        println(f"[tune] para_nl 10x -> 100x: ${best(0)}%7.2f s -> " +
-          f"${best(1)}%8.2f s   alpha $alpha%5.2f$flag")
-      }
-      spark.stop(); return
-    }
-
-    // ---- 100×-documents probe tier: turns the sf1 (10×) alpha
-    // EXTRAPOLATION into a 10×→100× MEASUREMENT for the heavy sketch
-    // pipelines, and catches candidate-set blowups the 10× tier is too
-    // small to show. Copies are prefix-disjoint (fixed-width c00..c99,
-    // so no cross-copy token collisions and per-copy duplicate density
-    // — hence the true answer — scales linearly); doc_id spaces are
-    // disjoint by the same 10M stride Bench's sf1 builder uses. The
-    // tier is bench-only: correctness stays pinned by the sf0.01
-    // oracle gate. Usage: runMain graft.Tune /root/testdata/sf0.1 sf10
-    if (args.drop(1).headOption.contains("sf10")) {
-      import graft.text.Decontaminate
-      val t100dir = "/tmp/graft_sf10"
-      ensureDocsTier(spark, sfDir, t100dir, 100)
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      val d10 = spark.read.parquet("/tmp/graft_sf1/documents.parquet")
-      val d100 = spark.read.parquet(s"$t100dir/documents.parquet")
-      // the registered heavy queries' own parameters (MhK=16/bands=8/
-      // thr=0.1; ngram blocks+0.09; simhash hamming<=3; spans w=8)
-      def pipes(d: DataFrame): Seq[(String, () => DataFrame)] = Seq(
-        ("minhash", () =>
-          Dedup.minhashPairs(d, "doc_id", "text", 2, 16, 8, 0.1,
-            fastKernel = false)),
-        ("minhash_fast", () =>
-          Dedup.minhashPairs(d, "doc_id", "text", 2, 16, 8, 0.1,
-            fastKernel = true)),
-        ("dedup_eval", () =>
-          Dedup.minhashEval(d, "doc_id", "text", 2, 16, 8, 0.1,
-            fastKernel = false)),
-        ("simhash", () => Dedup.simhashPairs(d, "doc_id", "text", 3)),
-        ("simhash64", () => Dedup.simhashPairs64(d, "doc_id", "text", 3)),
-        ("ngram_prefix", () =>
-          Dedup.ngramJaccardPairsPruned(d, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)),
-        ("ngram_precut", () =>
-          Dedup.ngramJaccardPairsPrecut(d, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)),
-        ("fuzzy_decon", () =>
-          Decontaminate.fuzzyContamination(d.filter(col("doc_id") % 10 =!= 0),
-            d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-            threshold = 0.1, fastKernel = false)),
-        ("incremental", () =>
-          Dedup.incrementalMinhashPairs(
-            Dedup.minhashIndexView(d.filter(col("doc_id") % 2 === 0),
-              "doc_id", "text", fastKernel = false),
-            d.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-            threshold = 0.1, fastKernel = false)),
-        ("substr_dedup", () =>
-          Dedup.duplicateSpans(d, "doc_id", "text", 8)),
-        // the kept_md5 filter defeats unique-key LEFT-JOIN elimination:
-        // count() on the bare operator let Catalyst prune the ENTIRE
-        // dedup subtree (first para cells read 0.1 s / 0 shuffle MB)
-        ("para_dedup", () =>
-          Dedup.paragraphDedup(d, "doc_id", "text", 20)
-            .where(col("kept_md5") =!= lit(""))))
-      val p10 = pipes(d10); val p100 = pipes(d100)
-      // TWO full passes, min per cell: a single sequential pass bakes
-      // session ordering into the numbers (the first heavy run eats
-      // residual compile-load, late runs eat accumulated GC debt — the
-      // r11 first cut measured minhash@100x at 42.6 s this way; the
-      // interleaved rerun's steady state was 22.1 s)
-      val best10 = Array.fill(p10.size)(Double.MaxValue)
-      val best100 = Array.fill(p10.size)(Double.MaxValue)
-      for (rep <- 1 to 2; i <- p10.indices) {
-        val (name, mk10) = p10(i); val (_, mk100) = p100(i)
-        best10(i) = math.min(best10(i), time(f"$name%s @10x r$rep")(mk10()))
-        best100(i) = math.min(best100(i), time(f"$name%s @100x r$rep")(mk100()))
-      }
-      val table = p10.indices.map { i =>
-        val (a, b) = (best10(i), best100(i))
-        val alpha = if (a > 0 && b > 0) math.log(b / a) / math.log(10.0)
-                    else 0.0
-        (p10(i)._1, a, b, alpha)
-      }
-      println("[tune] ---- 10x -> 100x scaling (alpha = log10 t-ratio; 1.0 = linear) ----")
-      table.foreach { case (n, a, b, al) =>
-        val flag = if (al > 1.02) "  ** SUPERLINEAR **" else ""
-        println(f"[tune] $n%-14s ${a}%7.2f s -> ${b}%8.2f s   alpha $al%5.2f$flag")
-      }
-      spark.stop(); return
-    }
-
-    // ---- 1000×-documents probe tier (5M docs): extends the 10×→100×
-    // alpha table a THIRD decade for the production-path pipelines
-    // (fast kernels, 64-bit simhash) — the "would it still hold at
-    // 1000×?" measurement. Built from the 100× tier: 10 super-copies
-    // with tag d0..d9 prepended to every token (shingle spaces stay
-    // disjoint across super-copies; the c00..c99 structure repeats
-    // within each, so per-copy duplicate density — hence the true
-    // answer — stays linear), doc_id stride 1e9 (sf10 ids < 1e9).
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 sf100
-    if (args.drop(1).headOption.contains("sf100")) {
-      require(nameFilter.isEmpty,
-        "Tune sf100 builds an aggregate scaling table; drop the filter arg")
-      import graft.text.Decontaminate
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      // production defaults everywhere (fast kernel); scope note: the
-      // legacy-kernel arms and ngram_prefix are EXCLUDED by cost (the
-      // ngram 100× steady state is ~33 s → ~several min/run at 1000×;
-      // its scale path is the partitioning story in SCALE.md r11/r12)
-      println("[tune] sf100 scope: production-path pipelines only; " +
-        "ngram_prefix + legacy kernels excluded by cost (SCALE.md)")
-      // cheap arms first so a late heavy-arm failure still leaves a
-      // mostly-complete table
-      def pipes(d: DataFrame): Seq[(String, () => DataFrame)] = Seq(
-        ("simhash64", () => Dedup.simhashPairs64(d, "doc_id", "text", 3)),
-        // kept_md5 filter: see the sf10 para_dedup arm
-        ("para_dedup", () =>
-          Dedup.paragraphDedup(d, "doc_id", "text", 20)
-            .where(col("kept_md5") =!= lit(""))),
-        ("cluster_star", () =>
-          Dedup.clusters(Dedup.simhashPairs64(d, "doc_id", "text", 3),
-            driverEdgeLimit = 0)),
-        ("substr_dedup", () =>
-          Dedup.duplicateSpans(d, "doc_id", "text", 8)),
-        // NOTE this arm measures the operator's PRODUCTION behavior.
-        // Through r13 that spanned two plans (the 100k-doc guard sent
-        // the 1000x tier's 500k index to the incremental fallback);
-        // since the r14 fuzzyxo2 re-adjudication the guard is the
-        // absolute 2M-doc broadcast-size bound, so BOTH tiers
-        // broadcast and the alpha row is one plan again.
-        ("fuzzy_decon_fast", () =>
-          Decontaminate.fuzzyContamination(d.filter(col("doc_id") % 10 =!= 0),
-            d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-            threshold = 0.1)),
-        ("incremental_fast", () =>
-          Dedup.incrementalMinhashPairs(
-            Dedup.minhashIndexView(d.filter(col("doc_id") % 2 === 0),
-              "doc_id", "text"),
-            d.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-            threshold = 0.1)),
-        ("minhash_fast", () =>
-          Dedup.minhashPairs(d, "doc_id", "text", 2, 16, 8, 0.1)))
-      val pA = pipes(d100); val pB = pipes(d1000)
-      val bestA = Array.fill(pA.size)(Double.MaxValue)
-      val bestB = Array.fill(pA.size)(Double.MaxValue)
-      // a cell failure (e.g. a broadcast-size wall at the new tier) is
-      // itself a finding — record it and keep measuring the other arms
-      def cell(name: String)(f: => DataFrame): Double =
-        try time(name)(f) catch {
-          case e: Exception =>
-            println(s"[tune] $name FAILED: ${e.getMessage.take(200)}")
-            Double.NaN
-        }
-      // fold only FINITE reps into the min: math.min propagates NaN, so
-      // a transient rep-1 failure would otherwise discard a successful
-      // rep-2 measurement — and a never-succeeded cell must print
-      // FAILED, not a fake "alpha 0.00"
-      def fold(best: Double, t: Double): Double =
-        if (t.isNaN) best else math.min(best, t)
-      // partition count scales WITH the tier: the first sf100 attempt
-      // ran the 1000× minhash verify at p=32 and saturated the 96 GB
-      // old gen into full-GC thrash (10× the per-partition bytes of
-      // the 100× tier). The initial shuffle-partition count is the
-      // per-partition memory cap (AQE coalesces down, never up), and a
-      // real cluster raises it with data volume — the tier measures
-      // the ALGORITHM's scaling, not a fixed partition number's.
-      for (rep <- 1 to 2; i <- pA.indices) {
-        val (name, mkA) = pA(i); val (_, mkB) = pB(i)
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        bestA(i) = fold(bestA(i), cell(f"$name%s @100x r$rep")(mkA()))
+    mode match {
+      // ---- truncated-hash pre-verify A/B at the 1000× tier (r16
+      // task 1): one-phase rendezvous verify (spark.graft.
+      // verifyPrefilter=off) vs the two-phase 16-bit truncated
+      // pre-verify, interleaved in one JVM on the production minhash
+      // pipeline. The contested term is the verify exchange's bytes
+      // (~26 GB per 5M docs, the r15 disk wall): phase 1 ships
+      // high-16-bit smallints (a quarter of the bytes), phase 2
+      // re-ships full arrays only for pairs whose truncated Jaccard
+      // upper bound clears the threshold. shW/shR per cell come from
+      // time(); dumpStages attributes which exchange moved.
+      case "pv1000" =>
+        ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
+        ensureTier1000(spark)
+        val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
         spark.conf.set("spark.sql.shuffle.partitions", "128")
-        bestB(i) = fold(bestB(i), cell(f"$name%s @1000x r$rep")(mkB()))
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      println("[tune] ---- 100x -> 1000x scaling (alpha = log10 t-ratio; 1.0 = linear) ----")
-      pA.indices.foreach { i =>
-        val (a, b) = (bestA(i), bestB(i))
-        if (a == Double.MaxValue || b == Double.MaxValue) {
-          val failedCells = Seq(
-            if (a == Double.MaxValue) Some("100x") else None,
-            if (b == Double.MaxValue) Some("1000x") else None).flatten
-          println(f"[tune] ${pA(i)._1}%-17s FAILED (no successful rep in " +
-            failedCells.mkString(" or ") + " cell)")
-        }
-        else {
-          val alpha = if (a > 0 && b > 0) math.log(b / a) / math.log(10.0) else 0.0
-          val flag = if (alpha > 1.02) "  ** SUPERLINEAR **" else ""
-          println(f"[tune] ${pA(i)._1}%-17s ${a}%7.2f s -> ${b}%8.2f s   alpha $alpha%5.2f$flag")
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- staged-index REPRESENTATION A/B at the 10× tier (r13): the
-    // staged shingle table in raw strings (the pre-r13 format) vs
-    // sorted xxhash64 longs (repr=xxh64) — parquet footprint of each,
-    // staging-write cost, and the incremental-probe cost against each,
-    // interleaved in one JVM with pair equality asserted. The staged
-    // table IS the persistent footprint of a 100 TB dedup pipeline, so
-    // bytes-at-rest is the headline; probe time moves because the
-    // corpus side no longer re-hashes strings at verify.
-    if (args.drop(1).headOption.contains("repr")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      val d = spark.read.parquet("/tmp/graft_sf1/documents.parquet")
-      val corpus = d.filter(col("doc_id") % 2 === 0)
-      val delta = d.filter(col("doc_id") % 2 === 1)
-      val base = "/tmp/graft_repr"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def staged(name: String)(write: String => Unit): Unit = {
-        val t0 = System.nanoTime()
-        write(s"$base/$name")
-        val t = (System.nanoTime() - t0) / 1e9
-        val bytes = fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(s"$base/$name")).getLength
-        println(f"[tune] stage $name%-8s ${t}%6.2f s  ${bytes / 1048576.0}%8.1f MB")
-      }
-      for (rep <- 1 to 2) {
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
-        val built = Dedup.minhashIndexView(corpus, "doc_id", "text")
-        staged("bk")(p => built.buckets.write.parquet(p))
-        staged("sh_str")(p => built.shingles.write.parquet(p))
-        staged("sh_xxh")(p => built.shingles
-          .select(col("id"), Dedup.hashShingles(col("sh")).as("sh"))
-          .write.parquet(p))
-        def probe(shPath: String): DataFrame =
-          Dedup.incrementalMinhashPairsFromIndex(
-            Dedup.MinhashIndex(spark.read.parquet(shPath),
-              spark.read.parquet(s"$base/bk")),
-            Dedup.minhashIndexView(delta, "doc_id", "text"), 0.1)
-        time(f"probe STR staged r$rep") { probe(s"$base/sh_str") }
-        time(f"probe XXH staged r$rep") { probe(s"$base/sh_xxh") }
-        if (rep == 1) {
-          val a = probe(s"$base/sh_str").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-          val b = probe(s"$base/sh_xxh").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-          require(a == b, s"repr probe results differ: ${(a -- b).take(3)}")
-          println(s"[tune] repr equivalence OK (${a.size} pairs)")
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- substr_dedup decade-3 adjudication (r13): the sf100 table
-    // measured alpha 1.08 (8.57 s @100x/p=32 -> 103.96 s @1000x/p=128)
-    // for duplicateSpans, the only non-fuzzy arm above 1.02. The two
-    // tiers ran at DIFFERENT partition counts, so before naming an
-    // algorithmic term this interleaves partition-matched cells (plus
-    // a p=256 cell — maybe 128 partitions is simply too few for 10x
-    // the span rows) with per-cell spill printed; prefix-disjoint
-    // copies mean per-digest doc counts are tier-invariant, so the
-    // combine efficiency of the digest aggregate cannot be the term.
-    if (args.drop(1).headOption.contains("ss1000")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      for (rep <- 1 to 2) {
-        for (p <- Seq(32, 128)) {
-          spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-          time(f"substr @100x p=$p%-3d r$rep") {
-            Dedup.duplicateSpans(d100, "doc_id", "text", 8)
-          }
-        }
-        for (p <- Seq(128, 256)) {
-          spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-          time(f"substr @1000x p=$p%-3d r$rep") {
-            Dedup.duplicateSpans(d1000, "doc_id", "text", 8)
-          }
-        }
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- verify-exchange bytes probe (r13): the mh1000 decomposition
-    // measured minhash_fast's shuffle bytes growing 15.9× for 10× docs
-    // (2.78 → 44.3 GB) with LINEAR candidates — the prime suspect is
-    // the shingle table's exchange being REUSED across the two verify
-    // joins at the small tier but duplicated at the big one (AQE
-    // exchange reuse is best-effort). This interleaves reuse on/off at
-    // the 100× tier: if bytes with reuse OFF ≈ the big tier's
-    // per-decade bytes, the mechanism is named.
-    if (args.drop(1).headOption.contains("mhbytes")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      for (rep <- 1 to 2; reuse <- Seq(true, false)) {
-        spark.conf.set("spark.sql.exchange.reuse", reuse.toString)
-        time(f"minhash_fast 100x reuse=$reuse%-5s r$rep") {
-          Dedup.minhashPairs(d100, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-      }
-      spark.conf.set("spark.sql.exchange.reuse", "true")
-      // broadcast-flip arm: past some tier the verify joins' small side
-      // outgrows the broadcast threshold and the corpus shingle table
-      // starts paying sort-merge exchanges — force that plan at 100×
-      // and read the bytes delta off the same session
-      for (rep <- 1 to 2) {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        time(f"minhash_fast 100x nobcast r$rep") {
-          Dedup.minhashPairs(d100, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        time(f"minhash_fast 100x bcast   r$rep") {
-          Dedup.minhashPairs(d100, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- minhash stage-by-stage rows/bytes diagnosis (r13): the
-    // reuse and broadcast-flip hypotheses both measured FLAT, so the
-    // 15.9× bytes growth lives in some stage's own rows/bytes — run
-    // the pipeline's prefixes (bucket self-join pre-distinct, distinct
-    // candidates, full verify) at both tiers and read rows + shuffle
-    // bytes per prefix off one session.
-    if (args.drop(1).headOption.contains("mhdiag")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val tiers = Seq(
-        ("100x", 32, "/tmp/graft_sf10/documents.parquet"),
-        ("1000x", 128, "/tmp/graft_sf100/documents.parquet"))
-      for ((tname, p, path) <- tiers) {
-        val d = spark.read.parquet(path)
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-        def idx = Dedup.minhashIndexView(d, "doc_id", "text")
-        def preDistinct = {
-          val b = idx.buckets
-          b.select(col("band"), col("bucket"), col("id").as("id_a"))
-            .join(b.select(col("band"), col("bucket"), col("id").as("id_b")),
-              Seq("band", "bucket"))
-            .filter(col("id_a") < col("id_b"))
-            .select("id_a", "id_b")
-        }
-        stageLog.synchronized(stageLog.clear())
-        time(s"a: pre-distinct $tname") { preDistinct }
-        dumpStages(s"a $tname")
-        time(s"b: distinct     $tname") { preDistinct.distinct() }
-        dumpStages(s"b $tname")
-        time(s"c: full         $tname") {
-          Dedup.minhashPairs(d, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-        dumpStages(s"c $tname")
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- per-pair-bytes adjudication at the 1000× tier (r13): mhdiag
-    // attributed the superlinear shuffle to ONE stage — the verify
-    // join-1 output carrying sh_a per candidate pair — with candidates
-    // LINEAR (10.64M → 106.2M) but bytes/pair up 1.76× (194 → 343 B).
-    // The tiers ran at different partition counts (32 vs 128), and the
-    // carried arrays compress by adjacency (SMJ emits join-1 output
-    // ordered by id_a, so consecutive rows repeat sh_a; more reducer
-    // buckets scatter those repeats apart before LZ4 sees them). Arm 1
-    // re-runs the 1000× cell at p=32: bytes back near ~20 GB confirms
-    // the compression-adjacency mechanism (a partitioning artifact a
-    // cluster tunes, not an algorithmic term); flat bytes means the
-    // term is data and needs a different hunt. Arm 2 keeps p=128 but
-    // hints SHUFFLE_HASH on the shingle sides of both verify joins:
-    // same bytes, no 36 GB sort — the wall-clock share of SMJ sorting
-    // (and its GC) reads off the delta.
-    if (args.drop(1).headOption.contains("mhp")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      for (p <- Seq(32, 128)) {
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-        time(f"minhash_fast 1000x p=$p%-3d") {
-          Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-      time("minhash_fast 1000x p=128 shj") {
-        Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1)
-      }
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- rendezvous-vs-carry verify A/B (r14): the carry shape's
-    // join-1 output owned 36.4 of 44.3 GB of 1000×-tier shuffle
-    // (mhdiag) with wall alphas 1.18-1.41 across the third decade.
-    // The rendezvous verify routes each pair to its min shared LSH
-    // bucket and ships shingle arrays once per (group, doc), so the
-    // per-pair carry crosses no exchange at all (DedupSpec plan pin).
-    // Interleaved blocks (carry, rv, carry, rv — each time() is
-    // itself min-of-2) at both tiers, partition counts matched to the
-    // r13 cells, stage dumps after each cell so the carry stage's
-    // disappearance is visible, not inferred.
-    if (args.drop(1).headOption.contains("mhrv10")) {
-      // small-tier guard cell: the bench sf1 tier (10× docs) has no
-      // carry arm of its own, so a uniform session inflation there
-      // cannot be told apart from a small-scale rendezvous regression
-      // without this interleaved A/B
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      val d = spark.read.parquet("/tmp/graft_sf1/documents.parquet")
-      for (block <- 1 to 2; fast <- Seq(false, true)) {
-        time(f"mh10 carry fast=$fast b$block") {
-          Dedup.minhashPairsCarry(d, "doc_id", "text", 2, 16, 8, 0.1,
-            fastKernel = fast)
-        }
-        time(f"mh10 rv    fast=$fast b$block") {
-          Dedup.minhashPairsRendezvous(d, "doc_id", "text", 2, 16, 8, 0.1,
-            fastKernel = fast)
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- 30×-tier crossover bracket for the verify size gate: the
-    // 10× cell (1.06M candidates) measured carry 2× ahead, the 100×
-    // cell (10.6M) a slight rv win — this runs the tier between them
-    // so RendezvousMinPairs sits at a measured near-tie, not a guess.
-    if (args.drop(1).headOption.contains("mhrv30")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf3", 30)
-      val d = spark.read.parquet("/tmp/graft_sf3/documents.parquet")
-      for (block <- 1 to 2) {
-        time(f"mh30 carry b$block") {
-          Dedup.minhashPairsCarry(d, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-        time(f"mh30 rv    b$block") {
-          Dedup.minhashPairsRendezvous(d, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- warmth-MATCHED third-decade alpha for the production
-    // minhash pipeline (r15, verdict task 1): every prior alpha
-    // instrument was session-state-asymmetric between its tiers — the
-    // sf100 table ran the 1000× cells at the end of a long heavy
-    // session (alpha 1.25), mhrv ran tiers as the OUTER loop so the
-    // 1000× blocks were always warmer (1.12), and a fresh solo session
-    // (mh1000) reads both cells cold and gets exactly 1.00
-    // (26.94 → 268.80 s, r15) while both sessions agree the exchange
-    // bytes are exactly linear (2,409 → 25,876 MB). This mode removes
-    // the asymmetry the other way: one uncounted 100× warmup cell,
-    // then tiers ALTERNATED (100×, 1000×, 100×, 1000×) so block 2 of
-    // BOTH tiers runs in a fully-warm JVM; the per-tier min is the
-    // warmth-matched measurement. If its alpha reads ~1.0 too, the
-    // r14 residual exponent is pinned as JIT/code-cache/GC-debt
-    // asymmetry between measurement cells — a property of the
-    // measuring session, not of the pipeline.
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 mhwarm
-    if (args.drop(1).headOption.contains("mhwarm")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      time("mhwarm warmup 100x (uncounted)") {
-        Dedup.minhashPairs(d100, "doc_id", "text", 2, 16, 8, 0.1)
-      }
-      val best = Array.fill(2)(Double.MaxValue)
-      for (block <- 1 to 2) {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        val a = time(f"mh rv 100x  b$block") {
-          Dedup.minhashPairs(d100, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-        if (!a.isNaN) best(0) = math.min(best(0), a)
-        spark.conf.set("spark.sql.shuffle.partitions", "128")
-        val b = time(f"mh rv 1000x b$block") {
-          Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1)
-        }
-        if (!b.isNaN) best(1) = math.min(best(1), b)
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      if (best.forall(_ != Double.MaxValue) && best(0) > 0) {
-        val alpha = math.log(best(1) / best(0)) / math.log(10.0)
-        println(f"[tune] mhwarm warmth-matched 100x -> 1000x: " +
-          f"${best(0)}%7.2f s -> ${best(1)}%8.2f s   alpha $alpha%5.2f")
-      }
-      spark.stop(); return
-    }
-
-    // ---- rendezvous group-map aggregate mechanism A/B (r15, verdict
-    // task 1): the r14 residual superlinearity is attributed to
-    // "GC/sort constants on the group-map aggregate". collect_list is
-    // a TypedImperativeAggregate, so the group-map build runs in
-    // ObjectHashAggregateExec — which abandons its hash map and FALLS
-    // BACK TO SORT-BASED AGGREGATION after
-    // spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-    // DISTINCT KEYS PER TASK (default 128 — with ~millions of
-    // rendezvous groups per task the fallback fires almost
-    // immediately, external-sorting every (rv, id, sh) row). These
-    // cells interleave the default against a threshold big enough to
-    // keep the hash map (memory cost = the in-flight group maps a
-    // task holds, the same clique-bounded arrays the aggregate buffers
-    // anyway), at both tiers, gc/shW printed per cell.
-    // Usage: runMain graft.Tune /root/testdata/sf0.1 mhagg
-    if (args.drop(1).headOption.contains("mhagg")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val thrKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-      val tiers = Seq(("100x", 32, "/tmp/graft_sf10/documents.parquet"),
-        ("1000x", 128, "/tmp/graft_sf100/documents.parquet"))
-      for ((tname, p, path) <- tiers) {
-        val d = spark.read.parquet(path)
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-        for (block <- 1 to 2; thr <- Seq("128", "8388608")) {
-          spark.conf.set(thrKey, thr)
-          time(f"rv $tname aggThr=$thr%-7s b$block") {
-            Dedup.minhashPairsRendezvous(d, "doc_id", "text", 2, 16, 8, 0.1)
-          }
-        }
-      }
-      spark.conf.unset(thrKey)
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    if (args.drop(1).headOption.contains("mhrv")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val tiers = Seq(("100x", 32, "/tmp/graft_sf10/documents.parquet"),
-        ("1000x", 128, "/tmp/graft_sf100/documents.parquet"))
-      for ((tname, p, path) <- tiers) {
-        val d = spark.read.parquet(path)
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
         for (block <- 1 to 2) {
-          stageLog.synchronized(stageLog.clear())
-          time(f"mh carry $tname b$block") {
-            Dedup.minhashPairsCarry(d, "doc_id", "text", 2, 16, 8, 0.1)
-          }
-          dumpStages(s"carry $tname b$block")
-          time(f"mh rv    $tname b$block") {
-            Dedup.minhashPairsRendezvous(d, "doc_id", "text", 2, 16, 8, 0.1)
-          }
-          dumpStages(s"rv $tname b$block")
-        }
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- 1000×-tier retry for the two disk-heaviest arms: the full
-    // sf100 pass lost minhash_fast and incremental_fast to a probe-host
-    // disk wall (their verify joins exchange the corpus shingle arrays;
-    // map outputs for a 5M-doc corpus are tens of GB, and two dead
-    // JVMs' blockmgr dirs were still on disk). One rep each, 1000×
-    // only, p=128, nothing else competing for /tmp.
-    if (args.drop(1).headOption.contains("mh1000")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      ensureTier1000(spark)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      val d1000 = spark.read.parquet("/tmp/graft_sf100/documents.parquet")
-      def cell(name: String)(f: => DataFrame): Unit =
-        try { time(name)(f); () } catch {
-          case e: Exception =>
-            println(s"[tune] $name FAILED: ${e.getMessage.take(200)}")
-        }
-      def arms(d: DataFrame): Seq[(String, () => DataFrame)] = Seq(
-        ("minhash_fast", () =>
-          Dedup.minhashPairs(d, "doc_id", "text", 2, 16, 8, 0.1)),
-        ("incremental_fast", () =>
-          Dedup.incrementalMinhashPairs(
-            Dedup.minhashIndexView(d.filter(col("doc_id") % 2 === 0),
-              "doc_id", "text"),
-            d.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-            threshold = 0.1)))
-      // both tiers in one solo JVM so the shuffle/GC decomposition of
-      // the third-decade wall reads off the SAME session (the r13
-      // sf100 table measured candidate volume linear but wall-clock
-      // alpha 1.4-1.6 on these two — the per-cell shW/shR/gc columns
-      // name which mechanism eats the extra decade)
-      for ((name, mk100) <- arms(d100)) {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        cell(s"$name @100x solo")(mk100())
-      }
-      for ((name, mk1000) <- arms(d1000)) {
-        spark.conf.set("spark.sql.shuffle.partitions", "128")
-        cell(s"$name @1000x solo")(mk1000())
-      }
-      spark.stop(); return
-    }
-
-    // ---- 100×-tier shuffle-partition sizing A/B: the sf10 probe
-    // flagged the default-kernel minhash (alpha 1.07) and the
-    // incremental probe (1.01) as marginally superlinear while every
-    // pipeline's CANDIDATE growth stayed linear — so the suspect is
-    // execution, not algorithm: Tune/Bench pin shuffle.partitions=32,
-    // and at 100× the corpus shingle-array exchanges carry 10× more
-    // bytes per partition (spill + single-pass GC pressure). This A/B
-    // interleaves 32 vs 128 initial partitions (AQE coalesces DOWN,
-    // never up, so the initial number IS the per-partition size cap)
-    // on the flagged pipelines, with spill bytes printed per run.
-    if (args.drop(1).headOption.contains("p100")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      def mh(fast: Boolean) = Dedup.minhashPairs(d100, "doc_id", "text",
-        2, 16, 8, 0.1, fastKernel = fast)
-      def inc = Dedup.incrementalMinhashPairs(
-        Dedup.minhashIndexView(d100.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", fastKernel = false),
-        d100.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        threshold = 0.1, fastKernel = false)
-      for (_ <- 1 to 2) {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        time("minhash 100x p=32") { mh(false) }
-        spark.conf.set("spark.sql.shuffle.partitions", "128")
-        time("minhash 100x p=128") { mh(false) }
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        time("minhash_fast 100x p=32") { mh(true) }
-        spark.conf.set("spark.sql.shuffle.partitions", "128")
-        time("minhash_fast 100x p=128") { mh(true) }
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        time("incremental 100x p=32") { inc }
-        spark.conf.set("spark.sql.shuffle.partitions", "128")
-        time("incremental 100x p=128") { inc }
-        // ngram's 100× run spills ~28 GB at p=32 (the 23.6M-row ranking
-        // window sort); this pins whether that's partition sizing
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        time("ngram 100x p=32") {
-          Dedup.ngramJaccardPairsPruned(d100, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", "128")
-        time("ngram 100x p=128") {
-          Dedup.ngramJaccardPairsPruned(d100, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)
-        }
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.stop(); return
-    }
-
-    // ---- ngram precut keepPct sensitivity at the 100× tier: the sf10
-    // table measured precut ~tied with the ranking-window prefix at
-    // steady state (34.25 vs 32.86 s) despite a 1.46× cold-pass win —
-    // before recording a negative adoption, sweep the df-cutoff mass
-    // knob (lower keepPct = harder precut, bigger fallback class) and
-    // re-pin the baseline, interleaved in one JVM.
-    if (args.drop(1).headOption.contains("ng100")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      val d100 = spark.read.parquet("/tmp/graft_sf10/documents.parquet")
-      for (_ <- 1 to 2) {
-        time("prefix (window) 100x") {
-          Dedup.ngramJaccardPairsPruned(d100, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)
-        }
-        for (kp <- Seq(0.75, 0.90, 0.97)) {
-          time(f"precut kp=$kp%.2f 100x") {
-            Dedup.ngramJaccardPairsPrecut(d100, "doc_id", "text",
-              Seq("lang", "source"), 2, 0.09, keepPct = kp)
-          }
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- distributed dedup-cluster tier probe (r12 task 4): the
-    // driver union-find fast path is the measured-right call below
-    // driverEdgeLimit, but the distributed label-prop loop is the
-    // declared 100 TB route — this measures it ON the declared data
-    // (simhash64 near-dup pairs at the 10x and 100x documents tiers),
-    // recording rounds-to-convergence and per-round cost vs the driver
-    // path on the identical edge set. Pair building is OUTSIDE the
-    // timed window (both paths consume the same persisted edge list).
-    if (args.drop(1).headOption.contains("cc")) {
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
-      ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
-      val tiers = Seq(
-        ("10x", "/tmp/graft_sf1/documents.parquet"),
-        ("100x", "/tmp/graft_sf10/documents.parquet"))
-      for (rep <- 1 to 2; (name, path) <- tiers) {
-        val d = spark.read.parquet(path)
-        val pairs = d.sparkSession.createDataFrame(
-          Dedup.simhashPairs64(d, "doc_id", "text", 3)
-            .select("id_a", "id_b").rdd,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id_a",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("id_b",
-              org.apache.spark.sql.types.LongType))))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nEdges = pairs.count()
-        var t0 = System.nanoTime()
-        val nDrv = Dedup.clusters(pairs).count()
-        val tDrv = (System.nanoTime() - t0) / 1e9
-        // distributed-route A/B: min-label propagation (the r11 shape;
-        // jumps>1 is a measured negative — rounds are bound by hop-by-
-        // hop min spread, which jumping can't shortcut) vs large-star/
-        // small-star edge contraction (diameter-independent rounds)
-        val arms = Seq[(String, () => DataFrame)](
-          ("labelprop", () => Dedup.clustersLabelProp(pairs)),
-          ("star", () => Dedup.clusters(pairs, driverEdgeLimit = 0)))
-        for ((arm, mk) <- arms) {
-          graft.ops.StageCache.releaseAll()
-          Dedup.ClusterTelemetry.reset()
-          t0 = System.nanoTime()
-          val nDist = mk().count()
-          val tDist = (System.nanoTime() - t0) / 1e9
-          val rounds = math.max(1, Dedup.ClusterTelemetry.rounds.get())
-          require(nDist == nDrv,
-            s"cc $name $arm: distributed ($nDist) and driver ($nDrv) node counts differ")
-          println(f"[tune] cc $name%-5s rep$rep $arm%-9s edges=$nEdges%8d nodes=$nDist%8d  " +
-            f"dist ${tDist}%6.2f s  $rounds%2d rounds  ${tDist / rounds}%5.2f s/round  " +
-            f"driver ${tDrv}%6.2f s")
-        }
-        pairs.unpersist()
-      }
-      spark.stop(); return
-    }
-
-    // ---- ngram-prefix variance probe (r10 verdict: sf1 spread 2.32 s
-    // on a 6.17 s min — 10× noisier than any other tier entry). Two
-    // questions: (1) does the spread reproduce across back-to-back
-    // same-JVM runs (GC/host noise) or only across JVMs (JIT /
-    // code-cache luck)? (2) is there a hot (block, tok) prefix bucket
-    // whose df² fanout makes one task dominate (skew → variance via
-    // which executor thread draws it)? The fanout stats run the
-    // operator's OWN ngramPrefixIndex so the probe cannot drift.
-    if (args.drop(1).headOption.contains("ngvar")) {
-      for (i <- 1 to 5) {
-        time(f"ngramPruned rep$i") {
-          Dedup.ngramJaccardPairsPruned(docs, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)
-        }
-      }
-      val sh = docs.select(col("lang"), col("source"),
-        col("doc_id").as("id"), Dedup.shingles(col("text"), 2).as("sh"))
-      val perTok = Dedup.ngramPrefixIndex(sh, Seq("lang", "source"), 0.09)
-        .groupBy("lang", "source", "tok").agg(count(lit(1)).as("n"))
-      println("[tune] top prefix-index buckets by df:")
-      perTok.orderBy(desc("n")).limit(15).collect().foreach(r =>
-        println(s"[tune]   ${r.mkString(" | ")}"))
-      val st = perTok.agg(
-        sum(col("n") * (col("n") - 1) / 2).as("pair_fanout"),
-        max("n").as("max_df"), count(lit(1)).as("n_buckets"),
-        sum("n").as("index_rows")).collect()(0)
-      println(s"[tune] fanout total=${st.get(0)} max_df=${st.get(1)} " +
-        s"buckets=${st.get(2)} index_rows=${st.get(3)}")
-      spark.stop(); return
-    }
-
-    // ---- A/B experiments: current operator vs the inline-reconstructed
-    // prior shape, interleaved in ONE JVM (subset runs in separate JVMs
-    // are NOT comparable: JIT warmth and host load dominate the delta).
-    // Each pair runs A,B,A,B with min-of-2 inside time().
-    if (args.drop(1).headOption.contains("ab")) {
-      import org.apache.spark.storage.StorageLevel
-      def shingleDocs = docs.select(col("lang"), col("source"),
-        col("doc_id").as("id"), Dedup.shingles(col("text"), 2).as("sh"))
-      def jac(a: Column, b: Column): Column = {
-        val inter = graft.functions.SketchExpressions.sortedIntersectSize(a, b)
-        inter.cast("double") / (size(a) + size(b) - inter)
-      }
-      for (_ <- 1 to 2) {
-        time("ngramPruned NEW (no persist)") {
-          Dedup.ngramJaccardPairsPruned(docs, "doc_id", "text",
-            Seq("lang", "source"), 2, 0.09)
-        }
-        time("ngramPruned OLD (persisted)") {
-          val d = graft.ops.StageCache.persisted(shingleDocs)
-          Dedup.ngramPrefixCandidatesFromShingles(d, Seq("lang", "source"), 0.09)
-            .join(d.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-            .join(d.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-            .select(col("id_a"), col("id_b"),
-              jac(col("sh_a"), col("sh_b")).as("jaccard"))
-            .filter(col("jaccard") >= 0.09)
-        }
-      }
-      def simhashBuckets = docs
-        .select(col("doc_id").as("id"), Dedup.simhashBits(col("text")).as("bits"))
-        .select(col("id"), col("bits"), explode(array(
-          concat_ws("", slice(col("bits"), 1, 8)),
-          concat(lit("h2:"), concat_ws("", slice(col("bits"), 9, 8))))).as("bucket"))
-      for (_ <- 1 to 2) {
-        time("simhash NEW (no persist)") {
-          Dedup.simhashPairs(docs, "doc_id", "text", 3)
-        }
-        time("simhash OLD (persisted)") {
-          val buckets = graft.ops.StageCache.persisted(simhashBuckets)
-          val h1Differs = graft.functions.SketchExpressions
-            .absDiffSum(slice(col("bits_a"), 1, 8), slice(col("bits_b"), 1, 8)) =!= 0
-          buckets.select(col("bucket"), col("id").as("id_a"), col("bits").as("bits_a"))
-            .join(buckets.select(col("bucket"), col("id").as("id_b"),
-              col("bits").as("bits_b")), Seq("bucket"))
-            .filter(col("id_a") < col("id_b"))
-            .filter(!col("bucket").startsWith("h2:") || h1Differs)
-            .select(col("id_a"), col("id_b"),
-              graft.functions.SketchExpressions
-                .absDiffSum(col("bits_a"), col("bits_b")).as("hamming"))
-            .filter(col("hamming") <= 3)
-        }
-      }
-      // minhash one-shot: exchange-reuse-dependent view (r8 shape) vs
-      // persisting ONLY the small (id, band, bucket) frame — the verify
-      // sides stay unpersisted map passes either way. The persisted
-      // shape's cost is one columnar cache build of ~24-byte rows; the
-      // view shape recomputes the k-MD5-per-shingle kernel on BOTH
-      // self-join sides whenever ReusedExchange fails to materialize.
-      for (_ <- 1 to 2) {
-        time("minhash buckets persisted") {
-          val idx = Dedup.minhashIndexView(docs, "doc_id", "text", 2, 16, 8,
-            fastKernel = false)
-          Dedup.minhashPairsFromIndex(
-            Dedup.MinhashIndex(idx.shingles,
-              graft.ops.StageCache.persisted(idx.buckets)), 0.1)
-        }
-        time("minhash unpersisted view") {
-          Dedup.minhashPairsFromIndex(
-            Dedup.minhashIndexView(docs, "doc_id", "text", 2, 16, 8,
-              fastKernel = false), 0.1)
-        }
-      }
-      // sketch-stage-only cost of the two minhash kernels: the bucket
-      // build (shingle -> signature -> bands) with no join/verify —
-      // the number the fast kernel exists to cut
-      for (_ <- 1 to 2) {
-        time("sketch stage k-md5 kernel") {
-          Dedup.minhashIndexView(docs, "doc_id", "text", 2, 16, 8,
-            fastKernel = false).buckets
-        }
-        time("sketch stage fast kernel") {
-          Dedup.minhashIndexView(docs, "doc_id", "text", 2, 16, 8,
-            fastKernel = true).buckets
-        }
-      }
-      // fuzzy decontamination: broadcast-index probe (current — bench
-      // buckets + shingles broadcast, corpus sketched once map-side,
-      // only colliding rows shuffle) vs the general incremental-index
-      // probe it used through r10 (corpus-sized shingle exchange into
-      // the verify join + a second corpus shingling pass deduped only
-      // by best-effort exchange reuse). Bench slice = doc_id % 10 = 0,
-      // the q_fuzzy_decontaminate split.
-      def trainDocs = docs.filter(col("doc_id") % 10 =!= 0)
-      def benchDocs = docs.filter(col("doc_id") % 10 === 0)
-      for (_ <- 1 to 2) {
-        time("fuzzyDecon NEW (bcast index)") {
-          Dedup.minhashPairsBroadcastIndex(
-            Dedup.minhashIndexView(benchDocs, "doc_id", "text", 2, 16, 8,
-              fastKernel = false),
-            trainDocs, "doc_id", "text", 2, 16, 8, 0.1,
-            fastKernel = false)
-        }
-        time("fuzzyDecon OLD (incr probe)") {
-          Dedup.incrementalMinhashPairsFromIndex(
-            Dedup.minhashIndexView(benchDocs, "doc_id", "text", 2, 16, 8,
-              fastKernel = false),
-            Dedup.minhashIndexView(trainDocs, "doc_id", "text", 2, 16, 8,
-              fastKernel = false),
-            0.1)
-        }
-      }
-      // streaming admission micro-batch: default vs fast kernel — the
-      // measured basis for the production recommendation (which kernel
-      // a 100 TB admission stream should run). Mirrors q_stream_admit
-      // exactly: even-id bootstrap batch, odd-id probe batch, threshold
-      // 0.3, fresh index dir per run (the delete + staging appends are
-      // part of the measured cost — the real stream pays them too).
-      // Admitted counts may differ by a few docs between kernels: the
-      // verify is exact Jaccard either way, but the two kernels'
-      // 16-permutation band collisions are different random draws, so
-      // borderline pairs can land in buckets under one and not the
-      // other. That delta is LSH recall noise, not an error.
-      def admitAb(fast: Boolean): DataFrame = {
-        val idxDir = s"/tmp/graft_admit_ab_${if (fast) "fast" else "def"}"
-        val p = new org.apache.hadoop.fs.Path(idxDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-        val a1 = graft.streaming.CorpusStreams.admitBatch(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0), idxDir,
-          "doc_id", "text", fastKernel = fast)
-        val a2 = graft.streaming.CorpusStreams.admitBatch(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1), idxDir,
-          "doc_id", "text", fastKernel = fast)
-        a1.unionByName(a2).select("doc_id")
-      }
-      // OLD (pre-r12) two-pipeline admission shape, reconstructed
-      // inline: within-batch pair self-join + separate incremental
-      // probe + two anti joins — vs the fused admissionDrops pass the
-      // operator now runs. Same staging appends on both arms; the
-      // admitted sets are asserted identical below.
-      def admitAbOld(fast: Boolean): DataFrame = {
-        val idxDir = "/tmp/graft_admit_ab_old"
-        val p = new org.apache.hadoop.fs.Path(idxDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-        def batchOld(batch: DataFrame): DataFrame = {
-          val shPath = s"$idxDir/shingles"; val bkPath = s"$idxDir/buckets"
-          val hasIndex = fs.exists(new org.apache.hadoop.fs.Path(bkPath))
-          val batchIdx = Dedup.minhashIndex(batch, "doc_id", "text",
-            2, 16, 8, fastKernel = fast)
-          val inBatch = Dedup.minhashPairsFromIndex(batchIdx, 0.3)
-            .select(col("id_b").as("doc_id")).distinct()
-          val survivors = batch.join(inBatch, Seq("doc_id"), "left_anti")
-          val admitted =
-            if (!hasIndex) survivors
-            else {
-              val staged = Dedup.MinhashIndex(
-                spark.read.parquet(shPath), spark.read.parquet(bkPath))
-              val hits = Dedup.incrementalMinhashPairsFromIndex(staged,
-                batchIdx, 0.3).select(col("id_a").as("doc_id")).distinct()
-              survivors.join(hits, Seq("doc_id"), "left_anti")
+          for ((label, pf) <- Seq(("1phase", "off"), ("2ph16", "16"))) {
+            stageLog.synchronized(stageLog.clear())
+            spark.conf.set(Dedup.VerifyPrefilterConfKey, pf)
+            time(f"mh $label%s @1000x b$block") {
+              Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1)
             }
-          val out = admitted.localCheckpoint(true)
-          val admIds = out.select(col("doc_id").as("id"))
-          batchIdx.shingles.join(admIds, Seq("id"), "left_semi")
-            .write.mode("append").parquet(shPath)
-          batchIdx.buckets.join(admIds, Seq("id"), "left_semi")
-            .write.mode("append").parquet(bkPath)
-          graft.ops.StageCache.releaseAll()
-          out
-        }
-        val a1 = batchOld(docs.filter(pmod(col("doc_id"), lit(2)) === 0))
-        val a2 = batchOld(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
-        a1.unionByName(a2).select("doc_id")
-      }
-      for (_ <- 1 to 2) {
-        time("streamAdmit NEW (fused drops)") { admitAb(true) }
-        time("streamAdmit OLD (two probes)") { admitAbOld(true) }
-        time("streamAdmit default kernel") { admitAb(false) }
-        time("streamAdmit fast kernel") { admitAb(true) }
-      }
-      if (nameFilter.forall("streamadmit equivalence".contains)) {
-        val n = admitAb(true)
-          .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
-        val o = admitAbOld(true)
-          .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
-        require(n == o, s"fused vs two-probe admitted sets differ: " +
-          s"only-new=${(n -- o).take(5)} only-old=${(o -- n).take(5)}")
-        println(s"[tune] streamAdmit equivalence OK (${n.size} admitted docs)")
-      }
-      // duplicateSpans: the spans frame feeds two subtrees that differ
-      // below their exchanges (digest groupBy vs the probe join), so
-      // exchange reuse CANNOT share the window-digest map pass — it
-      // runs twice by construction. A/B: recompute (current) vs
-      // persisting the compact (id, 16-byte digest) span stream. Both
-      // arms run the operator's OWN spanStream/spanDupCounts helpers,
-      // so a change to its tokenization/window conventions flows into
-      // the harness automatically — only the persist differs.
-      for (_ <- 1 to 2) {
-        time("substr spans persisted") {
-          Dedup.spanDupCounts(graft.ops.StageCache.persisted(
-            Dedup.spanStream(docs, "doc_id", "text", 8)), "doc_id")
-        }
-        time("substr spans recompute") {
-          Dedup.duplicateSpans(docs, "doc_id", "text", 8)
-        }
-      }
-      // docs-only tiers (e.g. /tmp/graft_sf10) carry no events table;
-      // skip the graph experiments instead of failing the whole suite
-      if (!new java.io.File(s"$sfDir/events.parquet").exists) {
-        println(s"[tune] skipping pageRank ab: no $sfDir/events.parquet")
-        spark.stop(); return
-      }
-      val events = spark.read.parquet(s"$sfDir/events.parquet")
-      def edges = events.selectExpr("user_id AS src",
-          "event_id % 150 AS dst", "1 + user_id % 7 AS w")
-      for (_ <- 1 to 2) {
-        time("pageRank NEW (fused ew, no per-iter ckpt)") {
-          graft.ops.Graph.pageRank(edges, "src", "dst", "w", 3)
-        }
-        time("pageRank OLD (per-iter ckpt)") {
-          val e = edges.select(col("src").cast("long").as("__src"),
-              col("dst").cast("long").as("__dst"),
-              col("w").cast("long").as("__w"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val nodes = e.select(col("__src").as("node"))
-            .unionByName(e.select(col("__dst").as("node")))
-            .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-          val n = nodes.count()
-          val scale = 1000000000L
-          val base = (scale * 15L) / (100L * n)
-          val outw = e.groupBy("__src").agg(sum("__w").as("__ow"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          var pr = nodes.withColumn("rank", lit(scale / n))
-          for (_ <- 1 to 3) {
-            val contrib = e.join(outw, "__src")
-              .join(pr.select(col("node").as("__src"), col("rank").as("__pr")),
-                "__src")
-              .select(col("__dst").as("node"),
-                expr("(__pr * __w) DIV __ow").as("__c"))
-              .groupBy("node").agg(sum("__c").as("__S"))
-            pr = nodes.join(contrib, Seq("node"), "left")
-              .select(col("node"), (lit(base) +
-                expr("(85 * coalesce(__S, 0L)) DIV 100")).as("rank"))
-              .localCheckpoint(false)
+            dumpStages(s"$label b$block")
           }
-          pr.count()
-          e.unpersist(); nodes.unpersist(); outw.unpersist()
-          pr
         }
-      }
-      spark.stop(); return
-    }
+        spark.conf.unset(Dedup.VerifyPrefilterConfKey)
 
-    time("minhashPairs") {
-      Dedup.minhashPairs(docs, "doc_id", "text", 2, 16, 8, 0.1,
-        fastKernel = false)
-    }
-    time("incrementalMinhashPairs") {
-      val index = Dedup.minhashIndexView(
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
-        fastKernel = false)
-      Dedup.incrementalMinhashPairs(index,
-        docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-        "doc_id", "text", threshold = 0.1, fastKernel = false)
-    }
-    time("ngramJaccardPairsPruned") {
-      Dedup.ngramJaccardPairsPruned(docs, "doc_id", "text",
-        Seq("lang", "source"), 2, 0.09)
-    }
-    time("ngramJaccardPairs") {
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        Seq("lang", "source"), 2, 0.09)
-    }
-    time("simhashPairs") {
-      Dedup.simhashPairs(docs, "doc_id", "text", 3)
-    }
-    time("duplicateSpans w=8") {
-      Dedup.duplicateSpans(docs, "doc_id", "text", 8)
-    }
-    time("removeDuplicateSpans w=8") {
-      Dedup.removeDuplicateSpans(docs, "doc_id", "text", 8)
+      // ---- carry-vs-rendezvous guard cell at the 10× tier (50k
+      // docs): the bench sf1 tier has no carry arm of its own, so a
+      // uniform session inflation there cannot be told apart from a
+      // small-scale rendezvous regression without this interleaved A/B
+      case "mhrv10" =>
+        ensureDocsTier(spark, sfDir, "/tmp/graft_sf1", 10)
+        val d = spark.read.parquet("/tmp/graft_sf1/documents.parquet")
+        for (block <- 1 to 2) {
+          time(f"mh10 carry b$block")(minhashOnRoute(d, carryRoute))
+          time(f"mh10 rv    b$block")(minhashOnRoute(d, rendezvousRoute))
+        }
+
+      // ---- 30×-tier crossover bracket for the verify size gate: the
+      // 10× cell (1.06M candidates) measured carry 2× ahead, the 100×
+      // cell (10.6M) a slight rv win — this runs the tier between them
+      // so RendezvousMinPairs sits at a measured near-tie, not a guess.
+      case "mhrv30" =>
+        ensureDocsTier(spark, sfDir, "/tmp/graft_sf3", 30)
+        val d = spark.read.parquet("/tmp/graft_sf3/documents.parquet")
+        for (block <- 1 to 2) {
+          time(f"mh30 carry b$block")(minhashOnRoute(d, carryRoute))
+          time(f"mh30 rv    b$block")(minhashOnRoute(d, rendezvousRoute))
+        }
+
+      // ---- rendezvous-vs-carry verify A/B at the 100× and 1000×
+      // tiers (r14): the carry shape's join-1 output owned 36.4 of
+      // 44.3 GB of 1000×-tier shuffle with wall alphas 1.18-1.41
+      // across the third decade; the rendezvous verify ships shingle
+      // arrays once per (group, doc), so the per-pair carry crosses no
+      // exchange at all (DedupSpec plan pin). Interleaved blocks
+      // (carry, rv, carry, rv — each time() is itself min-of-2),
+      // partition counts matched to the r13 cells, stage dumps after
+      // each cell so the carry stage's disappearance is visible, not
+      // inferred.
+      case "mhrv" =>
+        ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
+        ensureTier1000(spark)
+        val tiers = Seq(("100x", 32, "/tmp/graft_sf10/documents.parquet"),
+          ("1000x", 128, "/tmp/graft_sf100/documents.parquet"))
+        for ((tname, p, path) <- tiers) {
+          val d = spark.read.parquet(path)
+          spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+          for (block <- 1 to 2) {
+            stageLog.synchronized(stageLog.clear())
+            time(f"mh carry $tname b$block")(minhashOnRoute(d, carryRoute))
+            dumpStages(s"carry $tname b$block")
+            time(f"mh rv    $tname b$block")(minhashOnRoute(d, rendezvousRoute))
+            dumpStages(s"rv $tname b$block")
+          }
+        }
+
+      // ---- verify-stage shuffle-partition sweep at the 10M-doc tier
+      // (r16 task 2): the r15 fourth-decade cell measured 91.4 GB of
+      // spill at 10M docs / p=256 (2.05× the 5M tier's bytes but 44×
+      // its spill) — per-partition verify payload outgrew the
+      // execution memory per slot. The initial shuffle-partition count
+      // is the per-partition memory cap (AQE coalesces down, never
+      // up), so this sweeps p ∈ {256, 512, 1024} on the production
+      // minhash pipeline at 10M docs, one rep per p (the wall is
+      // disk/spill, not JIT — and a 2-rep sweep would double an ~hour
+      // of runtime for noise this instrument doesn't need).
+      case "spillp" =>
+        ensureDocsTier(spark, sfDir, "/tmp/graft_sf10", 100)
+        ensureTier1000(spark)
+        val t4 = ensureTier4000(spark)
+        val d2000 = spark.read.parquet(s"$t4/documents.parquet")
+          .filter(col("doc_id") < 20000000000L) // first 2 super-copies = 10M
+        def freeGb: Double = new java.io.File("/tmp").getUsableSpace / 1e9
+        for (p <- Seq(256, 512, 1024)) {
+          spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+          println(f"[tune] /tmp free before p=$p: $freeGb%.1f GB")
+          val t0 = System.nanoTime()
+          val s0 = spill.get(); val (w0, r0, g0) =
+            (shWrite.get(), shRead.get(), gcMs.get())
+          try {
+            val n = Dedup.minhashPairs(d2000, "doc_id", "text", 2, 16, 8, 0.1)
+              .count()
+            val t = (System.nanoTime() - t0) / 1e9
+            println(f"[tune] minhash_fast @10M p=$p%-5d ${t}%7.2f s  " +
+              f"$n%9d rows  spill ${(spill.get() - s0) / 1048576}%6d MB  " +
+              f"shW ${(shWrite.get() - w0) / 1048576}%6d MB  " +
+              f"shR ${(shRead.get() - r0) / 1048576}%6d MB  " +
+              f"gc ${(gcMs.get() - g0) / 1000.0}%6.1f s")
+          } catch {
+            case e: Exception =>
+              println(s"[tune] @10M p=$p FAILED: ${e.getMessage.take(200)}")
+          }
+          graft.ops.StageCache.releaseAll()
+          spark.catalog.clearCache()
+          System.gc()
+          println(f"[tune] /tmp free after  p=$p: $freeGb%.1f GB")
+        }
     }
     spark.stop()
   }

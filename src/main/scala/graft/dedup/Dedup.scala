@@ -82,19 +82,16 @@ object Dedup {
     // not a reuse cliff: persisting the span stream instead measured
     // no faster (SCALE.md, "Span dedup persist vs recompute"; the
     // cache build is a full columnar pass over the operator's largest
-    // intermediate). The Tune A/B that re-measures that call re-uses
-    // THESE helpers, differing only in the persist.
+    // intermediate).
     spanDupCounts(spanStream(df, idCol, textCol, w), idCol)
   }
 
   /** The (id, 16-byte window digest) stream behind [[duplicateSpans]]:
     * one row per DISTINCT rolling `w`-token window per doc (plus one
     * null-digest row for sub-`w` docs, so every input id survives the
-    * downstream aggregate). Shared with the Tune persist-vs-recompute
-    * A/B so the harness can never drift from the operator's
-    * tokenization/window conventions.
+    * downstream aggregate).
     */
-  private[graft] def spanStream(df: DataFrame, idCol: String,
+  private def spanStream(df: DataFrame, idCol: String,
       textCol: String, w: Int): DataFrame = {
     // Digests ride the shuffle as raw 16-byte md5s, not 32-char hex:
     // the digest IS the shuffle key for the whole pipeline, so this
@@ -107,7 +104,7 @@ object Dedup {
   }
 
   /** [[duplicateSpans]]' aggregation tail over a [[spanStream]]. */
-  private[graft] def spanDupCounts(spans: DataFrame,
+  private def spanDupCounts(spans: DataFrame,
       idCol: String): DataFrame = {
     // per-digest doc count via groupBy + join-back, NOT a window: the
     // window form has no map-side combine, so one boilerplate digest
@@ -210,7 +207,7 @@ object Dedup {
     * never cross to the oracle comparison, same convention as
     * [[removeDuplicateSpans]]).
     *
-    * Scale shape — MEASURED, not assumed (Tune paraskew, r13): the
+    * Scale shape — MEASURED, not assumed (SCALE.md, Round 13): the
     * winner per digest is a `row_number() == 1` window over
     * (id, pos), because on Spark 3.5+ the rank-limit rewrite
     * (WindowGroupLimit, plan-audited to fire here) collapses hot
@@ -351,11 +348,10 @@ object Dedup {
     * engines WITHOUT the WindowGroupLimit rank-limit rewrite, where a
     * bare window really does sort every hot-key copy in one task. On
     * Spark 3.5+ it is strictly the worse plan (the join-back adds a
-    * text exchange and two jobs; Tune paraskew measured it slower on
-    * both the natural and the hot-key corpus), so the production
-    * operator uses the window; this stays for the A/B and as the
-    * documented fallback shape, the same convention as
-    * `clustersLabelProp`. Output is identical by construction
+    * text exchange and two jobs; the r13 skew A/B measured it slower
+    * on both the natural and the hot-key corpus, SCALE.md Round 13),
+    * so the production operator uses the window; this stays as the
+    * documented fallback shape. Output is identical by construction
     * (min(struct(id, pos)) ≡ row_number 1 ordered by (id, pos);
     * pinned in DedupSpec) — PROVIDED `idCol` is unique per row, the
     * same id-uniqueness convention every dedup operator here assumes:
@@ -485,7 +481,7 @@ object Dedup {
 
   /** The canonical staged/verify form of a raw shingle-set column —
     * public face of the hashed representation for staging writers
-    * (CorpusStreams) and the Tune repr A/B.
+    * (CorpusStreams).
     */
   def hashShingles(c: Column): Column = hashedSh(c)
 
@@ -521,31 +517,24 @@ object Dedup {
     if (isHashedShingles(df.schema("sh").dataType)) sort_array(col("sh"))
     else hashedSh(col("sh"))
 
-  /** Truncated pre-verify representation: the HIGH 32 bits of each
-    * sorted xxhash64 shingle hash, as ints — 4 bytes/element, half the
-    * exact form's exchange bytes. `x >> 32` is monotone over signed
-    * longs, so the projection of the sorted array is ALREADY sorted
-    * (no re-sort) and always fits an int exactly (no ANSI overflow).
-    * Truncation preserves equality, so the merge-walk multiset
-    * intersect over these ints is >= the 64-bit intersect (min is
-    * superadditive over preimage counts), making [[jaccard]] over this
-    * form a sound UPPER BOUND on the exact hashed Jaccard: a pair
-    * below threshold here is definitively below threshold — the
-    * pre-verify drop rule of [[verifyRendezvousThresholded]]. (The
-    * bound's slack is a 32-bit collision between DIFFERENT shingles
-    * of the two sides: ~|A|·|B|/2³² per pair, so false survivors are
-    * ~1 per few thousand verified pairs — they cost a phase-2 exact
-    * check, never a wrong answer.)
-    */
-  private def truncSh(df: DataFrame): Column =
-    transform(verifySh(df), x => shiftright(x, 32).cast("int"))
-
-  /** 16-bit tier of [[truncSh]]: high 16 bits as smallints — a QUARTER
-    * of the exact form's bytes/element. Same monotonicity (`x >> 48`
-    * over sorted signed longs) and the same upper-bound soundness; the
-    * looser bound admits ~|A|·|B|/2¹⁶ expected spurious intersections
-    * per pair (~0.04 at the corpus's measured m≈51) — false survivors
-    * that cost one phase-2 exact check each, never a wrong answer.
+  /** Truncated pre-verify representation: the HIGH 16 bits of each
+    * sorted xxhash64 shingle hash, as smallints — 2 bytes/element, a
+    * QUARTER of the exact form's exchange bytes. `x >> 48` is monotone
+    * over signed longs, so the projection of the sorted array is
+    * ALREADY sorted (no re-sort) and always fits a smallint exactly
+    * (no ANSI overflow). Truncation preserves equality, so the
+    * merge-walk multiset intersect over these values is >= the 64-bit
+    * intersect (min is superadditive over preimage counts), making
+    * [[jaccard]] over this form a sound UPPER BOUND on the exact
+    * hashed Jaccard: a pair below threshold here is definitively below
+    * threshold — the pre-verify drop rule of
+    * [[verifyRendezvousThresholded]]. The bound's slack is a 16-bit
+    * collision between DIFFERENT shingles of the two sides:
+    * ~|A|·|B|/2¹⁶ expected spurious intersections per pair (~0.04 at
+    * the corpus's measured m≈51) — false survivors that cost one
+    * phase-2 exact check each, never a wrong answer. 16 rather than 32
+    * bits: the 32-bit form measured the same wall with 3.6 GB more
+    * shuffle at the 1000× tier (SCALE.md, Round 16).
     */
   private def truncSh16(df: DataFrame): Column =
     transform(verifySh(df), x => shiftright(x, 48).cast("smallint"))
@@ -578,40 +567,14 @@ object Dedup {
     // the kernel runs once PER SIDE. Persisting trades that cliff for
     // one columnar cache build of ~24-byte (id, band, bucket) rows —
     // measured FASTER even when reuse fires (4.3 s vs 5.5 s min-of-2
-    // at the 10× tier, Tune ab) because the cache build also replaces
-    // the double shuffle write. The verify-side shingle recomputes
-    // stay unpersisted map passes (string-array caches cost more than
-    // they save — Tune ab, r8). MinhashPlanSpec pins the single-
-    // sketch-subtree shape so a regression fails CI instead of
+    // at the 10× tier, SCALE.md Round 10) because the cache build also
+    // replaces the double shuffle write. The verify-side shingle
+    // recomputes stay unpersisted map passes (string-array caches cost
+    // more than they save, same section). MinhashPlanSpec pins the
+    // single-sketch-subtree shape so a regression fails CI instead of
     // doubling the 100 TB sketch bill.
     minhashPairsFromIndex(
       oneShotIndex(df, idCol, textCol, n, k, bands, fastKernel), threshold)
-
-  /** [[minhashPairs]] on the array-carry verify ([[verifyCarry]]) —
-    * the Tune A/B twin of the production rendezvous pipeline, stage-
-    * identical to the r13 shape (the unused __bk column prunes out of
-    * the carry's distinct).
-    */
-  private[graft] def minhashPairsCarry(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 2, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.3, fastKernel: Boolean = true): DataFrame = {
-    val idx = oneShotIndex(df, idCol, textCol, n, k, bands, fastKernel)
-    verifyCarry(selfCollisions(idx), idx.shingles, idx.shingles)
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** [[minhashPairs]] with the rendezvous verify FORCED (size gate
-    * off) — the other Tune A/B twin; production [[minhashPairs]]
-    * routes by the measured [[RendezvousMinPairs]] crossover instead.
-    */
-  private[graft] def minhashPairsRendezvous(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 2, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.3, fastKernel: Boolean = true): DataFrame = {
-    val idx = oneShotIndex(df, idCol, textCol, n, k, bands, fastKernel)
-    verifyRendezvous(selfCollisions(idx), idx.shingles, idx.shingles,
-        minPairs = 0L)
-      .filter(col("jaccard") >= threshold)
-  }
 
   /** [[minhashIndexView]] with ONLY the bucket table persisted — the
     * one-shot pipeline shape (see [[minhashPairs]]). StageCache-
@@ -708,9 +671,9 @@ object Dedup {
     * shares [[selfCollisions]] with this but routes through
     * [[verifyRendezvousThresholded]] since r16 — its threshold is
     * what unlocks the pre-verify. Verify shape: [[verifyRendezvous]]
-    * (the r14 production path); the r13-and-earlier array-carry shape
-    * survives as [[verifyCarry]] for the A/B harness and the
-    * equivalence pins.
+    * (the r14 production path), which routes candidate sets below the
+    * [[RendezvousMinPairs]] gate to the array-carry shape
+    * ([[verifyCarry]]).
     */
   private def scoredCandidates(index: MinhashIndex): DataFrame =
     verifyRendezvous(selfCollisions(index), index.shingles, index.shingles)
@@ -787,9 +750,11 @@ object Dedup {
     * persist + count job entirely (the micro-batch admission path).
     */
   /** Candidate-count crossover between the two verify shapes (Tune
-    * mhrv/mhrv10/mhrv30, r14, all interleaved min-of-4): below it the
-    * carry shape wins because AQE keeps its verify joins broadcast-
-    * side and the per-pair arrays never shuffle at all (10×: 1.06M
+    * mhrv/mhrv10/mhrv30, SCALE.md Round 14, all interleaved min-of-4;
+    * the modes time the production pipeline on each side of this
+    * gate): below it the carry shape wins because AQE keeps its
+    * verify joins broadcast-side and the per-pair arrays never shuffle
+    * at all (10×: 1.06M
     * candidates, carry 1.9-2.5 s / 9 MB vs rendezvous 4.3-5.3 s /
     * 180 MB; 30×: 3.2M, 3.6 vs 6.9 s / 28 vs 571 MB); above it the
     * broadcast regime dies and the rendezvous shape wins increasingly
@@ -864,7 +829,7 @@ object Dedup {
     // table picks the measured-faster shape — the small side of the
     // crossover is also the one-shot sf0.1-scale case, so those stay
     // on the broadcast-friendly carry plan.
-    // gate = 0 forces the rendezvous shape (specs, Tune arms).
+    // gate = 0 forces the rendezvous shape (specs, the Tune mhrv cells).
     if (gate > 0 && pairTable.count() < gate)
       return verifyCarryOn(pairTable.select("id_a", "id_b"), docsA, docsB)
     rendezvousScored(pairTable, docsA, docsB, verifySh)
@@ -877,8 +842,9 @@ object Dedup {
     * group. `pairTable` = (id_a, id_b, __rv), unique per pair (the
     * min-__bk agg or a filtered survivor table); `shOf` picks the
     * representation that crosses the group-map exchange — [[verifySh]]
-    * (full sorted xxhash64 longs, the exact phase) or [[truncSh]]
-    * (high-32-bit ints, the pre-verify phase at half the bytes).
+    * (full sorted xxhash64 longs, the exact phase) or [[truncSh16]]
+    * (high-16-bit smallints, the pre-verify phase at a quarter of the
+    * bytes).
     * Returns (id_a, id_b, __rv, sh_a, sh_b), missing-doc pairs
     * dropped. __rv rides through so a filtered survivor set can re-
     * enter this core for the exact phase without recomputing min(__bk).
@@ -940,16 +906,18 @@ object Dedup {
     scored.filter(col("sh_a").isNotNull && col("sh_b").isNotNull)
   }
 
-  /** The r13-and-earlier verify shape: dedupe candidate pairs, then
-    * carry each pair's sh_a array through two per-pair equi-joins.
-    * Correct, but its join-1 output exchanges Θ(pairs × |sh|) array
-    * bytes (36.4 of 44.3 GB at the 1000× tier, r13 mhdiag), rescued
+  /** The array-carry verify: dedupe candidate pairs, then carry each
+    * pair's sh_a array through two per-pair equi-joins. This is the
+    * live route below the [[RendezvousMinPairs]] gate and for the
+    * forced-carry micro-batch path: small candidate sets keep AQE's
+    * verify joins broadcast-side, so the arrays never shuffle. Above
+    * the gate its join-1 output exchanges Θ(pairs × |sh|) array bytes
+    * (36.4 of 44.3 GB at the 1000× tier, SCALE.md Round 13), rescued
     * only partially — and partition-count-sensitively — by SMJ/LZ4
     * run-length adjacency (~194 B/pair at p=32, 343 at p=128; a
     * SHUFFLE_HASH hint that broke the adjacency measured 478 B/pair
-    * and was reverted, SCALE.md r13). Kept for the Tune A/B and the
-    * DedupSpec equivalence pins against [[verifyRendezvous]], the
-    * same convention as `clustersLabelProp` / `paragraphDedupAggJoin`.
+    * and was reverted). Also the reference of the DedupSpec
+    * equivalence pins against [[verifyRendezvous]].
     */
   private[graft] def verifyCarry(collisions: DataFrame,
       docsA: DataFrame, docsB: DataFrame): DataFrame =
@@ -974,12 +942,11 @@ object Dedup {
   /** Session conf selecting the truncated-hash pre-verify inside
     * [[verifyRendezvousThresholded]]'s big-gate path, read at call
     * time: "16" (high-16-bit smallints, quarter bytes — the measured
-    * default), "32"/"true" (high-32-bit ints, half bytes), or
-    * "off"/"false" (one-phase exact verify). Exists so the Tune A/B
-    * can interleave the shapes in one session, and so a corpus whose
-    * LSH candidates are mostly TRUE positives (where phase 2 re-ships
-    * nearly everything and the prefilter only adds a pass) can opt
-    * out without touching call sites.
+    * default) or "off"/"false" (one-phase exact verify). Exists so the
+    * Tune pv1000 A/B can interleave the two shapes in one session, and
+    * so a corpus whose LSH candidates are mostly TRUE positives (where
+    * phase 2 re-ships nearly everything and the prefilter only adds a
+    * pass) can opt out without touching call sites.
     */
   val VerifyPrefilterConfKey: String = "spark.graft.verifyPrefilter"
 
@@ -1007,19 +974,18 @@ object Dedup {
     *
     *  - phase 1 runs the rendezvous core with a truncated form of the
     *    hashes — high-16-bit smallints ([[truncSh16]], a QUARTER of
-    *    the sorted-long form's bytes; the measured default) or
-    *    high-32-bit ints ([[truncSh]], half) per
-    *    [[VerifyPrefilterConfKey]] — and drops every pair whose
+    *    the sorted-long form's bytes) unless [[VerifyPrefilterConfKey]]
+    *    turns the pre-verify off — and drops every pair whose
     *    truncated Jaccard — a sound upper bound on the exact hashed
-    *    Jaccard, see [[truncSh]] — is already below `threshold`;
+    *    Jaccard, see [[truncSh16]] — is already below `threshold`;
     *  - phase 2 re-verifies ONLY the survivors with the full 64-bit
     *    form, re-entering the rendezvous core via the __rv each
     *    survivor kept from phase 1, with the survivor routing table
     *    broadcast below [[PreVerifyBroadcastMaxPairs]] so the corpus
     *    side crosses no exchange at all.
     *
-    * Exchange bytes ≈ 0.5·B + s·B (B = one-phase bytes, s = the
-    * survivor share), so the prefilter pays whenever under ~half of
+    * Exchange bytes ≈ 0.25·B + s·B (B = one-phase bytes, s = the
+    * survivor share), so the prefilter pays whenever under ~3/4 of
     * the LSH candidates are true near-dups — the normal regime: LSH
     * bands are tuned for recall, so candidate precision at the
     * threshold is low. Results are BIT-IDENTICAL either way: phase 1
@@ -1057,14 +1023,12 @@ object Dedup {
         .filter(col("jaccard") >= threshold)
     val prefilter = spark.conf.get(VerifyPrefilterConfKey,
       VerifyPrefilterDefault) match {
-      case "off" | "false" => None
-      case "32" | "true" => Some(truncSh _)
-      case "16" => Some(truncSh16 _)
+      case "off" | "false" => false
+      case "16" => true
       case other => throw new IllegalArgumentException(
-        s"$VerifyPrefilterConfKey must be one of off/false, 32/true, 16; " +
-          s"got '$other'")
+        s"$VerifyPrefilterConfKey must be one of off/false, 16; got '$other'")
     }
-    if (prefilter.isEmpty)
+    if (!prefilter)
       return rendezvousScored(pairTable, docsA, docsB, verifySh)
         .select(col("id_a"), col("id_b"),
           jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
@@ -1075,7 +1039,7 @@ object Dedup {
     // the join spine); it must not recompute the phase-1 group maps
     // per consumer.
     val survivors = graft.ops.StageCache.persisted(
-      rendezvousScored(pairTable, docsA, docsB, prefilter.get)
+      rendezvousScored(pairTable, docsA, docsB, truncSh16)
         .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
         .select("id_a", "id_b", "__rv"))
     // phase 2: exact verify of the survivors, ALWAYS on the rendezvous
@@ -1132,11 +1096,11 @@ object Dedup {
     * unioning their drop sides — but the fused form shares one bucket
     * join, one candidate dedupe and one verify stage where the split
     * form pays each twice (measured 27 → 19 scheduled jobs, −30%, for
-    * the steady-state probe batch at the 10× tier via graft.JobProbe;
-    * the bootstrap batch ties at 17 since it has no staged probe to
-    * fuse. With AQE every exchange is its own scheduled job, and
-    * per-batch fixed cost × batch count is what dominates a continuous
-    * ingest stream — SCALE.md r12).
+    * the steady-state probe batch at the 10× tier; the bootstrap batch
+    * ties at 17 since it has no staged probe to fuse. With AQE every
+    * exchange is its own scheduled job, and per-batch fixed cost ×
+    * batch count is what dominates a continuous ingest stream —
+    * SCALE.md Round 12).
     *
     * `staged = None` is the bootstrap batch (within-batch rule only).
     * Returns distinct batch ids to drop, column `id`.
@@ -1233,7 +1197,7 @@ object Dedup {
     * shingling on both the bucket and the verify branches (the
     * shared subtree is deduped only by best-effort exchange reuse).
     * Measured at the 10×-documents tier: 3.44 s → 1.78 s min-of-2 for
-    * the fuzzy-decontamination pipeline (Tune ab, round 11).
+    * the fuzzy-decontamination pipeline (SCALE.md Round 10 section).
     *
     * Same contract as [[incrementalMinhashPairsFromIndex]]: returns
     * (id_a = corpus id, id_b = index id, jaccard ≥ threshold); corpus
@@ -1250,59 +1214,47 @@ object Dedup {
     *    slower than the incremental fallback at [4.5M corpus × 500k
     *    index] (108.9 vs 55.3 s) and the r13 guard capped index docs
     *    at 100k on that evidence;
-    *  - r13's `Tune fuzzyxo` sweep showed broadcast WINNING at every
-    *    index size through 400k on a 1M-doc corpus (the "interaction
-    *    wall" hypothesis);
-    *  - r14's `Tune fuzzyxo2` re-ran BOTH brackets interleaved on the
-    *    hashed-verify code and the r12 wall is GONE: broadcast wins
+    *  - r13's crossover sweep showed broadcast WINNING at every index
+    *    size through 400k on a 1M-doc corpus (the "interaction wall"
+    *    hypothesis; SCALE.md Round 13);
+    *  - r14 re-ran BOTH brackets interleaved on the hashed-verify code
+    *    (SCALE.md Round 14) and the r12 wall is GONE: broadcast wins
     *    both [1M × 400k] (13.8-28.2 s vs 25.4-49.4 s incremental) and
     *    [4.5M × 500k] (39.2-44.5 s vs 82.3-112.9 s) — the r12 number
     *    was the string-era verify's cost, not a broadcast property,
-    *    and a product gate calibrated on it picked the LOSER at
-    *    bracket B on current code.
-    * The default guard is therefore the ABSOLUTE broadcast-size bound
-    * only: `maxIndexDocs` (default 2M ≈ 0.8 GB of hashed shingle
-    * sets, safely under Spark's 8 GB broadcast limit and a sane
+    *    and a corpus×index product gate calibrated on it picked the
+    *    LOSER at bracket B on current code.
+    * The guard is therefore the ABSOLUTE broadcast-size bound only:
+    * `maxIndexDocs` (default 2M ≈ 0.8 GB of hashed shingle sets,
+    * safely under Spark's 8 GB broadcast limit and a sane
     * driver-collect/per-task-build ceiling; no measured perf wall
-    * below it on this host). `maxProductDocs` (default 0 = OFF) keeps
-    * the corpus×index interaction term available for cluster owners
-    * who measure a wall this host does not show — when > 0, the call
-    * counts the corpus (one job, metadata-served for a bare parquet
-    * scan) and falls back when indexDocs × corpusDocs exceeds it.
-    * ABOVE either bound the call AUTO-FALLS-BACK to the big-vs-big
-    * staged-index probe ([[incrementalMinhashPairsFromIndex]] with
-    * `smallIndex` as the probed corpus — same (id_a=corpus,
-    * id_b=index, jaccard) contract, equivalence pinned in DedupSpec)
-    * instead of require-failing. maxIndexDocs = 0 disables BOTH
-    * checks (always broadcast).
+    * below it on this host). ABOVE it the call AUTO-FALLS-BACK to the
+    * big-vs-big staged-index probe
+    * ([[incrementalMinhashPairsFromIndex]] with `smallIndex` as the
+    * probed corpus — same (id_a=corpus, id_b=index, jaccard) contract,
+    * equivalence pinned in DedupSpec) instead of require-failing.
+    * maxIndexDocs = 0 disables the check (always broadcast).
     */
   def minhashPairsBroadcastIndex(smallIndex: MinhashIndex,
       corpus: DataFrame, idCol: String, textCol: String, n: Int = 2,
       k: Int = 16, bands: Int = 8, threshold: Double = 0.3,
       fastKernel: Boolean = true,
-      maxIndexDocs: Long = 2000000L,
-      maxProductDocs: Long = 0L): DataFrame = {
+      maxIndexDocs: Long = 2000000L): DataFrame = {
     if (maxIndexDocs > 0) {
       val nIdx = smallIndex.shingles.count()
-      val overProduct = maxProductDocs > 0 && {
-        val nCorpus = corpus.count()
-        nIdx * nCorpus > maxProductDocs
-      }
-      if (nIdx > maxIndexDocs || overProduct) {
+      if (nIdx > maxIndexDocs) {
         // big-vs-big fallback: past the broadcast probe's measured
         // economical regime — probe the index as a staged corpus
         // instead (the corpus sketches itself as the delta). Same
         // output contract; the corpus-sized shingle exchange the
         // broadcast shape avoids is exactly the trade that WINS once
         // the per-task broadcast build dominates. ANNOUNCED, because a
-        // silent plan switch poisons cross-tier timing comparisons (a
-        // Tune alpha row mixing the broadcast plan at one tier with
-        // this shape at the next is not one pipeline's exponent).
-        val why = if (nIdx > maxIndexDocs)
-          s"index has $nIdx docs > maxIndexDocs=$maxIndexDocs"
-        else s"index x corpus doc product exceeds maxProductDocs=$maxProductDocs"
-        println(s"[dedup] minhashPairsBroadcastIndex: $why — auto-falling " +
-          "back to the big-vs-big incremental probe plan")
+        // silent plan switch poisons cross-tier timing comparisons (an
+        // alpha row mixing the broadcast plan at one tier with this
+        // shape at the next is not one pipeline's exponent).
+        println(s"[dedup] minhashPairsBroadcastIndex: index has $nIdx " +
+          s"docs > maxIndexDocs=$maxIndexDocs — auto-falling back to " +
+          "the big-vs-big incremental probe plan")
         return incrementalMinhashPairsFromIndex(smallIndex,
           minhashIndexView(corpus, idCol, textCol, n, k, bands, fastKernel),
           threshold)
@@ -1517,7 +1469,7 @@ object Dedup {
   /** Round telemetry for [[clusters]]' distributed path — the
     * 100 TB cost model is rounds × (join + agg + jump), so the round
     * count is the number to pin (DedupSpec) and to record per tier
-    * (Tune cc / SCALE.md). Same pattern as Ann.TrainTelemetry:
+    * (SCALE.md Round 12). Same pattern as Ann.TrainTelemetry:
     * invisible in the physical plan, so a hook counts it.
     */
   private[graft] object ClusterTelemetry {
@@ -1578,89 +1530,11 @@ object Dedup {
         .toDF("id", "cluster")
     }
     // 100 TB route: large-star/small-star edge contraction — measured
-    // (Tune cc, r12) ~2× faster than min-label propagation at the 100×
-    // tier (7.2 vs 15.5 s) with a DIAMETER-INDEPENDENT round count
-    // (6 rounds at both tiers vs 11/16). The label-prop shape stays
-    // below as [[clustersLabelProp]] for the A/B harness and its
-    // regression pins.
+    // (SCALE.md Round 12) ~2× faster than the min-label propagation it
+    // replaced at the 100× tier (7.2 vs 15.5 s) with a
+    // DIAMETER-INDEPENDENT round count (6 rounds at both tiers vs
+    // 11/16).
     starContract(edgePairs, maxIters)
-  }
-
-  /** The r8–r11 distributed route: iterative min-label propagation
-    * with one pointer jump (path halving) per round. Superseded as
-    * [[clusters]]' distributed path by [[starContract]] (measured r12:
-    * label-prop rounds are bound by the min node's eccentricity —
-    * hop-by-hop spread through the edge topology — where star
-    * contraction collapses distances multiplicatively), kept for the
-    * Tune cc A/B and the pointer-jumping regression pin in DedupSpec.
-    */
-  private[graft] def clustersLabelProp(pairs: DataFrame,
-      idA: String = "id_a", idB: String = "id_b",
-      maxIters: Int = 20, jumpsPerRound: Int = 1): DataFrame = {
-    require(jumpsPerRound >= 1, "clusters: jumpsPerRound must be >= 1")
-    val edgePairs = pairs
-      .select(clusterIdOrFail(idA).as("a"), clusterIdOrFail(idB).as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = edgePairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(edgePairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    // ONE action per round: the checkpoint is lazy and materializes
-    // under the sum() job, and convergence is "Σlabel stopped
-    // decreasing" (labels only ever decrease, so equal sums ⟺ no
-    // label moved) — an eager checkpoint + join-diff convergence
-    // check costs ~4 scheduled jobs per round, which dominated the
-    // whole operator at bench scale
-    // The convergence sum runs over decimal(38,0), not long: with
-    // hash-derived 64-bit ids a LongType sum can overflow (ANSI mode
-    // would throw ARITHMETIC_OVERFLOW mid-loop). 38 digits holds
-    // Σ(2^63) over ~10^19 rows — unreachable.
-    var prevSum = Option.empty[java.math.BigDecimal]
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("label"))
-      val m = labels.unionByName(prop)
-        .groupBy("id").agg(min("label").as("label"))
-      // pointer jump (path halving): label := label(label). Every
-      // label IS a member node's id, so the self-join always hits;
-      // labels only decrease, so label2 <= label. Neighbor
-      // propagation alone needs diameter rounds — with the jump the
-      // round count drops to O(log diameter), and rounds (fixed
-      // scheduling + tiny-shuffle latency, ~0.5s each regardless of
-      // data size) are the entire cost of this operator.
-      //
-      // jumpsPerRound > 1 is a MEASURED NEGATIVE (Tune cc, r12): extra
-      // jumps never removed a single round at either tier (11 rounds
-      // at 10×, 16 at 100×, identical for j=1..3) — after the min
-      // aggregate the label map is already so shallow that one jump
-      // flattens it; round count is bound by hop-by-hop min spread
-      // through the edge topology, which jumping cannot shortcut.
-      // They're also not free: each jump references the round frame
-      // twice, doubling the uncheckpointed plan per jump (j=3 measured
-      // 1.5-8× the per-round cost). The knob stays for the A/B
-      // harness; 1 is the measured default.
-      val next = (1 to jumpsPerRound).foldLeft(m) { (cur, _) =>
-        cur.join(cur.select(col("id").as("label"), col("label").as("label2")),
-            "label")
-          .select(col("id"), col("label2").as("label"))
-      }.localCheckpoint(false)
-      val s = next.agg(sum(col("label").cast("decimal(38,0)")))
-        .first().getDecimal(0)
-      converged = prevSum.exists(_.compareTo(s) == 0)
-      prevSum = Some(s)
-      labels = next
-      it += 1
-      ClusterTelemetry.rounds.incrementAndGet()
-    }
-    edges.unpersist()
-    edgePairs.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"clusters did not converge in $maxIters rounds — raise maxIters " +
-        "(components of diameter > 2^maxIters are pathological for near-dup graphs)")
-    labels.select(col("id"), col("label").as("cluster"))
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR edge
@@ -1850,13 +1724,7 @@ object Dedup {
     * GROW), so no qualifying pair loses its collision; the few extra
     * candidates are killed by the exact-Jaccard verify.
     */
-  /** The PPJoin prefix-index frame behind
-    * [[ngramPrefixCandidatesFromShingles]] — (blockCols*, tok, id, sz,
-    * __df, __rn) for every indexed (doc, prefix token). Exposed so the
-    * Tune variance probe can measure the index's per-token join fanout
-    * with the operator's OWN ranking (never a drifting re-implementation).
-    */
-  private[graft] def ngramPrefixIndex(shDf: DataFrame,
+  private[graft] def ngramPrefixCandidatesFromShingles(shDf: DataFrame,
       blockCols: Seq[String], threshold: Double): DataFrame = {
     val inv = shDf
       .select((blockCols.map(col) :+ col("id") :+ size(col("sh")).as("sz") :+
@@ -1866,22 +1734,11 @@ object Dedup {
     // ceil(t·sz) with a safety epsilon: float error must never round
     // the required overlap UP (a longer prefix is merely slower; a
     // shorter one drops pairs)
-    inv.join(freq.filter(col("__df") >= 2), Seq("tok"))
+    val prefix = inv.join(freq.filter(col("__df") >= 2), Seq("tok"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <=
         col("sz") - ceil(col("sz") * threshold - 1e-9) + 1)
-  }
-
-  private[graft] def ngramPrefixCandidatesFromShingles(shDf: DataFrame,
-      blockCols: Seq[String], threshold: Double): DataFrame =
-    candidatePairsFromIndex(ngramPrefixIndex(shDf, blockCols, threshold),
-      blockCols)
-
-  /** The (block, tok) self-join tail shared by every prefix-index
-    * variant: distinct within-block id pairs sharing an indexed token.
-    */
-  private def candidatePairsFromIndex(prefix: DataFrame,
-      blockCols: Seq[String]): DataFrame = {
+    // distinct within-block id pairs sharing an indexed token
     val a = prefix.select(
       (blockCols.map(col) :+ col("tok") :+ col("id").as("id_a")): _*)
     val b = prefix.select(
@@ -1890,109 +1747,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-  }
-
-  /** [[ngramPrefixCandidatesFromShingles]] with the per-doc ranking
-    * WINDOW replaced by a global df-percentile PRECUT — the structural
-    * answer to the measured 100×-tier slope of the exact-rank index
-    * (the pre-rank sort over every df>=2 (doc, token) row is
-    * threshold-independent and sort-bound: 27.8 GB of spill at p=32,
-    * SCALE.md r11).
-    *
-    * Correctness is a strict OVER-approximation of the exact PPJoin
-    * prefix, which the exact-Jaccard verify then reduces to the
-    * identical pair list (DedupSpec pins pairs-equality; the verify
-    * threshold filter is what q_ngram_prefix's oracle hashes):
-    *
-    *  - sort the doc's df>=2 tokens rarest-first; the exact prefix is
-    *    its first min(m, p) tokens (m = df>=2 token count,
-    *    p = |sh| - ceil(t·|sh|) + 1);
-    *  - tokens with df <= D form a PREFIX of that order (df ascending),
-    *    say the first j;
-    *  - if j >= p the first p tokens all have df <= D, so keeping ALL
-    *    the doc's df <= D tokens covers the exact prefix ("good" doc —
-    *    its df > D rows are dropped, no ranking needed);
-    *  - otherwise keep ALL the doc's df >= 2 tokens (trivially covers
-    *    the prefix; docs with m <= p are in this class and lose
-    *    nothing — the exact rank keeps all their tokens too).
-    *
-    * So: no window, no per-doc sort anywhere. The trade is extra
-    * candidates from the over-approximation (killed by the verify) —
-    * bounded, because the dropped rows are exactly the FREQUENT-token
-    * rows of docs that provably don't need them, i.e. the df² blowup
-    * buckets stay capped at D for every doc outside the (small)
-    * fallback class. D is picked on the driver from a df histogram
-    * (distinct-df-value scale — model-parameter sized, like the ANN
-    * pivots): the smallest D keeping `keepPct` of the df>=2 row mass.
-    *
-    * CACHE CONTRACT: registers the df table and the df-joined token
-    * stream in [[graft.ops.StageCache]] (three consumers: the per-doc
-    * count, the kept-rows union's two branches); callers release after
-    * consuming, as with [[minhashPairs]].
-    */
-  private[graft] def ngramPrefixCandidatesPrecut(shDf: DataFrame,
-      blockCols: Seq[String], threshold: Double,
-      keepPct: Double = 0.90): DataFrame = {
-    val inv = shDf
-      .select((blockCols.map(col) :+ col("id") :+ size(col("sh")).as("sz") :+
-        explode(col("sh")).as("tok")): _*)
-    val freq = graft.ops.StageCache.persisted(
-      inv.groupBy("tok").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") >= 2))
-    // driver-side cutoff from the (df value -> token count) histogram;
-    // any D is CORRECT (the fallback class absorbs the rest), so the
-    // collect is a tuning scalar, not a correctness dependency
-    val hist = freq.groupBy("__df").agg(count(lit(1)).as("__n"))
-      .orderBy("__df")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val totalRows = hist.iterator.map { case (df, n) => df * n }.sum
-    var cum = 0L
-    var dCut = hist.lastOption.map(_._1).getOrElse(2L)
-    val it = hist.iterator
-    var found = false
-    while (it.hasNext && !found) {
-      val (df, n) = it.next()
-      cum += df * n
-      if (cum >= keepPct * totalRows) { dCut = df; found = true }
-    }
-    val inv2 = graft.ops.StageCache.persisted(inv.join(freq, Seq("tok")))
-    val low = inv2.filter(col("__df") <= dCut)
-    val high = inv2.filter(col("__df") > dCut)
-    // required overlap p, same safety epsilon as ngramPrefixIndex
-    def pReq(sz: Column): Column = sz - ceil(sz * threshold - 1e-9) + 1
-    // docs whose df<=D token count covers their required prefix: their
-    // df>D rows can be dropped. Computed from the low stream only —
-    // docs with NO df<=D tokens are absent here, land in the fallback
-    // class via the anti join, and keep everything (correct: j = 0 < p)
-    val goodIds = low.groupBy("id")
-      .agg(count(lit(1)).as("__j"), max("sz").as("__sz"))
-      .filter(col("__j") >= pReq(col("__sz")))
-      .select("id")
-    val prefix = low.unionByName(
-      high.join(goodIds, Seq("id"), "left_anti"))
-    candidatePairsFromIndex(prefix, blockCols)
-  }
-
-  /** [[ngramJaccardPairsPruned]] with the precut candidate stage —
-    * identical verified pairs (the exact-Jaccard filter is the same),
-    * no ranking window anywhere in the plan.
-    */
-  def ngramJaccardPairsPrecut(df: DataFrame, idCol: String, textCol: String,
-      blockCols: Seq[String], n: Int = 2, threshold: Double = 0.2,
-      keepPct: Double = 0.90): DataFrame = {
-    require(threshold > 0,
-      "ngramJaccardPairsPrecut prunes by required overlap; threshold must be > 0")
-    val docs = graft.ops.InputLayout.spread(df, col(idCol))
-      .select((blockCols.map(col) :+ col(idCol).as("id") :+
-        shingles(col(textCol), n).as("sh")): _*)
-    ngramPrefixCandidatesPrecut(docs, blockCols, threshold, keepPct)
-      .join(docs.select(col("id").as("id_a"),
-        hashedSh(col("sh")).as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"),
-        hashedSh(col("sh")).as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
   }
 
   /** [[ngramJaccardPairs]] with the PPJoin prefix filter: candidates

@@ -996,7 +996,7 @@ object ExtQueries {
     // in for newline paragraphs on the single-line fixture; winner per
     // digest is a rn==1 window that WindowGroupLimit collapses
     // map-side (measured skew-safe AND cheaper than the agg+join
-    // formulation, Tune paraskew — see Dedup.paragraphDedup) ----
+    // formulation, SCALE.md Round 13 — see Dedup.paragraphDedup) ----
     QueryDef("q_paragraph_dedup",
       Some("""WITH t AS (SELECT doc_id,
                   string_split_regex(trim(text), '\s+') AS toks

@@ -86,13 +86,14 @@ object CorpusStreams {
     //
     // repr=xxh64 (r13) versions the STAGED SHINGLE REPRESENTATION:
     // new indexes stage sorted xxhash64 longs instead of raw shingle
-    // strings. What this buys, measured (Tune repr, 10× tier): probe
-    // EXCHANGES ship the staged longs as-is (the ~3-4× bytes win the
-    // r12 hashed-verify fix measured lives in shuffle format, which
-    // is row-oriented LZ4), and a probe pays no per-batch corpus-side
-    // re-hash of strings it already hashed at admission. What it does
-    // NOT buy: at-rest parquet bytes — dictionary encoding compresses
-    // repeated shingle STRINGS better than incompressible hashes
+    // strings. What this buys, measured (SCALE.md Round 13, 10×
+    // tier): probe EXCHANGES ship the staged longs as-is (the ~3-4×
+    // bytes win the r12 hashed-verify fix measured lives in shuffle
+    // format, which is row-oriented LZ4), and a probe pays no
+    // per-batch corpus-side re-hash of strings it already hashed at
+    // admission. What it does NOT buy: at-rest parquet bytes —
+    // dictionary encoding compresses repeated shingle STRINGS better
+    // than incompressible hashes
     // (measured 4.0 MB str vs 4.5 MB xxh64 at the 10× tier), so the
     // staged footprint is ≈equal, not smaller; the win is probe-side.
     // Both representations verify correctly in-session
@@ -146,9 +147,9 @@ object CorpusStreams {
     // and one verify stage. Per-batch fixed cost is the term a
     // continuous ingest multiplies by batch count: measured 27 → 19
     // scheduled jobs (−30%) for the steady-state probe batch at the
-    // 10× tier (graft.JobProbe; bootstrap ties at 17 — no staged probe
-    // to fuse), identical admitted set and staged index (asserted by
-    // JobProbe and Tune ab admit, SCALE.md r12).
+    // 10× tier (bootstrap ties at 17 — no staged probe to fuse),
+    // identical admitted set and staged index (SCALE.md Round 12; the
+    // forced-carry vs size-gated equivalence is pinned in StreamingSpec).
     val staged =
       if (!hasIndex) None
       else Some(Dedup.MinhashIndex(

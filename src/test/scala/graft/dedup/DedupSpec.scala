@@ -135,38 +135,6 @@ class DedupSpec extends SparkTestBase {
     assert(prefCand >= pruned.size)
   }
 
-  test("precut prefix prune: same pairs as unpruned, no ranking window") {
-    import org.apache.spark.sql.functions.col
-    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val unpruned = key(Dedup.ngramJaccardPairs(
-      real, "doc_id", "text", Seq("lang", "source"), n = 2, threshold = 0.09))
-    val precut = Dedup.ngramJaccardPairsPrecut(
-      real, "doc_id", "text", Seq("lang", "source"), n = 2, threshold = 0.09)
-    assert(key(precut) === unpruned)
-    assert(unpruned.nonEmpty)
-    // structural pin: the precut plan contains NO window operator — the
-    // per-doc ranking sort (the measured 100x slope) is gone entirely
-    val plan = precut.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("Window"),
-      "precut candidates must not contain a ranking window")
-    // candidate bounds: a (possibly equal) superset of the exact-rank
-    // prefix candidates, never more than the any-shared-token set
-    val shDf = real.select(col("lang"), col("source"),
-      col("doc_id").as("id"), Dedup.shingles(col("text"), 2).as("sh"))
-    val exactCand = Dedup.ngramPrefixCandidatesFromShingles(
-      shDf, Seq("lang", "source"), 0.09)
-      .as[(Long, Long)].collect().toSet
-    val precutCand = Dedup.ngramPrefixCandidatesPrecut(
-      shDf, Seq("lang", "source"), 0.09)
-      .as[(Long, Long)].collect().toSet
-    assert(exactCand.subsetOf(precutCand),
-      "precut must over-approximate the exact PPJoin prefix candidates")
-    graft.ops.StageCache.releaseAll()
-  }
-
   test("hashed verify: Jaccard over xxhash64 longs ≡ Jaccard over shingle strings") {
     // the verify joins now exchange sorted xxhash64 arrays instead of
     // raw shingle strings (SCALE.md r12: bytes-per-exchange wall at the
@@ -197,22 +165,6 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.clusters(pairs).orderBy("id")
       .as[(Long, Long)].collect().toSeq
     assert(got === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (7L, 5L)))
-  }
-
-  test("clustersLabelProp: long chain converges in log rounds") {
-    // the legacy distributed route (pre-r12 default, kept for the Tune
-    // cc A/B): a 60-node path needs 59 plain-propagation rounds —
-    // pointer jumping must close it well inside maxIters=20
-    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    Dedup.ClusterTelemetry.reset()
-    val got = Dedup.clustersLabelProp(chain).as[(Long, Long)].collect()
-    assert(got.length === 60 && got.forall(_._2 === 1L))
-    // round-count pin (the distributed path's 100 TB cost model is
-    // rounds x fixed per-round latency): path halving closes a
-    // 60-node chain in ~log2(59) label moves + 1 equal-sum detection
-    // round. A regression to plain neighbor propagation would need 59.
-    val rounds = Dedup.ClusterTelemetry.rounds.get()
-    assert(rounds <= 8, s"pointer jumping regressed: $rounds rounds for a 60-chain")
   }
 
   test("clusters: driver and distributed paths agree") {
@@ -511,9 +463,10 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("paragraphDedup ≡ agg+join harness twin (incl. hot key)") {
-    // the Tune paraskew A/B is only meaningful if the two plans
-    // compute the same function; a shared boilerplate paragraph makes
-    // the winner rule actually contested across docs
+    // the agg+join shape is the documented fallback for engines
+    // without WindowGroupLimit (the r13 skew A/B, SCALE.md Round 13),
+    // so it must compute the same function; a shared boilerplate
+    // paragraph makes the winner rule actually contested across docs
     val rnd = new scala.util.Random(7)
     val vocab = Vector("a", "b", "c", "d")
     val corpus = (1L to 80L).map { i =>
@@ -889,34 +842,35 @@ class DedupSpec extends SparkTestBase {
     assert(rvH === rv)
   }
 
-  test("broadcast probe two-sided gate: the product term alone routes to fallback") {
-    // r14: the r13 fuzzyxo sweep pinned the crossover as a
-    // corpus×index INTERACTION — the gate's second term. With the
-    // absolute index cap slack, a tiny product cap must still pick
-    // the big-vs-big plan (no broadcast hint), and a disabled product
-    // term must keep the broadcast plan; results identical either way.
+  test("broadcast probe gate: broadcasts under maxIndexDocs, falls back over it") {
+    // r14: the index-size bound is the gate's only term (a corpus×index
+    // product term calibrated on string-era numbers picked the loser,
+    // SCALE.md Round 14). An index under a slack cap — including the
+    // default — must keep the broadcast plan, a cap below the index
+    // size must pick the big-vs-big plan; results identical either way.
     val bench = docs.filter($"doc_id" % 2 === 0)
     val probe = docs.filter($"doc_id" % 2 === 1)
     val benchIdx = Dedup.minhashIndexView(bench, "doc_id", "text")
-    def planOf(maxProduct: Long): String =
+    def pairs(maxIndexDocs: Long) =
       Dedup.minhashPairsBroadcastIndex(benchIdx, probe, "doc_id", "text",
-        threshold = 0.1, maxIndexDocs = 1000000L,
-        maxProductDocs = maxProduct)
-        .queryExecution.optimizedPlan.toString
+        threshold = 0.1, maxIndexDocs = maxIndexDocs)
     // marker: in optimizedPlan the broadcast() hint survives as a
     // JoinHint (strategy=broadcast) — ResolvedHint nodes are already
     // eliminated at that stage
+    def planOf(maxIndexDocs: Long): String =
+      pairs(maxIndexDocs).queryExecution.optimizedPlan.toString
     assert(!planOf(1L).contains("strategy=broadcast"),
-      "product cap of 1 must route to the incremental fallback")
-    assert(planOf(0L).contains("strategy=broadcast"),
-      "disabled product term must keep the broadcast plan")
-    def rows(maxProduct: Long): Set[(Long, Long, Double)] =
-      Dedup.minhashPairsBroadcastIndex(benchIdx, probe, "doc_id", "text",
-        threshold = 0.1, maxIndexDocs = 1000000L,
-        maxProductDocs = maxProduct)
-        .as[(Long, Long, Double)].collect().toSet
-    assert(rows(1L) === rows(0L))
-    assert(rows(0L).nonEmpty)
+      "an index over the cap must route to the incremental fallback")
+    assert(planOf(1000000L).contains("strategy=broadcast"),
+      "an index under the cap must keep the broadcast plan")
+    assert(Dedup.minhashPairsBroadcastIndex(benchIdx, probe, "doc_id",
+        "text", threshold = 0.1).queryExecution.optimizedPlan.toString
+      .contains("strategy=broadcast"),
+      "the default cap must keep a fixture-sized index broadcast")
+    def rows(maxIndexDocs: Long): Set[(Long, Long, Double)] =
+      pairs(maxIndexDocs).as[(Long, Long, Double)].collect().toSet
+    assert(rows(1L) === rows(1000000L))
+    assert(rows(1000000L).nonEmpty)
   }
 
   test("paragraphDedupNewline: keep-first over \\n paragraphs incl. empty runs") {
@@ -1078,7 +1032,7 @@ class DedupSpec extends SparkTestBase {
     // the r16 pre-verify's equivalence pin: the thresholded verify
     // must emit EXACTLY the rows of the one-phase verify followed by
     // the threshold filter — per route (forced carry / small gate /
-    // big gate with the prefilter on AND off), per kernel, and at
+    // big gate with the 16-bit prefilter on AND off), per kernel, and at
     // thresholds that both drop and keep pairs on this fixture.
     val corpus = rvFixture
     for (fast <- Seq(true, false); threshold <- Seq(0.1, 0.5, 0.95)) {
@@ -1093,7 +1047,6 @@ class DedupSpec extends SparkTestBase {
           ("forced-carry", Dedup.VerifyForceCarry, "16"),
           ("small-gate", Long.MaxValue, "16"),
           ("big-gate+prefilter16", 0L, "16"),
-          ("big-gate+prefilter32", 0L, "32"),
           ("big-gate one-phase", 0L, "off"))) {
         val got = withSQLConf(Dedup.VerifyPrefilterConfKey -> pf) {
           Dedup.verifyRendezvousThresholded(coll, idx.shingles,
@@ -1126,7 +1079,7 @@ class DedupSpec extends SparkTestBase {
         minPairs = 0L)
       .filter($"jaccard" >= 0.3)
       .as[(Long, Long, Double)].collect().toSet
-    val got = withSQLConf(Dedup.VerifyPrefilterConfKey -> "true") {
+    val got = withSQLConf(Dedup.VerifyPrefilterConfKey -> "16") {
       Dedup.verifyRendezvousThresholded(coll, dIdx.shingles, hIdx.shingles,
           0.3, minPairs = 0L)
         .as[(Long, Long, Double)].collect().toSet
@@ -1137,14 +1090,12 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("verify prefilter conf routes at call time") {
-    // spark.graft.verifyPrefilter is read when the plan is BUILT. Two
-    // independent markers, because the truncation projection hides
-    // inside the persisted survivor stage's cached plan (not printable
-    // from the outer plan string): (1) the two-phase shape registers
-    // TWO StageCache stages (pair table + phase-1 survivors) where the
-    // one-phase shape registers one; (2) the survivor stage's OWN
-    // cached plan — the last registered frame — carries the
-    // shiftright(x, 32) truncation.
+    // spark.graft.verifyPrefilter is read when the plan is BUILT. The
+    // marker is the StageCache registration count, because the
+    // shiftright(x, 48) truncation hides inside the persisted survivor
+    // stage's cached plan (not printable from the outer plan string):
+    // the two-phase shape registers TWO stages (pair table + phase-1
+    // survivors) where the one-phase shape registers one.
     val idx = Dedup.minhashIndexView(rvFixture, "doc_id", "text")
     def registrations(pf: String): Int = {
       graft.ops.StageCache.releaseAll()
@@ -1159,19 +1110,21 @@ class DedupSpec extends SparkTestBase {
     }
     assert(registrations("16") === 2,
       "prefilter 16 must persist pair table AND phase-1 survivors")
-    assert(registrations("32") === 2,
-      "prefilter 32 must persist pair table AND phase-1 survivors")
     assert(registrations("off") === 1,
       "prefilter off must persist only the pair table")
-    // malformed conf fails with the key named, at construction
-    val e = intercept[IllegalArgumentException] {
-      withSQLConf(Dedup.VerifyPrefilterConfKey -> "maybe") {
-        Dedup.verifyRendezvousThresholded(
-          Dedup.selfCollisions(idx), idx.shingles, idx.shingles,
-          0.5, minPairs = 0L)
+    // malformed conf fails with the key named, at construction — and
+    // so do the retired 32-bit tier's values "32" and "true"
+    for (bad <- Seq("maybe", "32", "true")) {
+      val e = intercept[IllegalArgumentException] {
+        withSQLConf(Dedup.VerifyPrefilterConfKey -> bad) {
+          Dedup.verifyRendezvousThresholded(
+            Dedup.selfCollisions(idx), idx.shingles, idx.shingles,
+            0.5, minPairs = 0L)
+        }
       }
+      assert(e.getMessage.contains(Dedup.VerifyPrefilterConfKey), bad)
+      assert(e.getMessage.contains(s"'$bad'"), bad)
     }
-    assert(e.getMessage.contains(Dedup.VerifyPrefilterConfKey))
     graft.ops.StageCache.releaseAll()
   }
 

@@ -64,11 +64,12 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("truncated intersect is a sound upper bound on the long intersect") {
-    // the pre-verify drop rule (Dedup.truncSh): over SORTED long
-    // multisets, the merge-walk intersect of the high-32-bit
-    // truncations is >= the 64-bit walk's count — and the truncated
-    // projection of a sorted long array is itself sorted (x >> 32 is
-    // monotone). Exercised with long values CLUSTERED so truncation
+    // the pre-verify drop rule (Dedup.truncSh16): over SORTED long
+    // multisets, the merge-walk intersect of the high-16-bit (and, for
+    // the int kernel, high-32-bit) truncations is >= the 64-bit walk's
+    // count — and the truncated projection of a sorted long array is
+    // itself sorted (x >> 48 and x >> 32 are monotone). Exercised with
+    // long values CLUSTERED so truncation
     // collisions actually occur (uniform 64-bit randoms would
     // essentially never collide and the bound pin would be vacuous),
     // plus duplicates, since the verify tolerates multiset inputs.

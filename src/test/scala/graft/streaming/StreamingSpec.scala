@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkTestBase {
@@ -281,6 +282,65 @@ class StreamingSpec extends SparkTestBase {
         s"$tmp/stream_idx", "doc_id", "text")
     }
     assert(ie.getMessage.contains("inconsistent"))
+  }
+
+  test("corpus admission: size-gated rendezvous verify admits and stages what the forced carry does") {
+    // admission's default verify is the forced carry (no pair-table
+    // persist, no gate count job per micro-batch); a bulk-backfill
+    // caller passes VerifyUseConf to restore the size gate. With the
+    // gate at 0 that route is the two-phase rendezvous verify, and it
+    // must make the same decisions and leave the same staged index.
+    import spark.implicits._
+    import graft.dedup.Dedup
+    val tmp = java.nio.file.Files.createTempDirectory("admit_routes").toString
+    // 12 near-dup cliques (a base, its exact copy, two one-token
+    // edits) plus 24 unique docs, split by id parity into two
+    // half-batches: batch 1 drops a clique's edit c*100+2 as a
+    // within-batch near-dup of its base when LSH pairs them; batch 2
+    // drops c*100+1 (an exact copy of the staged base) and c*100+3
+    val corpus = ((0 until 12).flatMap { c =>
+      val toks = (0 until 10).map(i => s"w${c}_$i")
+      Seq((c * 100L, toks.mkString(" ")),
+        (c * 100L + 1L, toks.mkString(" ")),
+        (c * 100L + 2L, toks.updated(3, s"x$c").mkString(" ")),
+        (c * 100L + 3L, toks.updated(7, s"y$c").mkString(" ")))
+    } ++ (0 until 24).map(u =>
+      (10000L + u, (0 until 8).map(i => s"u${u}_$i").mkString(" "))))
+      .toDF("doc_id", "text")
+    val halves = Seq(corpus.filter($"doc_id" % 2 === 0),
+      corpus.filter($"doc_id" % 2 === 1))
+    def admitHalves(dir: String)(admit: (DataFrame, String) => DataFrame) =
+      halves.map(b => admit(b, dir).select("doc_id").as[Long].collect().toSet)
+    def staged(dir: String): (Set[Long], Long) = (
+      spark.read.parquet(s"$dir/shingles").select("id").as[Long]
+        .collect().toSet,
+      spark.read.parquet(s"$dir/buckets").count())
+
+    val carry = admitHalves(s"$tmp/carry")(
+      CorpusStreams.admitBatch(_, _, "doc_id", "text"))
+    val gated = withSQLConf(Dedup.RendezvousMinPairsConfKey -> "0") {
+      admitHalves(s"$tmp/gated")(CorpusStreams.admitBatch(_, _, "doc_id",
+        "text", verifyMinPairs = Dedup.VerifyUseConf))
+    }
+    // non-vacuous on both drop rules: every base survives batch 1 and
+    // some edit does not (LSH recall decides which); every exact copy
+    // of a staged base is dropped in batch 2, every unique doc admitted
+    val bases = (0 until 12).map(_ * 100L).toSet
+    assert(bases.subsetOf(carry(0)) && carry(0).size < 36)
+    assert(carry(1) === (1 until 24 by 2).map(10000L + _).toSet)
+    assert(gated === carry)
+    assert(staged(s"$tmp/gated") === staged(s"$tmp/carry"))
+    assert(staged(s"$tmp/carry")._1 === carry.reduce(_ ++ _))
+
+    // the gated run really read the gate conf: a malformed value fails
+    // on that route with the key named (the forced carry never reads it)
+    val e = intercept[IllegalArgumentException] {
+      withSQLConf(Dedup.RendezvousMinPairsConfKey -> "many") {
+        CorpusStreams.admitBatch(halves.head, s"$tmp/bad", "doc_id", "text",
+          verifyMinPairs = Dedup.VerifyUseConf)
+      }
+    }
+    assert(e.getMessage.contains(Dedup.RendezvousMinPairsConfKey))
   }
 
   test("staged index repr: bootstrap stamps repr=xxh64; legacy string dirs keep working") {
