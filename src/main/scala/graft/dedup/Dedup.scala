@@ -18,10 +18,10 @@ import graft.text.TextAnalysis
   *    in any engine — the DuckDB oracle computes the very same buckets.
   *
   * Execution notes (these made a 10×+ difference at sf0.1):
-  *  - signature/sketch stages are persisted before self-joins — Spark
-  *    duplicates the subtree on both join sides and per exploded band
-  *    otherwise, so recomputation is what kills you (at cluster scale
-  *    the same role is played by a checkpoint/staging table);
+  *  - a self-join runs its subtree once per side, so the stages that
+  *    feed one (minhash/simhash buckets, pair tables) are persisted
+  *    where that measured faster than recompute; source overlap and
+  *    the dup matrix are grouped forms with no self-join or persist;
   *  - the md5 kernels (minhash signatures, simhash bits, span window
   *    digests) are native codegen'd expressions in graft.functions,
   *    because higher-order lambdas run interpreted with per-element
@@ -74,15 +74,13 @@ object Dedup {
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
       w: Int): DataFrame = {
     require(w >= 1, s"window w=$w must be >= 1")
-    // The span map pass runs twice per execution of this frame (the
-    // digest groupBy and the probe join differ below their exchanges,
-    // so exchange reuse cannot fire), and a caller's global ORDER BY
-    // adds a third run in its range-sampling job. That is a
-    // deterministic multiple of one cheap single-MD5-per-window pass,
-    // not a reuse cliff: persisting the span stream instead measured
-    // no faster (SCALE.md, "Span dedup persist vs recompute"; the
-    // cache build is a full columnar pass over the operator's largest
-    // intermediate).
+    // The span map pass runs twice per execution of this frame: under
+    // the digest groupBy (the shared digests it keeps are the join-back's
+    // build side) and as the probe side, which differ below their
+    // exchanges. A caller's global ORDER BY adds a third run. A fixed
+    // multiple of one cheap MD5-per-window pass: persisting the span
+    // stream measured no faster (SCALE.md, "Span dedup persist vs
+    // recompute"; the cache build is a full columnar pass).
     spanDupCounts(spanStream(df, idCol, textCol, w), idCol)
   }
 
@@ -111,14 +109,16 @@ object Dedup {
     // shared by 10M docs funnels 10M rows into a single window
     // partition — the exact skew this operator targets. The groupBy
     // partially aggregates the hot digest map-side, and AQE's
-    // skew-join covers the residue.
-    val digCounts = spans.filter(col("__dig").isNotNull)
+    // skew-join covers the residue. The join-back's build side holds
+    // only the digests shared by 2+ docs, not every window.
+    val shared = spans.filter(col("__dig").isNotNull)
       .groupBy("__dig").agg(count(lit(1)).as("__docs"))
+      .filter(col("__docs") >= 2)
     spans
-      .join(digCounts, Seq("__dig"), "left")
+      .join(shared, Seq("__dig"), "left")
       .groupBy(idCol)
       .agg(count(col("__dig")).as("n_spans"),
-        sum(when(col("__docs") >= 2, 1L).otherwise(0L)).as("n_dup_spans"))
+        count(col("__docs")).as("n_dup_spans"))
   }
 
   /** ExactSubstr APPLY step (Lee et al., "Deduplicating Training Data
@@ -1846,52 +1846,52 @@ object Dedup {
       .select("id_a", "id_b", "cont_a_ppm", "cont_b_ppm")
   }
 
-  /** Cross-source exact-duplication matrix: for every source pair, how
-    * many distinct document texts they share — the "which feeds mirror
-    * which" report that decides dedup ORDER (dedupe the mirror against
-    * the canonical source, not vice versa) and flags licensing
-    * problems. Distinct (source, digest) first, so within-source
-    * duplication doesn't inflate the pair counts; only 32-char digests
-    * cross the shuffle, and the digest join's fanout is bounded by the
-    * per-digest source count (≤ number of sources).
-    */
   /** NEAR-dup overlap matrix between sources: shingle-set Jaccard per
     * source pair — [[dupMatrix]]'s fuzzy sibling (exact digests miss
-    * sources that lightly edit what they mirror). Distinct
-    * (source, shingle) first, so per-shingle join fanout is bounded by
-    * the SOURCE count (not document counts) and within-source repeats
-    * never join. Integer-ppm scores; the distinct stream is persisted
-    * so tokenize+explode runs once for sizes and pairs.
+    * sources that lightly edit what they mirror). Per shingle, its
+    * source set (combined map-side) expands into source pairs; the
+    * a = b counts are the sizes, a < b the intersections — no persist,
+    * no self-join, pair space sources². Integer-ppm scores.
     */
   def sourceOverlap(df: DataFrame, textCol: String, sourceCol: String,
       n: Int = 2): DataFrame = {
-    val sh = graft.ops.StageCache.persisted(
+    val pairs = sourcePairCounts(
       graft.ops.InputLayout.spread(df, col(textCol))
         .select(col(sourceCol).as("source"),
-          explode(shingles(col(textCol), n)).as("tok")).distinct())
-    val sizes = sh.groupBy("source").agg(count(lit(1)).as("sz"))
-    sh.select(col("source").as("src_a"), col("tok"))
-      .join(sh.select(col("source").as("src_b"), col("tok")), Seq("tok"))
-      .filter(col("src_a") < col("src_b"))
-      .groupBy("src_a", "src_b")
-      .agg(count(lit(1)).as("inter"))
-      .join(broadcast(sizes.select(col("source").as("src_a"),
-        col("sz").as("sz_a"))), Seq("src_a"))
-      .join(broadcast(sizes.select(col("source").as("src_b"),
-        col("sz").as("sz_b"))), Seq("src_b"))
+          explode(shingles(col(textCol), n)).as("__key")))
+    val sz = broadcast(pairs.filter(col("src_a") === col("src_b")))
+      .drop("src_b")
+    pairs.filter(col("src_a") < col("src_b")).withColumnRenamed("__n", "inter")
+      .join(sz.toDF("src_a", "sz_a"), "src_a")
+      .join(sz.toDF("src_b", "sz_b"), "src_b")
       .withColumn("jac_ppm",
         expr("CAST((1000000 * inter) DIV (sz_a + sz_b - inter) AS BIGINT)"))
       .select("src_a", "src_b", "inter", "jac_ppm")
   }
 
+  /** Cross-source exact-duplication matrix: for every source pair, how
+    * many distinct document texts they share — the "which feeds mirror
+    * which" report that decides dedup ORDER (dedupe the mirror against
+    * the canonical source, not vice versa) and flags licensing
+    * problems. [[sourceOverlap]]'s grouped form keyed by md5(text):
+    * within-source duplicates collapse in the source set and only
+    * 32-char digests cross the shuffle.
+    */
   def dupMatrix(df: DataFrame, textCol: String,
-      sourceCol: String): DataFrame = {
-    val dg = df.select(col(sourceCol).as("source"),
-      md5(col(textCol)).as("__digest")).distinct()
-    dg.select(col("source").as("src_a"), col("__digest"))
-      .join(dg.select(col("source").as("src_b"), col("__digest")), Seq("__digest"))
-      .filter(col("src_a") < col("src_b"))
-      .groupBy("src_a", "src_b")
-      .agg(count(lit(1)).as("n_shared"))
+      sourceCol: String): DataFrame =
+    sourcePairCounts(df.select(col(sourceCol).as("source"),
+        md5(col(textCol)).as("__key")))
+      .filter(col("src_a") < col("src_b")).withColumnRenamed("__n", "n_shared")
+
+  /** Per source pair (src_a <= src_b), `__n` = the distinct non-null
+    * `__key`s both hold; null sources pair with nothing. */
+  private def sourcePairCounts(keyed: DataFrame): DataFrame = {
+    val srcs = col("__srcs")
+    keyed.filter(col("__key").isNotNull)
+      .groupBy("__key").agg(sort_array(collect_set(col("source"))).as("__srcs"))
+      .select(srcs, posexplode(srcs).as(Seq("__i", "src_a")))
+      .select(col("src_a"), explode(
+        slice(srcs, col("__i") + 1, size(srcs) - col("__i"))).as("src_b"))
+      .groupBy("src_a", "src_b").agg(count(lit(1)).as("__n"))
   }
 }

@@ -244,8 +244,8 @@ object AuditQueries {
       }),
 
     // near-dup overlap matrix BETWEEN sources: shingle-set Jaccard per
-    // source pair — q_dup_matrix's fuzzy sibling. Distinct
-    // (source, shingle) bounds per-shingle fanout by the source count
+    // source pair — q_dup_matrix's fuzzy sibling. Each shingle's source
+    // set bounds its pair fanout by the source count
     QueryDef("q_source_overlap",
       Some("""WITH b AS (SELECT source,
                   list_sort(list_distinct(CASE WHEN len(toks) >= 2 THEN

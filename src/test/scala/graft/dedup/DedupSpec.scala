@@ -330,6 +330,107 @@ class DedupSpec extends SparkTestBase {
     assert(got === Seq((1L, 49993L, 0L)))
   }
 
+  // The all-digest LEFT-join tail duplicateSpans had before its
+  // join-back kept only the shared digests, kept as its reference: the
+  // same span stream, every digest's doc count on the build side.
+  private def allDigestSpans(df: org.apache.spark.sql.DataFrame,
+      w: Int): org.apache.spark.sql.DataFrame = {
+    val spans = df.select(col("doc_id"), explode_outer(
+      SketchExpressions.windowDigests(split(trim(col("text")),
+        "[ \\t\\n\\r\\f]+"), w, distinct = true)).as("__dig"))
+    val digCounts = spans.filter(col("__dig").isNotNull)
+      .groupBy("__dig").agg(count(lit(1)).as("__docs"))
+    spans.join(digCounts, Seq("__dig"), "left")
+      .groupBy("doc_id")
+      .agg(count(col("__dig")).as("n_spans"),
+        sum(when(col("__docs") >= 2, 1L).otherwise(0L)).as("n_dup_spans"))
+  }
+
+  test("duplicateSpans ≡ the all-digest left-join tail: none, all and sub-w shared") {
+    def corpus(texts: Seq[String]) = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    // no window shared: every token unique across the corpus
+    val none = corpus((0 until 6).map(d =>
+      (0 until 9).map(i => s"d${d}t$i").mkString(" ")))
+    // every window shared: each text appears in two docs, one with
+    // extra whitespace (same tokens, same windows)
+    val base = (0 until 4).map(d => (0 until 7).map(i => s"a${d}b$i").mkString(" "))
+    val all = corpus(base ++ base.map(t => "  " + t.replace(" ", "\t ")))
+    // every doc shorter than w
+    val subW = corpus(Seq(null, "", "   ", "a b c", "a b c", "x"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
+    for ((name, df) <- Seq("none" -> none, "all" -> all, "sub-w" -> subW)) {
+      val got = rows(Dedup.duplicateSpans(df, "doc_id", "text", w = 4))
+      assert(got === rows(allDigestSpans(df, 4)), name)
+    }
+    // the corpora reach the cases they are named for
+    val n = rows(Dedup.duplicateSpans(none, "doc_id", "text", w = 4))
+    assert(n.forall(r => r._2 == 6L && r._3 == 0L))
+    val a = rows(Dedup.duplicateSpans(all, "doc_id", "text", w = 4))
+    assert(a.size == 8 && a.forall(r => r._2 == 4L && r._3 == 4L))
+    val s = rows(Dedup.duplicateSpans(subW, "doc_id", "text", w = 4))
+    assert(s.size == 6 && s.forall(r => r._2 == 0L && r._3 == 0L))
+  }
+
+  test("duplicateSpans: the join-back builds only the digests held by 2+ docs") {
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def sharedFilter(p: SparkPlan) = nodes(p).exists {
+      case f: FilterExec =>
+        f.condition.references.exists(_.name == "__docs") &&
+          f.condition.sql.contains(">= 2")
+      case _ => false
+    }
+    // adaptive (the final plan after the action) and static, broadcast
+    // and sort-merge: the build side sits under the filter in each
+    for ((aqe, bhj) <- Seq(("true", "10485760"), ("false", "-1"))) {
+      withSQLConf("spark.sql.adaptive.enabled" -> aqe,
+          "spark.sql.autoBroadcastJoinThreshold" -> bhj) {
+        val out = Dedup.duplicateSpans(docs, "doc_id", "text", w = 4)
+        out.collect()
+        val joins = nodes(out.queryExecution.executedPlan).collect {
+          case j: BaseJoinExec if j.joinType == LeftOuter => j
+        }
+        assert(joins.size === 1, s"aqe=$aqe")
+        val j = joins.head
+        j match {
+          case h: HashJoin => assert(h.buildSide === BuildRight, s"aqe=$aqe")
+          case _ =>
+        }
+        assert(sharedFilter(j.right), s"aqe=$aqe: build side not filtered\n$j")
+        assert(!sharedFilter(j.left), s"aqe=$aqe: probe side filtered\n$j")
+      }
+    }
+  }
+
+  test("empty input: duplicateSpans, sourceOverlap, dupMatrix give zero typed rows") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    val cases = Seq(
+      Dedup.duplicateSpans(empty, "doc_id", "text", w = 4) -> Seq(
+        "doc_id" -> LongType, "n_spans" -> LongType, "n_dup_spans" -> LongType),
+      Dedup.sourceOverlap(empty, "text", "source") -> Seq(
+        "src_a" -> StringType, "src_b" -> StringType,
+        "inter" -> LongType, "jac_ppm" -> LongType),
+      Dedup.dupMatrix(empty, "text", "source") -> Seq(
+        "src_a" -> StringType, "src_b" -> StringType, "n_shared" -> LongType))
+    for ((df, schema) <- cases) {
+      assert(shape(df) === schema)
+      assert(df.collect().isEmpty, schema.map(_._1).mkString(","))
+    }
+  }
+
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -749,6 +850,90 @@ class DedupSpec extends SparkTestBase {
       .orderBy("src_a", "src_b")
       .as[(String, String, Long)].collect().toSeq
     assert(m === Seq(("s1", "s2", 2L), ("s1", "s3", 1L), ("s2", "s3", 1L)))
+  }
+
+  // The distinct + self-join forms sourceOverlap and dupMatrix ran
+  // before both became one grouped count of the sources sharing a key,
+  // kept as their references (the old persist changes no row).
+  private def selfJoinOverlap(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val sh = df.select(col("source"),
+      explode(Dedup.shingles(col("text"), 2)).as("tok")).distinct()
+    val sizes = sh.groupBy("source").agg(count(lit(1)).as("sz"))
+    sh.select(col("source").as("src_a"), col("tok"))
+      .join(sh.select(col("source").as("src_b"), col("tok")), Seq("tok"))
+      .filter(col("src_a") < col("src_b"))
+      .groupBy("src_a", "src_b").agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("source").as("src_a"), col("sz").as("sz_a")),
+        Seq("src_a"))
+      .join(sizes.select(col("source").as("src_b"), col("sz").as("sz_b")),
+        Seq("src_b"))
+      .withColumn("jac_ppm",
+        expr("CAST((1000000 * inter) DIV (sz_a + sz_b - inter) AS BIGINT)"))
+      .select("src_a", "src_b", "inter", "jac_ppm")
+  }
+
+  private def selfJoinDupMatrix(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val dg = df.select(col("source"), md5(col("text")).as("__digest"))
+      .distinct()
+    dg.select(col("source").as("src_a"), col("__digest"))
+      .join(dg.select(col("source").as("src_b"), col("__digest")),
+        Seq("__digest"))
+      .filter(col("src_a") < col("src_b"))
+      .groupBy("src_a", "src_b").agg(count(lit(1)).as("n_shared"))
+  }
+
+  // Seeded corpus: null sources, null/empty/space-only/one-token texts,
+  // texts repeated within and across sources, source names whose string
+  // order differs from their number order ("s10" < "s2").
+  private def overlapCorpus(seed: Long, nSources: Int,
+      nDocs: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val odd = Seq(null, "", " ", "   ", "solo", "w1")
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (_ <- 0 until nDocs) texts += (rnd.nextInt(10) match {
+      case 0 => odd(rnd.nextInt(odd.size))
+      case 1 | 2 if texts.nonEmpty => texts(rnd.nextInt(texts.size))
+      case _ => Seq.fill(2 + rnd.nextInt(6))(s"w${rnd.nextInt(14)}")
+        .mkString(" ")
+    })
+    texts.toSeq.map { t =>
+      (if (rnd.nextInt(8) == 0) null else s"s${rnd.nextInt(nSources)}", t)
+    }.toDF("source", "text")
+  }
+
+  test("sourceOverlap and dupMatrix ≡ the distinct + self-join forms on seeded corpora") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    for (seed <- 1L to 3L; nSources <- Seq(1, 3, 24)) {
+      val df = overlapCorpus(seed * 1000 + nSources, nSources, 300)
+      val ctx = s"seed=$seed sources=$nSources"
+      seen ++= df.as[(String, String)].collect()
+      val registered0 = graft.ops.StageCache.registeredCount
+      val ov = Dedup.sourceOverlap(df, "text", "source")
+        .as[(String, String, Long, Long)].collect().sorted.toSeq
+      assert(graft.ops.StageCache.registeredCount === registered0,
+        s"$ctx: sourceOverlap registered a persisted stage")
+      assert(ov === selfJoinOverlap(df)
+        .as[(String, String, Long, Long)].collect().sorted.toSeq, ctx)
+      val dm = Dedup.dupMatrix(df, "text", "source")
+        .as[(String, String, Long)].collect().sorted.toSeq
+      assert(dm === selfJoinDupMatrix(df)
+        .as[(String, String, Long)].collect().sorted.toSeq, ctx)
+      // the corpus reaches the cases it claims
+      if (nSources == 1) assert(ov.isEmpty && dm.isEmpty, ctx)
+      else assert(ov.nonEmpty && dm.nonEmpty, ctx)
+      if (nSources == 24) {
+        assert(ov.map(_._1).toSet.size >= 20, ctx)
+        assert(ov.exists(r => r._1 == "s10" && r._2 == "s2"), ctx)
+      }
+    }
+    // and the corpora hold the hostile rows they claim
+    for (t <- Seq(null, "", "   ", "solo"))
+      assert(seen.exists(_._2 == t), s"no text '$t'")
+    assert(seen.exists(_._1 == null), "no null source")
+    assert(seen.filter(_._2 != null).groupBy(identity).exists(_._2.size > 1),
+      "no repeated (source, text)")
   }
 
   test("sub-n-token docs never pair: no all-null-signature bucket collisions") {
