@@ -110,12 +110,19 @@ object Dedup {
     // partition — the exact skew this operator targets. The groupBy
     // partially aggregates the hot digest map-side, and AQE's
     // skew-join covers the residue. The join-back's build side holds
-    // only the digests shared by 2+ docs, not every window.
+    // only the digests shared by 2+ docs, keyed by their xxhash64: a
+    // long key builds a compact LongHashedRelation where a binary key's
+    // map pins a whole 32 MB page until the ContextCleaner frees it.
+    // The digest check stays exact as a residual condition (coalesce
+    // keeps Catalyst from lifting it into the key).
     val shared = spans.filter(col("__dig").isNotNull)
       .groupBy("__dig").agg(count(lit(1)).as("__docs"))
       .filter(col("__docs") >= 2)
+      .select(xxhash64(col("__dig")).as("__h"), col("__dig").as("__sdig"),
+        col("__docs"))
     spans
-      .join(shared, Seq("__dig"), "left")
+      .join(shared, xxhash64(col("__dig")) === col("__h") &&
+        coalesce(col("__dig") === col("__sdig"), lit(false)), "left")
       .groupBy(idCol)
       .agg(count(col("__dig")).as("n_spans"),
         count(col("__docs")).as("n_dup_spans"))
@@ -1848,10 +1855,11 @@ object Dedup {
 
   /** NEAR-dup overlap matrix between sources: shingle-set Jaccard per
     * source pair — [[dupMatrix]]'s fuzzy sibling (exact digests miss
-    * sources that lightly edit what they mirror). Per shingle, its
-    * source set (combined map-side) expands into source pairs; the
-    * a = b counts are the sizes, a < b the intersections — no persist,
-    * no self-join, pair space sources². Integer-ppm scores.
+    * sources that lightly edit what they mirror), in integer ppm. Per
+    * shingle, its source set (combined map-side) expands into source
+    * pairs: a < b counts are the intersections, a = b the sizes, read by
+    * one window per side (a broadcast relation would pin a 32 MB page
+    * until the ContextCleaner runs). No persist, join or broadcast.
     */
   def sourceOverlap(df: DataFrame, textCol: String, sourceCol: String,
       n: Int = 2): DataFrame = {
@@ -1859,11 +1867,10 @@ object Dedup {
       graft.ops.InputLayout.spread(df, col(textCol))
         .select(col(sourceCol).as("source"),
           explode(shingles(col(textCol), n)).as("__key")))
-    val sz = broadcast(pairs.filter(col("src_a") === col("src_b")))
-      .drop("src_b")
-    pairs.filter(col("src_a") < col("src_b")).withColumnRenamed("__n", "inter")
-      .join(sz.toDF("src_a", "sz_a"), "src_a")
-      .join(sz.toDF("src_b", "sz_b"), "src_b")
+    val self = when(col("src_a") === col("src_b"), col("__n"))
+    pairs.withColumn("sz_a", max(self).over(Window.partitionBy("src_a")))
+      .withColumn("sz_b", max(self).over(Window.partitionBy("src_b")))
+      .filter(col("src_a") < col("src_b")).withColumnRenamed("__n", "inter")
       .withColumn("jac_ppm",
         expr("CAST((1000000 * inter) DIV (sz_a + sz_b - inter) AS BIGINT)"))
       .select("src_a", "src_b", "inter", "jac_ppm")

@@ -373,17 +373,24 @@ class DedupSpec extends SparkTestBase {
     assert(s.size == 6 && s.forall(r => r._2 == 0L && r._3 == 0L))
   }
 
-  test("duplicateSpans: the join-back builds only the digests held by 2+ docs") {
-    import org.apache.spark.sql.catalyst.plans.LeftOuter
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+  /** Every operator of an executed plan, inside AQE's final plan and
+    * its query stages. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.catalyst.optimizer.BuildRight
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
       case _ => p +: p.children.flatMap(nodes)
     }
+  }
+
+  test("duplicateSpans: the join-back builds only the digests held by 2+ docs") {
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin}
+    import org.apache.spark.sql.types.LongType
     def sharedFilter(p: SparkPlan) = nodes(p).exists {
       case f: FilterExec =>
         f.condition.references.exists(_.name == "__docs") &&
@@ -408,6 +415,10 @@ class DedupSpec extends SparkTestBase {
         }
         assert(sharedFilter(j.right), s"aqe=$aqe: build side not filtered\n$j")
         assert(!sharedFilter(j.left), s"aqe=$aqe: probe side filtered\n$j")
+        // one long key (the digest's hash), the digest equality residual
+        assert(j.leftKeys.map(_.dataType) === Seq(LongType), s"aqe=$aqe\n$j")
+        assert(j.condition.exists(c => c.references.map(_.name).toSet ===
+          Set("__dig", "__sdig")), s"aqe=$aqe: no digest check\n$j")
       }
     }
   }
@@ -934,6 +945,18 @@ class DedupSpec extends SparkTestBase {
     assert(seen.exists(_._1 == null), "no null source")
     assert(seen.filter(_._2 != null).groupBy(identity).exists(_._2.size > 1),
       "no repeated (source, text)")
+  }
+
+  test("sourceOverlap: sizes come from windows, no join and no broadcast") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val out = Dedup.sourceOverlap(overlapCorpus(7L, 5, 200), "text", "source")
+    assert(out.collect().nonEmpty)
+    val plan = nodes(out.queryExecution.executedPlan)
+    assert(!plan.exists(p => p.isInstanceOf[BaseJoinExec] ||
+      p.isInstanceOf[BroadcastExchangeLike]), plan.mkString("\n"))
+    assert(plan.count(_.isInstanceOf[WindowExec]) === 2)
   }
 
   test("sub-n-token docs never pair: no all-null-signature bucket collisions") {
