@@ -17,6 +17,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `SparkSession.builder()` that reuses an already-running context is
   * silently ignored by Spark; in that situation use the imperative
   * [[graft.functions.Registry.registerAll]] instead.
+  *
+  * The global-sort rule [[graft.plans.OneTaskSortRule]] is not injected
+  * here: it reaches every session, with or without this conf, through
+  * [[graft.plans.GraftSortExtensionsProvider]], which Spark's
+  * `ServiceLoader` finds in META-INF/services. Injecting it here too
+  * would run it twice per plan.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

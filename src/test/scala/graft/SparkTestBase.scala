@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,6 +38,37 @@ abstract class SparkTestBase extends AnyFunSuite {
     finally priors.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None)    => conf.unset(k)
+    }
+  }
+
+  /** Spark jobs that `body` starts on this thread. Listener delivery is
+    * asynchronous but in post order, so once a sentinel job started
+    * after `body` has been delivered, every job of `body` has been.
+    */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID}"
+    val n = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`tag`) => n.incrementAndGet()
+          case Some(g) if g == s"$tag-sentinel" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(tag, "counted")
+      body
+      sc.setJobGroup(s"$tag-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never delivered")
+      n.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
     }
   }
 }

@@ -1,8 +1,7 @@
 package graft.queries
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, Executors}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -11,7 +10,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -25,37 +23,6 @@ class TablesSpec extends SparkTestBase {
 
   private def tmpDir(): String =
     Files.createTempDirectory("tables-spec").toString
-
-  /** Spark jobs that `body` starts on this thread. Listener delivery is
-    * asynchronous but in post order, so once a sentinel job started
-    * after `body` has been delivered, every job of `body` has been.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"tables-spec-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`tag`) => n.incrementAndGet()
-          case Some(g) if g == s"$tag-sentinel" => sentinel.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(tag, "counted")
-      body
-      sc.setJobGroup(s"$tag-sentinel", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never delivered")
-      n.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
 
   test("pinned schema and rows equal a fresh inference for every fixture table") {
     for (name <- fixtures) {
