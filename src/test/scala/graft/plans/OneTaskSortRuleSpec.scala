@@ -6,8 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{Column, DataFrame, GraftTestShim, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, GraftExecShim,
-  InputAdapter, OneTaskRangeExchangeExec, SortExec, SparkPlan,
-  TakeOrderedAndProjectExec}
+  InputAdapter, SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
   ShuffleExchangeExec, ShuffleExchangeLike}
@@ -17,28 +16,32 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.{SparkEntry, SparkTestBase}
 
-/** [[OneTaskSortRule]]: a global sort over a one-partition input sorts
-  * in place, a one-task map side goes to one reducer, and everything
-  * else keeps Spark's sampled range exchange, with rows and order as
-  * Spark's plan gives them.
+/** [[OneTaskSortRule]]: a global sort over a narrow, small,
+  * one-partition input sorts in place, and everything else keeps
+  * Spark's sampled range exchange, with rows and order as Spark's plan
+  * gives them.
   *
   * Mutants this spec kills: "at most 2 leaf partitions count as one"
-  * (the two-split input sorts in place) and "no narrow check" (a
-  * post-shuffle input sorts in place: two jobs fewer, not one).
+  * (the two-split input sorts in place), "no narrow check" (a
+  * post-shuffle input sorts in place), "no fan-out check" (an explode
+  * sorts inside the scan task), "no byte guard" (an input over the
+  * advisory size sorts in place) and "size a scan by its read RDD"
+  * (`explain` builds the Parquet reader, which creates a broadcast).
   */
 class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private lazy val dir = Files.createTempDirectory("one-task-sort").toString
 
   /** k with nulls and ties, unique id, seq in write order; one file. */
-  private lazy val single: DataFrame = {
+  private lazy val singlePath: String = {
     val path = s"$dir/single.parquet"
     spark.range(0, 400, 1, 1).selectExpr(
         "CASE WHEN id % 17 = 0 THEN NULL ELSE id % 5 END AS k",
         "(id * 7919) % 401 AS u", "id AS seq")
       .write.parquet(path)
-    spark.read.parquet(path)
+    path
   }
+  private lazy val single: DataFrame = spark.read.parquet(singlePath)
 
   private def finalPlan(df: DataFrame): SparkPlan = {
     df.collect()
@@ -86,36 +89,44 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val inPlace = single.orderBy(ord)
       assert(sortedInPlace(finalPlan(inPlace)))
       assert(inPlace.collect().toSeq === spark0(inPlace), ord)
-      val viaReducer = single.groupBy("k", "seq").count().orderBy(ord)
-      val ex = rangeExchanges(finalPlan(viaReducer))
-      assert(ex.map(_.getClass) === Seq(classOf[OneTaskRangeExchangeExec]))
-      assert(ex.head.numMappers === 1)
-      assert(viaReducer.collect().toSeq === spark0(viaReducer), ord)
     }
   }
 
-  test("every ordering through one reducer equals the reference") {
-    val post = single.groupBy("k", "u").agg(max("seq").as("seq"))
-    for ((name, ord) <- orderings) {
-      val df = post.orderBy(ord: _*)
-      val ex = rangeExchanges(finalPlan(df))
-      assert(ex.size === 1 && ex.head.isInstanceOf[OneTaskRangeExchangeExec], name)
-      assert(ex.head.numMappers === 1, name)
-      assert(df.collect().toSeq === post.repartition(3).orderBy(ord: _*).collect().toSeq, name)
-    }
-  }
+  /** Spark's own shape for a global sort, which the rule leaves alone:
+    * a user range repartition samples, shuffles and sorts within
+    * partitions.
+    */
+  private def sparkShape(df: DataFrame, key: String): DataFrame =
+    df.repartitionByRange(spark.conf.get("spark.sql.shuffle.partitions").toInt, col(key))
+      .sortWithinPartitions(key)
 
-  test("a post-shuffle input with a one-task map side starts exactly one job fewer") {
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  test("a post-shuffle input keeps the sampled range exchange") {
     val post = single.groupBy("k").agg(count(lit(1)).as("n"))
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-    // Spark's own shape for a global sort: a user range repartition
-    // samples, shuffles and sorts within partitions
-    val spark0 = jobsStartedBy(run(post.repartitionByRange(n, col("k")).sortWithinPartitions("k")))
-    val ruled = jobsStartedBy(run(post.orderBy("k")))
-    assert(ruled === spark0 - 1)
-    assert(post.orderBy("k").collect().toSeq ===
-      post.repartitionByRange(n, col("k")).sortWithinPartitions("k").collect().toSeq)
+    assert(jobsStartedBy(noop(post.orderBy("k"))) === jobsStartedBy(noop(sparkShape(post, "k"))))
+    val p = finalPlan(post.orderBy("k"))
+    assert(!sortedInPlace(p) && rangeExchanges(p).size === 1)
+    assert(post.orderBy("k").collect().toSeq === sparkShape(post, "k").collect().toSeq)
+  }
+
+  test("an explode between the scan and the sort keeps the sampled range exchange") {
+    val exploded = single.select(explode(sequence(lit(1L), col("u") % 7 + 1)).as("x"), col("seq"))
+    val p = finalPlan(exploded.orderBy("x", "seq"))
+    assert(!sortedInPlace(p) && rangeExchanges(p).size === 1)
+    assert(exploded.orderBy("x", "seq").collect().toSeq ===
+      exploded.repartition(3).orderBy("x", "seq").collect().toSeq)
+  }
+
+  test("a one-split input over the advisory partition size keeps the sampled range exchange") {
+    withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k") {
+      val p = finalPlan(single.orderBy("u"))
+      assert(!sortedInPlace(p))
+      assert(rangeExchanges(p).map(_.numMappers) === Seq(1))
+      assert(jobsStartedBy(noop(single.orderBy("u"))) === jobsStartedBy(noop(sparkShape(single, "u"))))
+    }
+    // the same input under the default advisory size sorts in place
+    assert(sortedInPlace(finalPlan(single.orderBy("u"))))
   }
 
   test("a multi-task map side keeps a sampled range exchange") {
@@ -123,10 +134,7 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val path = s"$dir/two.parquet"
     spark.range(0, 100, 1, 2).selectExpr("(id * 37) % 101 AS u").write.parquet(path)
     val two = spark.read.parquet(path)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-    assert(jobsStartedBy(run(two.orderBy("u"))) ===
-      jobsStartedBy(run(two.repartitionByRange(n, col("u")).sortWithinPartitions("u"))))
+    assert(jobsStartedBy(noop(two.orderBy("u"))) === jobsStartedBy(noop(sparkShape(two, "u"))))
     val p = finalPlan(two.orderBy("u"))
     assert(!sortedInPlace(p))
     assert(rangeExchanges(p).map(_.numMappers) === Seq(2))
@@ -144,7 +152,7 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val p = finalPlan(SparkEntry.queries("q_substr_dedup")(spark, sf))
       val top = collectFirst(p) { case s: SortExec if s.global => s.child }
       val ex = top.toSeq.flatMap(rangeExchanges)
-      assert(ex.map(_.getClass) === Seq(classOf[OneTaskRangeExchangeExec]),
+      assert(ex.map(_.getClass) === Seq(classOf[ShuffleExchangeExec]),
         "final sort lost its range exchange")
       assert(ex.head.numMappers > 1, "final sort no longer samples")
     }
@@ -166,7 +174,7 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("ORDER BY + LIMIT, sortWithinPartitions, window sorts and repartitionByRange are untouched") {
     def touched(p: SparkPlan): Boolean =
-      collect(p) { case c: CoalesceExec => c; case e: OneTaskRangeExchangeExec => e }.nonEmpty
+      collect(p) { case c: CoalesceExec => c }.nonEmpty
     val top = finalPlan(single.orderBy("u").limit(5))
     assert(collect(top) { case t: TakeOrderedAndProjectExec => t }.nonEmpty && !touched(top))
     assert(!touched(finalPlan(single.sortWithinPartitions("u"))))
@@ -180,7 +188,29 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       case e: ShuffleExchangeExec if e.shuffleOrigin != ENSURE_REQUIREMENTS => e }.size === 1)
   }
 
-  test("explain and the prepared plan start no job and write nothing") {
+  /** Broadcasts `body` creates: broadcast ids are handed out in order,
+    * so two probes around it bracket every id it took.
+    */
+  private def broadcastsCreatedBy(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val before = sc.broadcast(0)
+    body
+    val after = sc.broadcast(0)
+    try after.id - before.id - 1 finally { before.destroy(); after.destroy() }
+  }
+
+  test("explain and the prepared plan start no job, build no reader and write nothing") {
+    // sizing the scan reads its file listing; building the parquet
+    // reader would broadcast the Hadoop conf
+    val scan = spark.read.parquet(singlePath).orderBy("u")
+    assert(jobsStartedBy {
+      assert(broadcastsCreatedBy {
+        scan.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+        GraftExecShim.initialPhysicalPlan(scan)
+      } === 0)
+    } === 0)
+    assert(sortedInPlace(GraftExecShim.initialPhysicalPlan(scan)))
+
     val writes = new AtomicInteger
     val out = s"$dir/sink_${java.util.UUID.randomUUID}"
     val schema = StructType(Seq(StructField("u", LongType)))
@@ -218,7 +248,6 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("with AQE off the plan is Spark's") {
     withSQLConf("spark.sql.adaptive.enabled" -> "false") {
       val p = single.orderBy("u").queryExecution.executedPlan
-      assert(collect(p) { case e: OneTaskRangeExchangeExec => e }.isEmpty)
       assert(collect(p) { case c: CoalesceExec => c }.isEmpty)
       assert(collect(p) {
         case e @ ShuffleExchangeExec(_: RangePartitioning, _, ENSURE_REQUIREMENTS, _) => e
