@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // Host-contention provenance (r12). Raw 1-min loadavg CANNOT gate a
@@ -33,16 +32,8 @@ object Bench {
     val calibStart = calibMs()
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // set at build time so no read can resolve a schema before the
-      // legacy conf lands; UTC pins the NTZ->timestamp cast in eventsRaw
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // a silently-swallowed exception must not hide inside a "passing"
     // round: every failure is collected and flagged in the output JSON
@@ -391,10 +382,8 @@ object Bench {
     // misreading took it for the master setting; "cpus_master" is the
     // SPARK_GRAFT_CPUS value actually inside local[n], so a low-core
     // scaling rerun is self-describing (r16 VERDICT task 2)
-    val cpusMasterJson =
-      if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else "\"" + cpus + "\""
     val envPart = s""","env":{"cpus":${osBean.getAvailableProcessors}""" +
-      s""","cpus_master":$cpusMasterJson""" +
+      s""","cpus_master":$cpus""" +
       s""","load_end":${r2(osBean.getSystemLoadAverage)}""" +
       s""","load_start":${r2(loadAtStart)}""" +
       s""","calib_start_ms":${r2(calibStart)}""" +

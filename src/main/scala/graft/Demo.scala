@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Relational
 
@@ -10,11 +9,7 @@ import graft.ops.Relational
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -30,8 +25,7 @@ object Demo {
       left.filter(col("payload") === "orphan").count() + " (expect 1, attr null: " +
       left.filter(col("payload") === "orphan" && col("attr").isNull).count() + ")")
 
-    // fuzzy match from SQL after registration
-    functions.Registry.registerAll(spark)
+    // fuzzy match from SQL: every session carries the graft functions
     spark.sql("SELECT jaro_winkler('MARTHA','MARHTA') AS jw").show(false)
 
     // business-day calendar (driver-side, reference dds/dhs pipelines)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query stage profiler (dev tool, Tune family): runs the
   * named REGISTERED queries through the Bench protocol (noop sink,
   * min-of-2, cache hygiene between runs) and prints, for the best rep,
@@ -17,14 +15,8 @@ object ProfQ {
     require(args.length >= 2, "usage: ProfQ <sfDir> q_a[,q_b...]")
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     case class St(id: Int, name: String, wallMs: Long, tasks: Int,
       taskMs: Long, shW: Long, shR: Long, gcMs: Long, spill: Long,

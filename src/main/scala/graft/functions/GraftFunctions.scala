@@ -4,10 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.{BooleanType, IntegerType}
 
 /** The single table of graft's custom Catalyst expressions as SQL
-  * function builders. Consumed by both registration paths:
-  * [[Registry.registerAll]] (imperative, on an existing session) and
-  * [[graft.GraftExtensions]] (declarative,
-  * `spark.sql.extensions=graft.GraftExtensions`).
+  * function builders, injected into every session by
+  * [[graft.GraftExtensionsProvider]].
   */
 object GraftFunctions {
 

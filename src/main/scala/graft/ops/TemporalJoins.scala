@@ -79,9 +79,8 @@ object TemporalJoins {
     * ([[graft.plans.AsOfJoinExec]]): same contract and answer (spec-
     * pinned equivalent), but each side shuffles once on its own keys
     * and a per-partition O(1)-state merge replaces the union + window
-    * scan — no padded union rows cross the wire. Requires the planner
-    * strategy (GraftExtensions, or this call installs it imperatively
-    * on the session).
+    * scan — no padded union rows cross the wire. The planner strategy
+    * reaches every session through [[graft.GraftExtensionsProvider]].
     */
   def asofJoinNative(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightTime: String, rightCols: Seq[String],
@@ -97,10 +96,6 @@ object TemporalJoins {
     require(collisions.isEmpty,
       s"rightCols collide with left columns: ${collisions.mkString(", ")}")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     val lPlan = left.queryExecution.analyzed
     // re-alias the right side so a self-join (both sides scanning the
     // same relation) cannot carry duplicate attribute ids into the

@@ -14,9 +14,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport,
 
 /** Native as-of join: the full custom-operator stack — a resolved
   * logical node, a planner [[SparkStrategy]], and a physical
-  * [[AsOfJoinExec]] whose per-partition state is O(1) — registered via
-  * `SparkSessionExtensions` (GraftExtensions) or imperatively through
-  * `spark.experimental.extraStrategies`.
+  * [[AsOfJoinExec]] whose per-partition state is O(1) — the strategy
+  * reaches every session through [[graft.GraftExtensionsProvider]].
   *
   * Semantics match [[graft.ops.TemporalJoins.asofJoin]] (left as-of:
   * for each left row, the LATEST right row with equal keys and

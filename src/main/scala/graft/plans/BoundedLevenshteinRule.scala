@@ -25,9 +25,8 @@ import org.apache.spark.sql.types.IntegerType
   * null), and is idempotent (the bounded form no longer matches the
   * pattern), so it composes safely with fixed-point optimizer batches.
   *
-  * Deploy: `spark.sql.extensions=graft.GraftExtensions` (injected
-  * there as an optimizer rule) or imperatively via
-  * `spark.experimental.extraOptimizations`.
+  * Every session carries it as an optimizer rule, injected by
+  * [[graft.GraftExtensionsProvider]].
   */
 object BoundedLevenshteinRule extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
@@ -45,7 +44,7 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * With `spark.sql.adaptive.enabled=false` the rule never runs and
   * plans are Spark's. Every session gets it from
-  * [[GraftSortExtensionsProvider]].
+  * [[graft.GraftExtensionsProvider]].
   */
 object OneTaskSortRule extends Rule[SparkPlan] {
 
@@ -100,13 +99,4 @@ object OneTaskSortRule extends Rule[SparkPlan] {
       Some((l.inputRDD.getNumPartitions, EstimationUtils.getSizePerRow(l.output) * l.rows.size))
     case _ => None
   }
-}
-
-/** Loaded by Spark's `ServiceLoader` for every session (listed in
-  * META-INF/services), so the sort rule needs no
-  * `spark.sql.extensions` entry and is injected once per session.
-  */
-class GraftSortExtensionsProvider extends SparkSessionExtensionsProvider {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectQueryStagePrepRule(_ => OneTaskSortRule)
 }

@@ -38,8 +38,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   * makes the join carry a cross-side equality, which disqualifies it
   * from matching again.
   *
-  * Deploy: `spark.sql.extensions=graft.GraftExtensions`, or
-  * imperatively via `spark.experimental.extraOptimizations`.
+  * Every session carries it as an optimizer rule, injected by
+  * [[graft.GraftExtensionsProvider]]; it stays inert until the conf
+  * is set.
   */
 object RangeBinJoinRule extends Rule[LogicalPlan] {
 

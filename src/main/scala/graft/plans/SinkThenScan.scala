@@ -34,8 +34,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * The deferred scan is a full nested query: filters/pruning still
   * push into the inner file scan (PlanSpec pins PushedFilters on the
   * inner plan for q_orc_roundtrip); the outer plan is a pass-through
-  * leaf. Registered idempotently per session, same pattern as
-  * [[AsOfJoinStrategy]].
+  * leaf. The strategy reaches every session through
+  * [[graft.GraftExtensionsProvider]], like [[AsOfJoinStrategy]].
   */
 object SinkThenScan {
 
@@ -45,9 +45,6 @@ object SinkThenScan {
     */
   def roundTrip(spark: SparkSession, schema: StructType,
       write: SparkSession => Unit, scan: SparkSession => DataFrame): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(SinkThenScanStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SinkThenScanStrategy
     val out = schema.map(f =>
       AttributeReference(f.name, f.dataType, nullable = true)())
     org.apache.spark.sql.GraftShim.ofRows(spark,

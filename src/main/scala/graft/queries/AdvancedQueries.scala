@@ -222,12 +222,13 @@ object AdvancedQueries {
     // the same point-in-interval semantics through the PURE SQL
     // surface: the query text writes the bare inequality join every
     // user naturally writes (no equi key -> Spark alone can only plan
-    // a nested loop), and RangeBinJoinRule (installed imperatively —
-    // the driver session sets no spark.sql.extensions) rewrites it to
-    // the binned equi-join at optimization time. The 50 highest-value
-    // events open 6 h attribution windows; each window counts and
-    // sums every event inside it. RangeBinJoinRuleSpec pins the plan
-    // (no nested-loop node survives the rewrite)
+    // a nested loop), and RangeBinJoinRule (injected into every
+    // session by graft.GraftExtensionsProvider, inert until its bin
+    // conf is set) rewrites it to the binned equi-join at
+    // optimization time. The 50 highest-value events open 6 h
+    // attribution windows; each window counts and sums every event
+    // inside it. RangeBinJoinRuleSpec pins the plan (no nested-loop
+    // node survives the rewrite)
     QueryDef("q_range_auto",
       Some("""WITH iv AS (SELECT event_id AS iv_id, ts AS w_start,
                      ts + INTERVAL 6 HOUR AS w_end
@@ -239,11 +240,6 @@ object AdvancedQueries {
                 ON e.ts >= iv.w_start AND e.ts < iv.w_end
               GROUP BY iv_id ORDER BY iv_id"""),
       (s, d) => {
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.RangeBinJoinRule))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.RangeBinJoinRule
         // bin = the window length: each interval fans out to <= 2 bins.
         // The conf is scoped to THIS build: the rule reads it at
         // optimization time, so optimize while the conf is set, then
@@ -420,7 +416,7 @@ object AdvancedQueries {
       }),
 
     // pure-SQL surface pin: temp view + spark.sql through the
-    // REGISTERED custom function (jaro_winkler) — the path a SQL-only
+    // INJECTED custom function (jaro_winkler) — the path a SQL-only
     // user of the library takes; integer ten-thousandths so the float
     // never meets engine rounding
     QueryDef("q_sql_surface",
@@ -429,7 +425,6 @@ object AdvancedQueries {
                   'Customer#000000001') * 10000 + 0.5) AS BIGINT) AS sim_e4
               FROM customer WHERE c_custkey <= 100 ORDER BY id"""),
       (s, d) => {
-        graft.functions.Registry.registerAll(s)
         val view = s"g_sql_cust_${Tables.tmpKey(d)}"
         customer(s, d).createOrReplaceTempView(view)
         s.sql(s"""SELECT c_custkey AS id,

@@ -262,9 +262,9 @@ object JoinQueries {
 
     // the SAME edit-distance join through the PURE SQL surface: the
     // query text writes the unbounded `levenshtein(a,b) <= 1` every
-    // user naturally writes, and the BoundedLevenshteinRule (installed
-    // imperatively — the driver session sets no spark.sql.extensions)
-    // rewrites it to the banded 3-arg form at optimization time.
+    // user naturally writes, and the BoundedLevenshteinRule (injected
+    // into every session by graft.GraftExtensionsProvider) rewrites it
+    // to the banded 3-arg form at optimization time.
     // Scoped to c_custkey <= 5000: the naive SQL is block-quadratic
     // BY CONSTRUCTION (that is what users write; the scale path with
     // SymSpell candidates is q_lev_join), so the surface pin runs on a
@@ -284,11 +284,6 @@ object JoinQueries {
                 AND levenshtein(a.c_name, b.c_name) <= 1
               ORDER BY nkey, key_a, key_b"""),
       (s, d) => {
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.BoundedLevenshteinRule))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.BoundedLevenshteinRule
         val view = s"g_sql_lev_cust_${Tables.tmpKey(d)}"
         customer(s, d).createOrReplaceTempView(view)
         s.sql(s"""SELECT a.c_nationkey AS nkey,

@@ -11,14 +11,6 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Register a temp SQL function backed by a Catalyst expression
-    * builder (functionRegistry is private[sql]).
-    */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-
   /** Wrap an already-resolved logical plan as a DataFrame
     * (`Dataset.ofRows` is private[sql]) — the entry point for custom
     * logical operators like [[graft.plans.AsOfJoinPlan]].

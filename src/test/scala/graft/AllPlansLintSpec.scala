@@ -20,7 +20,8 @@ class AllPlansLintSpec extends SparkTestBase {
     */
   private val allow: Map[String, Set[String]] = Lint.allow
 
-  test("every registered query plans clean under the scale linter") {
+  /** Builds and lints every registered query once, for both tests. */
+  private lazy val findings: Seq[String] = {
     val bad = scala.collection.mutable.ListBuffer.empty[String]
     for (q <- SparkEntry.allDefs) {
       val rules =
@@ -34,7 +35,26 @@ class AllPlansLintSpec extends SparkTestBase {
       graft.ops.StageCache.releaseAll()
       spark.catalog.clearCache()
     }
-    assert(bad.isEmpty,
-      s"scale-lint findings outside the allowlist:\n  ${bad.mkString("\n  ")}")
+    bad.toList
+  }
+
+  test("every registered query plans clean under the scale linter") {
+    assert(findings.isEmpty,
+      s"scale-lint findings outside the allowlist:\n  ${findings.mkString("\n  ")}")
+  }
+
+  test("building every registered query leaves the session unchanged") {
+    findings
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    // Spark lists every function that is not built in as temporary,
+    // the injected ones too; one a query registered while it was built
+    // names its builder's class instead of the provider
+    val graftFns = graft.functions.GraftFunctions.all.map(_._1)
+    val listed = spark.catalog.listFunctions().collect().toSeq
+      .filter(f => graftFns.contains(f.name))
+    assert(listed.map(_.name).sorted === graftFns.sorted)
+    val registered = listed.filter(_.className != classOf[GraftExtensionsProvider].getName)
+    assert(registered.isEmpty, registered.mkString(", "))
   }
 }

@@ -1,21 +1,47 @@
 package graft.functions
 
-import graft.SparkTestBase
-import org.apache.spark.sql.SparkSession
+import graft.{GraftExtensionsProvider, GraftSession, SparkTestBase}
+import graft.plans.{AsOfJoinStrategy, BoundedLevenshteinRule, OneTaskSortRule,
+  RangeBinJoinRule, SinkThenScanStrategy}
+import org.apache.spark.sql.{GraftTestShim, SparkSession}
 
-/** The declarative registration path. `spark.sql.extensions` is a
-  * STATIC conf: Spark reads it from the SparkContext's conf when a
-  * session is instantiated, so it must be present at application
-  * launch (`--conf spark.sql.extensions=graft.GraftExtensions`).
-  * The shared test context (SparkTestBase) launches with it — every
-  * session in this suite goes through GraftExtensions.apply — and
-  * this spec checks the whole function surface resolves from SQL
-  * with no imperative Registry call, including on a second session
-  * created after the fact (cluster-notebook shape).
+/** The one extension route. Spark's `ServiceLoader` finds
+  * [[graft.GraftExtensionsProvider]] in META-INF/services and applies
+  * it to every session, however the session was built, so no conf
+  * and no call on a built session is needed. This spec checks that
+  * the provider alone carries every graft function, rule and
+  * strategy, that each lands exactly once in a session and in a
+  * second session created after the fact (cluster-notebook shape),
+  * and that the whole function surface resolves from SQL.
   */
 class ExtensionsSpec extends SparkTestBase {
 
-  test("context launched with spark.sql.extensions resolves every graft function") {
+  test("the provider alone injects each graft extension exactly once") {
+    val optimizerRules = Seq(BoundedLevenshteinRule, RangeBinJoinRule)
+    val strategies = Seq(AsOfJoinStrategy, SinkThenScanStrategy)
+    val functions = GraftFunctions.all.map(_._1)
+    def once[A <: AnyRef](where: String, got: Seq[A], want: Seq[AnyRef]): Unit =
+      want.foreach(w => assert(got.count(_ eq w) === 1, s"$w in $where"))
+    val alone = GraftTestShim.provider(spark)
+    once("provider", alone.prepRules, Seq(OneTaskSortRule))
+    once("provider", alone.optimizerRules, optimizerRules)
+    once("provider", alone.strategies, strategies)
+    assert(alone.functions.sorted === functions.sorted)
+    val local = GraftSession.local(4)
+    for ((where, s) <- Seq("session" -> local, "newSession" -> local.newSession())) {
+      val carried = GraftTestShim.session(s)
+      once(where, carried.prepRules, Seq(OneTaskSortRule))
+      once(where, carried.optimizerRules, optimizerRules)
+      once(where, carried.strategies, strategies)
+      functions.foreach { f =>
+        assert(carried.functions.count(_ == f) === 1, s"$f in $where")
+        assert(GraftTestShim.functionInfo(s, f).map(_.getClassName) ===
+          Some(classOf[GraftExtensionsProvider].getName), s"$f in $where")
+      }
+    }
+  }
+
+  test("every session resolves every graft function from SQL") {
     val row = spark.sql(
       """SELECT jaro_winkler('MARTHA', 'MARHTA') AS jw,
                 word_shingles('a b c', 2) AS sh,

@@ -5,7 +5,6 @@ import graft.SparkTestBase
 class RegistrySpec extends SparkTestBase {
 
   test("custom expressions callable from SQL") {
-    Registry.registerAll(spark)
     val row = spark.sql(
       """SELECT jaro_winkler('MARTHA', 'MARHTA') AS jw,
                 poly_hash('hello world') AS ph,
@@ -36,7 +35,6 @@ class RegistrySpec extends SparkTestBase {
   }
 
   test("window_digests from SQL: raw md5 per window, distinct mode, null input") {
-    Registry.registerAll(spark)
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02X".format(_)).mkString

@@ -5,9 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Levenshtein
 import org.apache.spark.sql.functions._
 
-/** The SparkTestBase session launches with
-  * spark.sql.extensions=graft.GraftExtensions, so the rule under test
-  * is active on every DataFrame here — these specs pin both the
+/** Every session carries the rule (graft.GraftExtensionsProvider),
+  * so it is active on every DataFrame here — these specs pin both the
   * rewrite (plan shape) and the unchanged semantics (results).
   */
 class BoundedLevenshteinRuleSpec extends SparkTestBase {

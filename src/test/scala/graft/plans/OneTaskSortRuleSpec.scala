@@ -237,12 +237,10 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("every session carries the rule exactly once") {
-    // this context launched with spark.sql.extensions=graft.GraftExtensions
-    // and the provider loads on top of it
     for (s <- Seq(spark, spark.newSession()))
-      assert(GraftTestShim.queryStagePrepRules(s).count(_ eq OneTaskSortRule) === 1)
+      assert(GraftTestShim.session(s).prepRules.count(_ eq OneTaskSortRule) === 1)
     // what ServiceLoader alone gives a plain builder session
-    assert(GraftTestShim.providerPrepRules(spark).count(_ eq OneTaskSortRule) === 1)
+    assert(GraftTestShim.provider(spark).prepRules.count(_ eq OneTaskSortRule) === 1)
   }
 
   test("with AQE off the plan is Spark's") {

@@ -11,14 +11,8 @@ import org.apache.spark.sql.functions._
   */
 class RangeBinJoinRuleSpec extends SparkTestBase {
 
-  private def withRule[A](binSeconds: Long)(f: => A): A = {
-    if (!spark.experimental.extraOptimizations.contains(RangeBinJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeBinJoinRule
-    spark.conf.set(RangeBinJoinRule.binSecondsKey, binSeconds.toString)
-    try f
-    finally spark.conf.set(RangeBinJoinRule.binSecondsKey, "0")
-  }
+  private def withRule[A](binSeconds: Long)(f: => A): A =
+    withSQLConf(RangeBinJoinRule.binSecondsKey -> binSeconds.toString)(f)
 
   // long epoch-micros intervals/points with nulls and degenerates
   private def ivDf: DataFrame = {
