@@ -47,6 +47,7 @@ class GraftExtensionsProvider extends SparkSessionExtensionsProvider {
     // each plans only its own logical node (inert for every other plan)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.SinkThenScanStrategy)
-    ext.injectQueryStagePrepRule(_ => graft.plans.OneTaskSortRule)
+    // no shuffle where the map side is one small task (inert with AQE off)
+    ext.injectQueryStagePrepRule(_ => graft.plans.OneTaskExchangeRule)
   }
 }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.execution
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.joins.HashedRelation
 
 /** Bridge into `private[execution]` physical-plan internals (sibling of
   * [[org.apache.spark.sql.GraftShim]], which covers the sql-package
@@ -21,4 +23,15 @@ object GraftExecShim {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
+
+  /** Whether a materialized broadcast stage built a hash relation with
+    * one row per key (`HashedRelation` is `private[execution]`). False
+    * for an unmaterialized stage, whose relation is never touched: its
+    * future would start the broadcast.
+    */
+  def builtKeysUnique(stage: BroadcastQueryStageExec): Boolean =
+    stage.isMaterialized && (stage.broadcast.relationFuture.get().value match {
+      case h: HashedRelation => h.keyIsUnique
+      case _ => false
+    })
 }

@@ -162,8 +162,11 @@ class PlanSpec extends SparkTestBase {
 
   test("q_corr aggregates partially before its exchange (exact moments)") {
     // the five decimal moments must combine map-side: the exchange
-    // carries one partial row per (flag, partition), never raw rows
-    val p = plan("q_corr")
+    // carries one partial row per (flag, partition), never raw rows.
+    // At sf0.001 the input is one small task, which runs without the
+    // exchange; an advisory size below the input's gives the plan an
+    // input at scale gets
+    val p = withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")(plan("q_corr"))
     val lines = p.linesIterator.toSeq
     val firstAgg = lines.indexWhere(_.contains("HashAggregate"))
     val exchange = lines.indexWhere(_.contains("Exchange"))

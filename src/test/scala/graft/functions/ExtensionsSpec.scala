@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.{GraftExtensionsProvider, GraftSession, SparkTestBase}
-import graft.plans.{AsOfJoinStrategy, BoundedLevenshteinRule, OneTaskSortRule,
+import graft.plans.{AsOfJoinStrategy, BoundedLevenshteinRule, OneTaskExchangeRule,
   RangeBinJoinRule, SinkThenScanStrategy}
 import org.apache.spark.sql.{GraftTestShim, SparkSession}
 
@@ -23,14 +23,14 @@ class ExtensionsSpec extends SparkTestBase {
     def once[A <: AnyRef](where: String, got: Seq[A], want: Seq[AnyRef]): Unit =
       want.foreach(w => assert(got.count(_ eq w) === 1, s"$w in $where"))
     val alone = GraftTestShim.provider(spark)
-    once("provider", alone.prepRules, Seq(OneTaskSortRule))
+    once("provider", alone.prepRules, Seq(OneTaskExchangeRule))
     once("provider", alone.optimizerRules, optimizerRules)
     once("provider", alone.strategies, strategies)
     assert(alone.functions.sorted === functions.sorted)
     val local = GraftSession.local(4)
     for ((where, s) <- Seq("session" -> local, "newSession" -> local.newSession())) {
       val carried = GraftTestShim.session(s)
-      once(where, carried.prepRules, Seq(OneTaskSortRule))
+      once(where, carried.prepRules, Seq(OneTaskExchangeRule))
       once(where, carried.optimizerRules, optimizerRules)
       once(where, carried.strategies, strategies)
       functions.foreach { f =>

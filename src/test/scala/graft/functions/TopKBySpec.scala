@@ -50,9 +50,14 @@ class TopKBySpec extends SparkTestBase {
 
   test("the aggregate plans partial aggregation below the exchange") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val p = docs.groupBy("lang")
-      .agg(TopKBy.topKBy(3)(col("n_chars"), col("doc_id")).as("top"))
-      .queryExecution.executedPlan.toString
+    // the file is one small task, which runs without the exchange; an
+    // advisory size below the file's gives the plan an input at scale
+    // gets
+    val p = withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k") {
+      docs.groupBy("lang")
+        .agg(TopKBy.topKBy(3)(col("n_chars"), col("doc_id")).as("top"))
+        .queryExecution.executedPlan.toString
+    }
     // typed-Aggregator aggregates plan as ObjectHashAggregate (or sort
     // fallback); two of them = partial + final around the exchange
     val aggs = "(?i)(objecthashaggregate|sortaggregate)".r

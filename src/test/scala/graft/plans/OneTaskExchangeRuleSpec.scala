@@ -1,0 +1,236 @@
+package graft.plans
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, GraftShim, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, GraftExecShim, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.SparkTestBase
+import graft.ops.TemporalJoins
+
+/** [[OneTaskExchangeRule]] under aggregates, windows and joins, and
+  * over inputs that are one task only once the upstream stage has run.
+  * Global sorts over one-split scans are [[OneTaskSortRuleSpec]]'s.
+  * Every rewritten query returns Spark's rows (AQE off, where the rule
+  * never runs) in Spark's order.
+  *
+  * Mutants this spec kills: "no coalescing check" (a post-shuffle input
+  * coalescing reads as several partitions loses its exchange),
+  * "no post-shuffle byte guard"
+  * (a one-partition stage over the advisory size loses the exchange
+  * above it), "no unique-key check" (a fan-out broadcast join runs in
+  * one task), "any broadcast side counts as built" (the broadcast
+  * future starts at `explain`), "rewrite under joins" (a sort-merge
+  * join's one-task side loses its exchange and the join is no longer
+  * co-partitioned).
+  */
+class OneTaskExchangeRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+
+  private lazy val dir = Files.createTempDirectory("one-task-exchange").toString
+
+  private def written(name: String, df: DataFrame): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    df.write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  private val cols = Seq("CASE WHEN id % 17 = 0 THEN NULL ELSE id % 5 END AS k",
+    "(id * 7919) % 401 AS u", "id AS seq")
+  /** k with nulls and ties, unique u, seq in write order; one split. */
+  private lazy val single = written("single", spark.range(0, 400, 1, 1).selectExpr(cols: _*))
+  /** The same rows in two files: two map tasks, so every exchange over
+    * it stays until its stage has run.
+    */
+  private lazy val two = written("two", spark.range(0, 400, 1, 2).selectExpr(cols: _*))
+  private lazy val dimUnique = written("dim_unique",
+    spark.range(0, 5, 1, 1).selectExpr("id AS k", "id * 10 AS w"))
+  private lazy val dimRepeated = written("dim_repeated",
+    spark.range(0, 10, 1, 1).selectExpr("id % 5 AS k", "id AS w"))
+
+  /** A new plan for `df`: a frame keeps the plan of its first run,
+    * whatever confs are set later.
+    */
+  private def fresh(df: DataFrame): DataFrame = GraftShim.ofRows(spark, df.queryExecution.logical)
+
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    val f = fresh(df)
+    f.collect()
+    f.queryExecution.executedPlan
+  }
+
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] =
+    collect(p) { case e: ShuffleExchangeLike => e }
+
+  private def rangeShuffles(p: SparkPlan): Int =
+    shuffles(p).count(_.outputPartitioning.isInstanceOf[RangePartitioning])
+
+  private def coalesced(p: SparkPlan): Boolean =
+    collect(p) { case c: CoalesceExec => c.numPartitions }.contains(1)
+
+  /** Spark's rows in Spark's order: AQE off, where the rule never runs. */
+  private def spark0(df: DataFrame): Seq[Row] =
+    withSQLConf("spark.sql.adaptive.enabled" -> "false")(fresh(df).collect().toSeq)
+
+  private def sameRows(df: DataFrame, ordered: Boolean, clue: String): Unit =
+    if (ordered) assert(fresh(df).collect().toSeq === spark0(df), clue)
+    else assert(fresh(df).collect().map(_.toString).sorted === spark0(df).map(_.toString).sorted, clue)
+
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  test("one-split aggregates, distinct and windows run as one stage, rows as Spark's") {
+    val shapes = Seq(
+      "grouped" -> single.groupBy("k").agg(sum("u").as("s"), count(lit(1)).as("n")),
+      "global" -> single.agg(sum("u").as("s"), max("seq").as("m")),
+      "distinct" -> single.select("k").distinct(),
+      "window" -> single.withColumn("r", row_number().over(Window.partitionBy("k").orderBy("seq"))),
+      "global window" -> single.withColumn("r", rank().over(Window.orderBy(col("u").desc))))
+    for ((name, df) <- shapes) {
+      val p = finalPlan(df)
+      assert(shuffles(p).isEmpty && coalesced(p), name)
+      assert(jobsStartedBy(noop(df)) === 1, name)
+      sameRows(df, ordered = false, name)
+    }
+  }
+
+  /** Over `two`: the grouping exchange stays, and what sits above the
+    * aggregate is one small task only once that exchange's stage ran.
+    */
+  private def postShuffle: Seq[(String, DataFrame)] = {
+    val grouped = two.groupBy("k").agg(sum("u").as("s"), count(lit(1)).as("n"))
+    Seq(
+      "sort" -> grouped.orderBy("k"),
+      "global aggregate" -> grouped.agg(max("s").as("m"), sum("n").as("t")),
+      "window" -> grouped.withColumn("r", rank().over(Window.orderBy(col("s").desc, col("k")))))
+  }
+
+  test("a post-shuffle input coalescing reads as one partition loses the exchange above it") {
+    for ((name, df) <- postShuffle) {
+      assert(shuffles(GraftExecShim.initialPhysicalPlan(df)).size === 2, name)
+      val p = finalPlan(df)
+      assert(shuffles(p).size === 1 && coalesced(p), name)
+      val spark1 = withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        jobsStartedBy(noop(df))
+      }
+      assert(jobsStartedBy(noop(df)) < spark1, name)
+      sameRows(df, ordered = true, name)
+    }
+  }
+
+  test("a post-shuffle input coalescing reads as several partitions keeps its exchange") {
+    // a tiny minimum partition size lets coalescing keep one partition
+    // per core; with coalescing off AQE reads every shuffle partition
+    for (conf <- Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+                     "spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+      withSQLConf(conf) {
+        for ((name, df) <- postShuffle) {
+          val p = finalPlan(df)
+          assert(shuffles(p).size === 2 && !coalesced(p), s"$name under $conf")
+          sameRows(df, ordered = true, s"$name under $conf")
+        }
+      }
+    }
+  }
+
+  test("inputs over the advisory size keep their exchanges, before or after the upstream stage runs") {
+    // every row lands in one partition of the window's hash exchange,
+    // which coalescing reads as one partition of more than the advisory
+    // size
+    val oneBig = two.withColumn("g", col("seq") - col("seq"))
+      .withColumn("r", row_number().over(Window.partitionBy("g").orderBy("seq")))
+      .orderBy("u")
+    val grouped = single.groupBy("k").agg(sum("u").as("s"))
+    withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k") {
+      val p = finalPlan(oneBig)
+      assert(rangeShuffles(p) === 1 && !coalesced(p))
+      sameRows(oneBig, ordered = true, "one big partition")
+      val g = finalPlan(grouped)
+      assert(shuffles(g).size === 1 && !coalesced(g))
+    }
+    // under the default advisory size both go
+    assert(rangeShuffles(finalPlan(oneBig)) === 0 && coalesced(finalPlan(oneBig)))
+    assert(shuffles(finalPlan(grouped)).isEmpty)
+  }
+
+  test("a broadcast join that emits at most its streamed rows runs inside the one task") {
+    val shapes = Seq(
+      "inner, unique keys" -> single.join(broadcast(dimUnique), Seq("k")),
+      "left outer, unique keys" -> single.join(broadcast(dimUnique), Seq("k"), "left_outer"),
+      "left semi, repeated keys" -> single.join(broadcast(dimRepeated), Seq("k"), "left_semi"),
+      "left anti, repeated keys" -> single.join(broadcast(dimRepeated), Seq("k"), "left_anti"))
+    for ((name, joined) <- shapes) {
+      val df = joined.orderBy("u")
+      // the build side is an exchange until its stage runs
+      assert(rangeShuffles(GraftExecShim.initialPhysicalPlan(df)) === 1, name)
+      val p = finalPlan(df)
+      assert(rangeShuffles(p) === 0 && coalesced(p), name)
+      sameRows(df, ordered = true, name)
+    }
+  }
+
+  test("a broadcast join whose build keys repeat keeps the exchange above it") {
+    for (how <- Seq("inner", "left_outer")) {
+      val df = single.join(broadcast(dimRepeated), Seq("k"), how).orderBy("u", "w")
+      val p = finalPlan(df)
+      assert(rangeShuffles(p) === 1 && !coalesced(p), how)
+      sameRows(df, ordered = true, how)
+    }
+  }
+
+  test("a sort-merge join with one one-task side shuffles both sides") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      val df = single.join(two.select(col("u"), col("seq").as("seq2")), Seq("u")).orderBy("u")
+      val p = finalPlan(df)
+      val joins = collect(p) { case j: SortMergeJoinExec => j }
+      assert(joins.size === 1)
+      assert(shuffles(joins.head.left).size === 1 && shuffles(joins.head.right).size === 1)
+      assert(!coalesced(p))
+      sameRows(df, ordered = true, "smj")
+    }
+  }
+
+  test("an aggregate whose hash partitioning a join relies on keeps its exchange") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      // both aggregates already hash-partition by the join key, so the
+      // join adds no exchange of its own
+      val left = single.groupBy("k").agg(sum("u").as("s"))
+      val right = two.groupBy("k").agg(count(lit(1)).as("n"))
+      val df = left.join(right, "k").orderBy("k")
+      val joins = collect(finalPlan(df)) { case j: SortMergeJoinExec => j }
+      assert(joins.size === 1)
+      assert(shuffles(joins.head.left).size === 1 && shuffles(joins.head.right).size === 1)
+      sameRows(df, ordered = true, "sort-merge join over aggregates")
+    }
+    // the as-of join zips the partitions of its two sides, here two
+    // aggregates hash-partitioned by the key
+    val asOf = TemporalJoins.asofJoinNative(single.groupBy("k").agg(max("seq").as("t")),
+      two.groupBy("k").agg(max("u").as("rt"), sum("seq").as("v")), Seq("k"), "t", "rt", Seq("v"))
+    sameRows(asOf.orderBy("k"), ordered = true, "as-of join over aggregates")
+  }
+
+  test("a stage with no map output or no rows gives an empty, typed result") {
+    val schema = StructType(Seq(StructField("u", LongType)))
+    val noFiles = Files.createTempDirectory(Files.createDirectories(
+      new java.io.File(dir).toPath), "no_files").toString
+    val noRows = s"$dir/no_rows.parquet"
+    spark.range(0, 0, 1, 1).toDF("u").write.parquet(noRows)
+    for (in <- Seq(spark.read.schema(schema).parquet(noFiles), spark.read.parquet(noRows))) {
+      // the explode keeps the grouping exchange, so the sort and the
+      // global aggregate above it read a materialized stage
+      val exploded = in.select(explode(array(col("u"), col("u") + 1)).as("x"))
+      val sorted = exploded.groupBy("x").count().orderBy("x")
+      assert(sorted.collect().isEmpty && sorted.schema.fieldNames.toSeq === Seq("x", "count"))
+      val total = exploded.groupBy("x").count().agg(count(lit(1)).as("n"))
+      assert(total.collect().toSeq === Seq(Row(0L)))
+      assert(!coalesced(sorted.queryExecution.executedPlan))
+    }
+  }
+}

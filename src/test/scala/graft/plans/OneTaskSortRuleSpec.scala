@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame, GraftTestShim, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, GraftTestShim, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, GraftExecShim,
   InputAdapter, SortExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -16,17 +16,19 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.{SparkEntry, SparkTestBase}
 
-/** [[OneTaskSortRule]]: a global sort over a narrow, small,
-  * one-partition input sorts in place, and everything else keeps
+/** [[OneTaskExchangeRule]] on global sorts: a sort over a narrow,
+  * small, one-partition input sorts in place, and everything else keeps
   * Spark's sampled range exchange, with rows and order as Spark's plan
-  * gives them.
+  * gives them. Aggregates, windows, joins and post-shuffle inputs are
+  * [[OneTaskExchangeRuleSpec]]'s.
   *
   * Mutants this spec kills: "at most 2 leaf partitions count as one"
-  * (the two-split input sorts in place), "no narrow check" (a
-  * post-shuffle input sorts in place), "no fan-out check" (an explode
+  * (the two-split input sorts in place), "no fan-out check" (an explode
   * sorts inside the scan task), "no byte guard" (an input over the
-  * advisory size sorts in place) and "size a scan by its read RDD"
-  * (`explain` builds the Parquet reader, which creates a broadcast).
+  * advisory size sorts in place), "size a scan by its read RDD"
+  * (`explain` builds the Parquet reader, which creates a broadcast)
+  * and "read an unbuilt broadcast" (`explain` of a broadcast join
+  * starts the broadcast).
   */
 class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -81,10 +83,17 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("ties come out in the order Spark's sampled plan gives them") {
-    // Spark's sort is not stable, so the reference is Spark's own plan
-    // (AQE off: the rule is inert) over the same map-task order
-    def spark0(df: DataFrame): Seq[Row] =
-      withSQLConf("spark.sql.adaptive.enabled" -> "false")(df.collect().toSeq)
+    // Spark's sort is not stable: the order of ties depends on the
+    // whole row sequence a sort task sees. The reference is Spark's own
+    // exchange (AQE off: the rule is inert) from the one map task to one
+    // reducer, which hands that reducer the scan's row sequence, planned
+    // anew (a frame keeps the plan of its first run).
+    def spark0(df: DataFrame): Seq[Row] = withSQLConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "1") {
+      val ref = GraftShim.ofRows(spark, df.queryExecution.logical)
+      assert(rangeExchanges(ref.queryExecution.executedPlan).map(_.numPartitions) === Seq(1))
+      ref.collect().toSeq
+    }
     for (ord <- Seq(col("k").asc_nulls_first, col("k").desc_nulls_last)) {
       val inPlace = single.orderBy(ord)
       assert(sortedInPlace(finalPlan(inPlace)))
@@ -102,11 +111,11 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  test("a post-shuffle input keeps the sampled range exchange") {
+  test("a grouped one-split input loses both exchanges, same rows in order") {
     val post = single.groupBy("k").agg(count(lit(1)).as("n"))
-    assert(jobsStartedBy(noop(post.orderBy("k"))) === jobsStartedBy(noop(sparkShape(post, "k"))))
+    assert(jobsStartedBy(noop(post.orderBy("k"))) < jobsStartedBy(noop(sparkShape(post, "k"))))
     val p = finalPlan(post.orderBy("k"))
-    assert(!sortedInPlace(p) && rangeExchanges(p).size === 1)
+    assert(sortedInPlace(p) && collect(p) { case e: ShuffleExchangeLike => e }.isEmpty)
     assert(post.orderBy("k").collect().toSeq === sparkShape(post, "k").collect().toSeq)
   }
 
@@ -178,10 +187,13 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val top = finalPlan(single.orderBy("u").limit(5))
     assert(collect(top) { case t: TakeOrderedAndProjectExec => t }.nonEmpty && !touched(top))
     assert(!touched(finalPlan(single.sortWithinPartitions("u"))))
-    val win = finalPlan(single.withColumn("r",
-      row_number().over(Window.partitionBy("k").orderBy("seq"))))
-    assert(!touched(win))
-    assert(collect(win) { case s: SortExec => s.global }.forall(!_))
+    // the window's exchange goes (OneTaskExchangeRuleSpec); its sort
+    // stays the local sort Spark plans
+    def windowed = single.withColumn("r", row_number().over(Window.partitionBy("k").orderBy("seq")))
+    def windowSorts(p: SparkPlan) = collect(p) { case s: SortExec => (s.global, s.sortOrder) }
+    val spark0 = withSQLConf("spark.sql.adaptive.enabled" -> "false")(windowed.queryExecution.executedPlan)
+    assert(windowSorts(finalPlan(windowed)) === windowSorts(spark0))
+    assert(windowSorts(spark0).map(_._1) === Seq(false))
     val byRange = finalPlan(single.repartitionByRange(3, col("u")).sortWithinPartitions("u"))
     assert(!touched(byRange))
     assert(collect(byRange) {
@@ -225,6 +237,21 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(writes.get === 0)
     assert(df.collect().map(_.getLong(0)).toSeq === (49L to 0L by -1L))
     assert(writes.get === 1, "the deferred write must run exactly once per execution")
+    // an aggregate under the sort and a broadcast join under the sort
+    // (whose build side is not yet a stage) are prepared without a job
+    // or a broadcast
+    val dimPath = s"$dir/dim_${java.util.UUID.randomUUID}.parquet"
+    spark.range(0, 5, 1, 1).selectExpr("id AS k", "id * 10 AS w").write.parquet(dimPath)
+    for (shaped <- Seq(
+        spark.read.parquet(singlePath).groupBy("k").agg(sum("u").as("s")).orderBy("k"),
+        spark.read.parquet(singlePath).join(broadcast(spark.read.parquet(dimPath)), "k").orderBy("u"))) {
+      assert(jobsStartedBy {
+        assert(broadcastsCreatedBy {
+          shaped.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+          GraftExecShim.initialPhysicalPlan(shaped)
+        } === 0)
+      } === 0)
+    }
     // a scalar subquery under the sort does not run at plan time
     single.createOrReplaceTempView("one_task_sort_single")
     val sub = spark.sql("""SELECT u FROM one_task_sort_single
@@ -238,9 +265,9 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("every session carries the rule exactly once") {
     for (s <- Seq(spark, spark.newSession()))
-      assert(GraftTestShim.session(s).prepRules.count(_ eq OneTaskSortRule) === 1)
+      assert(GraftTestShim.session(s).prepRules.count(_ eq OneTaskExchangeRule) === 1)
     // what ServiceLoader alone gives a plain builder session
-    assert(GraftTestShim.provider(spark).prepRules.count(_ eq OneTaskSortRule) === 1)
+    assert(GraftTestShim.provider(spark).prepRules.count(_ eq OneTaskExchangeRule) === 1)
   }
 
   test("with AQE off the plan is Spark's") {
