@@ -80,7 +80,10 @@ object Dedup {
     // exchanges. A caller's global ORDER BY adds a third run. A fixed
     // multiple of one cheap MD5-per-window pass: persisting the span
     // stream measured no faster (SCALE.md, "Span dedup persist vs
-    // recompute"; the cache build is a full columnar pass).
+    // recompute"; the cache build is a full columnar pass). On a small
+    // one-split input each run also re-reads the scan under the spread
+    // once per task (OneTaskSplitExec): the runs share no exchange, as
+    // they would over a shuffled spread.
     spanDupCounts(spanStream(df, idCol, textCol, w), idCol)
   }
 

@@ -29,6 +29,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   * sort-before-repartition pass and is deterministic under task retry
   * (SPARK-38388 class); unique keys spread evenly by construction.
   *
+  * Under AQE a one-task input that is small enough is split by
+  * re-reading it, not by shuffling it: `graft.plans.OneTaskExchangeRule`
+  * turns the repartition into a [[graft.plans.OneTaskSplitExec]], whose
+  * tasks each scan the input and keep their own hash partition, so no
+  * document text crosses a shuffle. A larger input, one of several
+  * splits, or AQE off keeps Spark's hash exchange.
+  *
   * The partition-count probe plans (but never runs) the frame's
   * physical plan; a frame the probe cannot plan standalone (e.g. one
   * that needs EnsureRequirements) falls back to the no-op side —

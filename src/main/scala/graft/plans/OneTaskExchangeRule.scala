@@ -1,10 +1,11 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec,
-  ValidateRequirements}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_NUM,
+  ShuffleExchangeExec, ValidateRequirements}
 import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 
 /** No shuffle where the map side is one small task. Spark moves the
@@ -29,6 +30,16 @@ import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitEx
   * Spark's `ValidateRequirements` checks every operator above a
   * rewrite, and one it rejects keeps Spark's children.
   *
+  * A hash repartition to a fixed number of partitions
+  * (`df.repartition(n, cols)`) of one small task becomes a
+  * [[OneTaskSplitExec]] with the same partitioning: each of its n tasks
+  * re-reads the input and keeps its own hash partition, so no task
+  * shuffles and consumers keyed like the repartition still add no
+  * exchange. The input must be deterministic, so every re-read yields
+  * the same rows, and its bytes count once per partition against the
+  * advisory size, so the re-reads together read no more than one
+  * coalesced reducer may.
+  *
   * Rows are those of Spark's plan, and after a total sort in the same
   * order. Spark's sort is not stable, so ties under a partial sort come
   * out as in Spark's plan with one reducer, which sees the same row
@@ -49,12 +60,19 @@ object OneTaskExchangeRule extends Rule[SparkPlan] {
       if (ValidateRequirements.validate(rewritten)) rewritten else plan
     }
     p match {
+      case ShuffleExchangeExec(h: HashPartitioning, input, REPARTITION_BY_NUM, _)
+          if h.deterministic && deterministic(input) &&
+            OneTaskInput(input, h.numPartitions) =>
+        OneTaskSplitExec(h, input)
       case _: BaseAggregateExec | _: WindowExecBase | _: WindowGroupLimitExec =>
         p.withNewChildren(p.children.map(oneTask))
       case s: SortExec if s.global => s.withNewChildren(s.children.map(oneTask))
       case _ => p
     }
   }
+
+  private def deterministic(t: SparkPlan): Boolean =
+    !t.exists(_.expressions.exists(!_.deterministic))
 
   private def oneTask(child: SparkPlan): SparkPlan = child match {
     case ShuffleExchangeExec(_, input, ENSURE_REQUIREMENTS, _) if OneTaskInput(input) =>

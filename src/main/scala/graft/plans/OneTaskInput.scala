@@ -20,13 +20,14 @@ import org.apache.spark.sql.internal.SQLConf
   * leaves hold at most one partition and at most
   * `spark.sql.adaptive.advisoryPartitionSizeInBytes` between them.
   *
-  * Narrow means no exchange, no operator that can emit more rows than
-  * it reads (generate, expand, mapPartitions, any join but the one
-  * below) and no subquery. A broadcast hash join is allowed when its
-  * build side is a materialized broadcast stage and it emits at most
-  * one row per streamed row: a semi or anti join, or an inner or outer
-  * join whose built relation has unique keys. Only its streamed side
-  * is sized.
+  * Narrow means no exchange or [[OneTaskSplitExec]] (its tasks run
+  * apart so that kernels over the split run on every core), no
+  * operator that can emit more rows than it reads (generate, expand,
+  * mapPartitions, any join but the one below) and no subquery. A
+  * broadcast hash join is allowed when its build side is a
+  * materialized broadcast stage and it emits at most one row per
+  * streamed row: a semi or anti join, or an inner or outer join whose
+  * built relation has unique keys. Only its streamed side is sized.
   *
   * Leaves are sized only where that runs nothing: file scans from
   * their file listing (a scan's read RDD would build the file reader,
@@ -41,14 +42,18 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object OneTaskInput {
 
-  def apply(p: SparkPlan): Boolean = streamedLeaves(p).exists(fitsOneTask)
+  /** Whether `p` is one small task that may be read `copies` times:
+    * its bytes count once per copy against the advisory size.
+    */
+  def apply(p: SparkPlan, copies: Int = 1): Boolean =
+    streamedLeaves(p).exists(fitsOneTask(_, copies))
 
   /** The leaves `p` streams from when it is narrow, None otherwise. */
   private def streamedLeaves(p: SparkPlan): Option[Seq[SparkPlan]] = p match {
     case n if n.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) => None
     case j: BroadcastHashJoinExec if emitsAtMostStreamed(j) =>
       streamedLeaves(if (j.buildSide == BuildLeft) j.right else j.left)
-    case _: Exchange | _: ReusedExchangeExec => None
+    case _: Exchange | _: ReusedExchangeExec | _: OneTaskSplitExec => None
     case _: GenerateExec | _: ExpandExec | _: BaseJoinExec | _: MapPartitionsExec => None
     case leaf if leaf.children.isEmpty => Some(Seq(leaf))
     case n => n.children.foldLeft(Option(Seq.empty[SparkPlan])) { (acc, c) =>
@@ -69,13 +74,14 @@ object OneTaskInput {
       case _ => false
     }
 
-  private def fitsOneTask(leaves: Seq[SparkPlan]): Boolean = {
+  private def fitsOneTask(leaves: Seq[SparkPlan], copies: Int): Boolean = {
     val sizes = leaves.map(leafSize)
     sizes.forall(_.isDefined) && {
       val (parts, bytes) = sizes.flatten.foldLeft((0, BigInt(0))) {
         case ((n, b), (n1, b1)) => (n + n1, b + b1)
       }
-      parts <= 1 && bytes <= SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      parts <= 1 &&
+        bytes * copies <= SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     }
   }
 

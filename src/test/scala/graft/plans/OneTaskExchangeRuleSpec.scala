@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, GraftShim, Row}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{CoalesceExec, GraftExecShim, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.SparkTestBase
 import graft.ops.TemporalJoins
 
-/** [[OneTaskExchangeRule]] under aggregates, windows and joins, and
-  * over inputs that are one task only once the upstream stage has run.
+/** [[OneTaskExchangeRule]] under aggregates, windows and joins, over
+  * inputs that are one task only once the upstream stage has run, and
+  * for hash repartitions of one small task ([[OneTaskSplitExec]]).
   * Global sorts over one-split scans are [[OneTaskSortRuleSpec]]'s.
   * Every rewritten query returns Spark's rows (AQE off, where the rule
   * never runs) in Spark's order.
@@ -29,7 +30,13 @@ import graft.ops.TemporalJoins
   * one task), "any broadcast side counts as built" (the broadcast
   * future starts at `explain`), "rewrite under joins" (a sort-merge
   * join's one-task side loses its exchange and the join is no longer
-  * co-partitioned).
+  * co-partitioned), "no determinism check" (a repartition over `rand`
+  * is split and its re-reads disagree), "no N× byte guard" (an input
+  * that fits the advisory size once but not once per partition is
+  * split), "partitioning dropped to Unknown" (a groupBy or window on
+  * the repartition key shuffles again), "read only parent partition
+  * 0" (a split over a three-partition parent loses rows), "a split is
+  * narrow" (a groupBy on another key runs every split task in one).
   */
 class OneTaskExchangeRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -81,6 +88,12 @@ class OneTaskExchangeRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper
   private def sameRows(df: DataFrame, ordered: Boolean, clue: String): Unit =
     if (ordered) assert(fresh(df).collect().toSeq === spark0(df), clue)
     else assert(fresh(df).collect().map(_.toString).sorted === spark0(df).map(_.toString).sorted, clue)
+
+  private def splits(p: SparkPlan): Int = collect(p) { case s: OneTaskSplitExec => s }.size
+
+  /** (partition, row) pairs in the order each partition yields them. */
+  private def byPartition(df: DataFrame): Seq[(Int, String)] =
+    df.rdd.mapPartitionsWithIndex((i, rows) => rows.map(r => (i, r.toString))).collect().toSeq
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
@@ -232,5 +245,108 @@ class OneTaskExchangeRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper
       assert(total.collect().toSeq === Seq(Row(0L)))
       assert(!coalesced(sorted.queryExecution.executedPlan))
     }
+  }
+
+  /** `df` hash-repartitioned by k to the four cores. */
+  private def byK(df: DataFrame): DataFrame = df.repartition(4, col("k"))
+
+  /** Spark's partitions of `df`, each in order: AQE off. */
+  private def sparkPartitions(df: DataFrame): Seq[(Int, String)] =
+    withSQLConf("spark.sql.adaptive.enabled" -> "false")(byPartition(fresh(df)))
+
+  test("a hash repartition of one small task is split without a shuffle, and keyed consumers add none") {
+    val shapes = Seq(
+      "repartition" -> byK(single),
+      "groupBy" -> byK(single).groupBy("k").agg(sum("u").as("s"), count(lit(1)).as("n")),
+      "window" -> byK(single).withColumn("r", row_number().over(Window.partitionBy("k").orderBy("seq"))))
+    for ((name, df) <- shapes) {
+      val p = finalPlan(df)
+      assert(shuffles(p).isEmpty && splits(p) === 1, name)
+      assert(jobsStartedBy(noop(fresh(df))) === 1, name)
+      assert(byPartition(fresh(df)) === sparkPartitions(df), name)
+    }
+    // keyed otherwise, a consumer keeps its exchange: one task would
+    // run every split task's share of the work in turn
+    val other = byK(single).groupBy("u").agg(max("seq").as("m"))
+    val p = finalPlan(other)
+    assert(shuffles(p).size === 1 && splits(p) === 1 && !coalesced(p))
+    sameRows(other, ordered = false, "keyed otherwise")
+  }
+
+  test("a hash repartition keeps its exchange over a wide, oversize or nondeterministic input") {
+    val keeps = Seq(
+      "two splits" -> byK(two),
+      "nondeterministic input" -> byK(single.withColumn("r", rand(7))),
+      "nondeterministic key" -> single.repartition(4, (col("u") + rand(7) * 3).cast("long")))
+    for ((name, df) <- keeps) {
+      val p = finalPlan(df)
+      assert(shuffles(p).size === 1 && splits(p) === 0, name)
+    }
+    sameRows(byK(two), ordered = false, "two splits")
+    // the input fits the advisory size once but not once per partition
+    val bytes = single.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4 * bytes - 1).toString) {
+      val p = finalPlan(byK(single))
+      assert(shuffles(p).size === 1 && splits(p) === 0)
+    }
+    withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4 * bytes).toString) {
+      val p = finalPlan(byK(single))
+      assert(shuffles(p).isEmpty && splits(p) === 1)
+    }
+  }
+
+  test("a split over a scan of no files gives four empty, typed partitions") {
+    val schema = StructType(Seq(StructField("k", LongType)))
+    val noFiles = Files.createTempDirectory(Files.createDirectories(
+      new java.io.File(dir).toPath), "split_no_files").toString
+    val df = byK(spark.read.schema(schema).parquet(noFiles))
+    val f = fresh(df)
+    assert(f.rdd.getNumPartitions === 4 && byPartition(f).isEmpty)
+    assert(splits(f.queryExecution.executedPlan) === 1)
+    val counted = fresh(df.groupBy("k").count())
+    assert(counted.collect().isEmpty && counted.schema.fieldNames.toSeq === Seq("k", "count"))
+  }
+
+  test("every task of a split reads every partition of its parent") {
+    // the rule splits only one-task inputs, which a materialized shuffle
+    // stage is while still holding one partition per core
+    val postShuffle = two.groupBy("k").agg(sum("u").as("s")).repartition(4, col("s"))
+    val p = finalPlan(postShuffle)
+    assert(shuffles(p).size === 1 && splits(p) === 1)
+    assert(byPartition(fresh(postShuffle)).sorted === sparkPartitions(postShuffle).sorted)
+    // a parent of three partitions, split directly
+    val three = spark.range(0, 400, 1, 3).selectExpr(cols: _*)
+    val spark3 = sparkPartitions(byK(three)).sorted
+    val child = withSQLConf("spark.sql.adaptive.enabled" -> "false")(
+      fresh(three).queryExecution.executedPlan)
+    assert(child.execute().getNumPartitions === 3)
+    val schema = child.schema
+    val split = OneTaskSplitExec(HashPartitioning(child.output.filter(_.name == "k"), 4), child)
+    val got = split.execute().mapPartitionsWithIndex { (i, rows) =>
+      rows.map(r => (i, r.toSeq(schema).mkString("[", ",", "]")))
+    }.collect().toSeq
+    assert(got.size === 400 && got.sorted === spark3)
+  }
+
+  test("repartitions by column alone, round-robin ones and any with AQE off keep Spark's exchange") {
+    for ((name, df) <- Seq("by column" -> single.repartition(col("k")),
+                           "round-robin" -> single.repartition(4))) {
+      val p = finalPlan(df)
+      assert(shuffles(p).size === 1 && splits(p) === 0, name)
+    }
+    withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+      val p = fresh(byK(single)).queryExecution.executedPlan
+      assert(shuffles(p).size === 1 && splits(p) === 0)
+    }
+  }
+
+  test("explain and the initial plan show the split and start no job") {
+    val df = byK(single).groupBy("k").count()
+    val shown = new java.io.ByteArrayOutputStream
+    assert(jobsStartedBy {
+      Console.withOut(shown)(fresh(df).explain())
+      assert(splits(GraftExecShim.initialPhysicalPlan(fresh(df))) === 1)
+    } === 0)
+    assert(shown.toString.contains("OneTaskSplit"))
   }
 }

@@ -4,11 +4,12 @@
 The clean fixtures can't exercise the engine-vs-oracle boundary cases
 (empty/whitespace-only text, vertical tab + formfeed, NBSP, CJK,
 surrogate-pair emoji, trailing backslashes, CR/LF variants, a 9000-char
-token, exact/near dups across sources). This writes /tmp/advfix9/sf9 —
-every non-documents table copied verbatim, documents extended with the
-hostile rows — and the normal gate runs against it:
+token, exact/near dups across sources). This writes /tmp/advfix9/sf9,
+or the directory given as its one argument — every sf0.001 table
+copied, documents, events, embeddings and the relational tables
+extended with hostile rows — and the normal gate runs against it:
 
-    python3 tools/make_advfix.py
+    python3 tools/make_advfix.py            # or: tools/make_advfix.py OUT_DIR
     SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /tmp/advfix9/sf9 /tmp/verify_adv"
     python3 tools/check_oracle.py /tmp/advfix9/sf9 /tmp/verify_adv
 
@@ -19,6 +20,7 @@ interprets \\xNN escapes so backslash-bearing text crashed three
 oracles (encode() is the raw-bytes form); Java `\\b` is Unicode-aware
 while RE2's is ASCII, so `\\bs[a-z]+\\b` disagreed on 'straße'.
 """
+import argparse
 import os
 import shutil
 
@@ -54,11 +56,11 @@ def adversarial_rows():
     ]
 
 
-def main():
-    os.makedirs(DST, exist_ok=True)
+def main(dst):
+    os.makedirs(dst, exist_ok=True)
     for t in ['region', 'nation', 'customer', 'supplier', 'part', 'orders',
               'lineitem', 'events', 'embeddings']:
-        shutil.copy(f'{SRC}/{t}.parquet', f'{DST}/{t}.parquet')
+        shutil.copy(f'{SRC}/{t}.parquet', f'{dst}/{t}.parquet')
     # hostile EVENTS rows: unique ids past the fixture range; malformed/
     # string-valued props, a brand-new event_type, boundary + duplicate
     # timestamps, and extreme values. Null ts/user/value rows are NOT
@@ -66,7 +68,7 @@ def main():
     # NULLS LAST, so a null-ts event makes every session/lag oracle
     # ambiguous BY DESIGN — the engine's null-time semantics are pinned
     # in specs instead (as-of: null time matches nothing).
-    ev = pq.read_table(f'{DST}/events.parquet').to_pandas()
+    ev = pq.read_table(f'{dst}/events.parquet').to_pandas()
     base_ts = pd.Timestamp('2024-01-15 00:00:00')
     hostile = pd.DataFrame({
         'event_id': [2001, 2002, 2003, 2004, 2005, 2006],
@@ -85,7 +87,7 @@ def main():
     ev_tbl = pq.read_table(f'{SRC}/events.parquet')
     pq.write_table(pa.Table.from_pandas(out_ev, schema=ev_tbl.schema,
                                         preserve_index=False),
-                   f'{DST}/events.parquet')
+                   f'{dst}/events.parquet')
     print(f'wrote {len(out_ev)} events')
     # hostile RELATIONAL rows. Customer/supplier names carry the CSV
     # round-trip kill set (embedded comma, double-quote, newline, CR,
@@ -98,7 +100,7 @@ def main():
         out2 = pd.concat([df2, add_df], ignore_index=True)
         pq.write_table(pa.Table.from_pandas(out2, schema=t.schema,
                                             preserve_index=False),
-                       f'{DST}/{table}.parquet')
+                       f'{dst}/{table}.parquet')
         print(f'wrote {len(out2)} {table}')
 
     extend('customer', {
@@ -160,7 +162,7 @@ def main():
     out_emb = pd.concat([edf, hostile_emb], ignore_index=True)
     pq.write_table(pa.Table.from_pandas(out_emb, schema=emb.schema,
                                         preserve_index=False),
-                   f'{DST}/embeddings.parquet')
+                   f'{dst}/embeddings.parquet')
     print(f'wrote {len(out_emb)} embeddings')
     tbl = pq.read_table(f'{SRC}/documents.parquet')
     df = tbl.to_pandas()
@@ -175,9 +177,12 @@ def main():
     })
     out = pd.concat([df, rows], ignore_index=True)
     t2 = pa.Table.from_pandas(out, schema=tbl.schema, preserve_index=False)
-    pq.write_table(t2, f'{DST}/documents.parquet')
-    print(f'wrote {len(out)} docs to {DST}')
+    pq.write_table(t2, f'{dst}/documents.parquet')
+    print(f'wrote {len(out)} docs to {dst}')
 
 
 if __name__ == '__main__':
-    main()
+    ap = argparse.ArgumentParser(description='Build the adversarial fixture.')
+    ap.add_argument('out', nargs='?', default=DST,
+                    help=f'output directory (default {DST})')
+    main(ap.parse_args().out)
