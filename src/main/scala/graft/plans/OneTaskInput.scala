@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
   BroadcastQueryStageExec, CoalesceShufflePartitions, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.internal.SQLConf
@@ -31,7 +32,9 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Leaves are sized only where that runs nothing: file scans from
   * their file listing (a scan's read RDD would build the file reader,
-  * which broadcasts the Hadoop conf), loaded caches from their
+  * which broadcasts the Hadoop conf), and a parquet scan of one file
+  * that the listing cuts into several splits also from its footer,
+  * read on the driver ([[ParquetRowGroups]]); loaded caches from their
   * statistics, local tables from their rows. A materialized shuffle
   * stage (AQE re-plans after each stage runs) counts the partitions
   * Spark's own `CoalesceShufflePartitions` reads it as and the bytes it
@@ -80,10 +83,20 @@ object OneTaskInput {
       val (parts, bytes) = sizes.flatten.foldLeft((0, BigInt(0))) {
         case ((n, b), (n1, b1)) => (n + n1, b + b1)
       }
-      parts <= 1 &&
-        bytes * copies <= SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      parts <= 1 && bytes * copies <= advisory
     }
   }
+
+  private def advisory: Long = SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  /** Whether the one file `f` scans is parquet with at most one row
+    * group. False when its footer cannot be read.
+    */
+  private def atMostOneRowGroup(f: FileSourceScanExec): Boolean =
+    f.relation.fileFormat.isInstanceOf[ParquetFileFormat] && {
+      val file = f.selectedPartitions.filePartitionIterator.flatMap(_.files).next().fileStatus
+      ParquetRowGroups(f.relation.sparkSession, file, f.relation.options).exists(_ <= 1)
+    }
 
   /** (partitions, bytes) of a leaf, or None when it cannot be sized
     * without running something. A file scan's runtime filter is a
@@ -95,13 +108,17 @@ object OneTaskInput {
       val (n, bytes) = (files.totalNumberOfFiles, files.totalFileSize)
       // FilePartition.getFilePartitions packs splits of at most
       // maxSplitBytes, charging openCost per file: every file fits one
-      // partition iff the last one still does. An unsplittable or
-      // empty file can make this say 2 where Spark reads 1, never the
-      // reverse, so a miss only keeps Spark's plan.
+      // partition iff the last one still does. A parquet split reads
+      // the row groups whose midpoint it holds, so a file of at most
+      // one row group has rows in one split at most, however many it
+      // is cut into: the rest read nothing. An unsplittable or empty
+      // file of another format can make this say 2 where Spark reads
+      // 1; a miss only keeps Spark's plan.
       val maxSplit = FilePartition.maxSplitBytes(f.relation.sparkSession, files)
       val parts =
         if (n == 0) 0
         else if (bytes + (n - 1) * SQLConf.get.filesOpenCostInBytes <= maxSplit) 1
+        else if (n == 1 && bytes <= advisory && atMostOneRowGroup(f)) 1
         else 2
       Some((parts, BigInt(bytes)))
     case m: InMemoryTableScanExec if m.relation.cacheBuilder.isCachedColumnBuffersLoaded =>

@@ -1,7 +1,6 @@
 package graft.queries
 
 import java.io.FileNotFoundException
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
@@ -56,15 +55,7 @@ object Tables {
       confs: Seq[(String, String)])
   private final case class Pin(fingerprint: Fingerprint, schema: StructType)
 
-  private val pins =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Pin]]()
-
-  private def sessionPins(spark: SparkSession): ConcurrentHashMap[String, Pin] =
-    pins.synchronized {
-      var m = pins.get(spark)
-      if (m == null) { m = new ConcurrentHashMap[String, Pin](); pins.put(spark, m) }
-      m
-    }
+  private val pins = new graft.PerSession[String, Pin]
 
   private def fingerprint(spark: SparkSession, path: String): Fingerprint = {
     val p = new Path(path)
@@ -92,7 +83,7 @@ object Tables {
     * read fails or resolves as a plain read would.
     */
   def schemaOf(spark: SparkSession, path: String): StructType = {
-    val m = sessionPins(spark)
+    val m = pins(spark)
     val fp = fingerprint(spark, path)
     val hit = m.get(path)
     if (hit != null && hit.fingerprint == fp) hit.schema
@@ -105,7 +96,7 @@ object Tables {
 
   /** The paths pinned in this session, with their schemas. */
   private[queries] def pinned(spark: SparkSession): Map[String, StructType] =
-    sessionPins(spark).asScala.map { case (k, v) => k -> v.schema }.toMap
+    pins(spark).asScala.map { case (k, v) => k -> v.schema }.toMap
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

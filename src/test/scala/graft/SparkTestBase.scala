@@ -31,6 +31,17 @@ abstract class SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Broadcasts `body` creates: broadcast ids are handed out in order,
+    * so two probes around it bracket every id it took.
+    */
+  def broadcastsCreatedBy(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val before = sc.broadcast(0)
+    body
+    val after = sc.broadcast(0)
+    try after.id - before.id - 1 finally { before.destroy(); after.destroy() }
+  }
+
   /** Spark jobs that `body` starts on this thread. Listener delivery is
     * asynchronous but in post order, so once a sentinel job started
     * after `body` has been delivered, every job of `body` has been.

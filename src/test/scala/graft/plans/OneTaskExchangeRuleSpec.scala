@@ -1,12 +1,17 @@
 package graft.plans
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, GraftShim, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-import org.apache.spark.sql.execution.{CoalesceExec, GraftExecShim, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.{CoalesceExec, FormattedMode, GraftExecShim, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,8 +22,11 @@ import graft.ops.TemporalJoins
 
 /** [[OneTaskExchangeRule]] under aggregates, windows and joins, over
   * inputs that are one task only once the upstream stage has run, and
-  * for hash repartitions of one small task ([[OneTaskSplitExec]]).
-  * Global sorts over one-split scans are [[OneTaskSortRuleSpec]]'s.
+  * for hash repartitions of one small task ([[OneTaskSplitExec]]); over
+  * one-file parquet scans cut into several splits, sized by their row
+  * groups ([[ParquetRowGroups]]); and the guard that folds only into a
+  * stage waiting on nothing else. Global sorts over one-split scans are
+  * [[OneTaskSortRuleSpec]]'s.
   * Every rewritten query returns Spark's rows (AQE off, where the rule
   * never runs) in Spark's order.
   *
@@ -36,7 +44,15 @@ import graft.ops.TemporalJoins
   * split), "partitioning dropped to Unknown" (a groupBy or window on
   * the repartition key shuffles again), "read only parent partition
   * 0" (a split over a three-partition parent loses rows), "a split is
-  * narrow" (a groupBy on another key runs every split task in one).
+  * narrow" (a groupBy on another key runs every split task in one),
+  * "no guard" (an aggregate folds into a stage that waits on an unbuilt
+  * broadcast), "every stage input pending" (a materialized stage
+  * beside a fold holds it back), "no query stage pending" (an
+  * unmaterialized broadcast stage lets a fold through), "undo every
+  * fold of a merged stage" (the aggregate under a held-back window
+  * exchange loses its fold), "row groups keyed without the mtime" (a
+  * same-length rewrite keeps the old footer's count), "no row-group
+  * sizing" (a one-row-group file cut into splits keeps its exchanges).
   */
 class OneTaskExchangeRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -348,5 +364,196 @@ class OneTaskExchangeRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper
       assert(splits(GraftExecShim.initialPhysicalPlan(fresh(df))) === 1)
     } === 0)
     assert(shown.toString.contains("OneTaskSplit"))
+  }
+
+  /** `df` written as one bare parquet file at `path` (no checksum file
+    * beside it, so a rewrite in place stays readable).
+    */
+  private def bareFile(df: DataFrame, path: String, options: (String, String)*): File = {
+    val tmp = s"$dir/tmp_${java.util.UUID.randomUUID}"
+    df.coalesce(1).write.options(options.toMap).parquet(tmp)
+    val part = new File(tmp).listFiles().filter(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    copyOver(part, path)
+  }
+
+  private def copyOver(from: File, path: String): File = {
+    val to = new File(path)
+    to.getParentFile.mkdirs()
+    Files.copy(from.toPath, to.toPath, StandardCopyOption.REPLACE_EXISTING)
+    to
+  }
+
+  private def rowGroups(f: File): Int = ParquetFooterReader.readFooter(
+    HadoopInputFile.fromPath(new Path(f.toURI), spark.sparkContext.hadoopConfiguration),
+    ParquetMetadataConverter.NO_FILTER).getBlocks.size
+
+  private lazy val rows = spark.range(0, 400, 1, 1).selectExpr(cols: _*)
+  /** `rows` in one row group, and in row groups of about 100 rows. */
+  private lazy val oneGroupFile = bareFile(rows, s"$dir/rg/one_group.parquet")
+  private lazy val groupsFile = bareFile(rows, s"$dir/rg/groups.parquet", "parquet.block.size" -> "1024")
+  private def oneGroup: DataFrame = spark.read.parquet(oneGroupFile.getPath)
+
+  /** Splits of at most 1 KB: every fixture file is cut into several. */
+  private def smallSplits[A](body: => A): A =
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "1024")(body)
+
+  /** Spark's rows in the order its plan with one reducer gives them. */
+  private def oneReducer(df: DataFrame): Seq[Row] = withSQLConf(
+      "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")(
+    fresh(df).collect().toSeq)
+
+  private def initial(df: DataFrame): SparkPlan = GraftExecShim.initialPhysicalPlan(fresh(df))
+
+  private def folds(p: SparkPlan): Int = collect(p) { case c: CoalesceExec => c.numPartitions }.count(_ == 1)
+
+  private def shapesOver(in: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "grouped" -> in.groupBy("k").agg(sum("u").as("s"), count(lit(1)).as("n")),
+    "global" -> in.agg(sum("u").as("s"), max("seq").as("m")),
+    "sort" -> in.orderBy("k"),
+    "window" -> in.withColumn("r", row_number().over(Window.partitionBy("k").orderBy("seq"))))
+
+  test("a one-row-group parquet file read as several splits is one task, rows and order as one reducer's") {
+    smallSplits {
+      assert(rowGroups(oneGroupFile) === 1 && fresh(oneGroup).rdd.getNumPartitions >= 3)
+      for ((name, df) <- shapesOver(oneGroup)) {
+        val p = finalPlan(df)
+        assert(shuffles(p).isEmpty && coalesced(p), name)
+        assert(jobsStartedBy(noop(fresh(df))) === 1, name)
+        assert(fresh(df).collect().toSeq === oneReducer(df), name)
+      }
+    }
+    // one split per file: the plan the row groups now give it
+    assert(shuffles(finalPlan(oneGroup.orderBy("k"))).isEmpty)
+  }
+
+  test("the same rows in several row groups keep their exchanges") {
+    val groups = spark.read.parquet(groupsFile.getPath)
+    smallSplits {
+      assert(rowGroups(groupsFile) >= 2 && fresh(groups).rdd.getNumPartitions >= 2)
+      for ((name, df) <- shapesOver(groups)) {
+        val p = finalPlan(df)
+        assert(shuffles(p).nonEmpty && !coalesced(p), name)
+        sameRows(df, ordered = name == "sort", name)
+      }
+    }
+  }
+
+  test("a zero-row file read as several splits is one task") {
+    val empty = bareFile(spark.range(0, 0, 1, 1).toDF("u"), s"$dir/rg/zero_rows.parquet")
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "64") {
+      val in = spark.read.parquet(empty.getPath)
+      assert(rowGroups(empty) === 0 && fresh(in).rdd.getNumPartitions >= 2)
+      val df = in.groupBy("u").count().orderBy("u")
+      val p = finalPlan(df)
+      assert(shuffles(p).isEmpty && folds(p) === 2)
+      assert(fresh(df).collect().isEmpty && df.schema.fieldNames.toSeq === Seq("u", "count"))
+      assert(fresh(in.agg(count(lit(1)))).collect().toSeq === Seq(Row(0L)))
+    }
+  }
+
+  test("an unreadable footer keeps Spark's plan and throws nothing") {
+    val bytes = Files.readAllBytes(oneGroupFile.toPath)
+    val truncated = new File(s"$dir/rg/truncated.parquet")
+    Files.write(truncated.toPath, bytes.take(bytes.length - 8))
+    smallSplits {
+      val df = spark.read.schema(rows.schema).parquet(truncated.getPath).groupBy("k").count()
+      val p = initial(df)
+      assert(shuffles(p).size === 1 && !coalesced(p))
+      assert(fresh(df).queryExecution.explainString(FormattedMode).contains("Exchange"))
+    }
+  }
+
+  test("a file rewritten in place is sized from its new footer") {
+    val path = s"$dir/rg/rewritten/data.parquet"
+    def foldsNow: Boolean = smallSplits {
+      shuffles(initial(spark.read.schema(rows.schema).parquet(path).groupBy("k").count())).isEmpty
+    }
+    val f = copyOver(oneGroupFile, path)
+    assert(foldsNow)
+    // a new length: the same rows in several row groups
+    copyOver(groupsFile, path)
+    assert(!foldsNow)
+    copyOver(oneGroupFile, path)
+    assert(foldsNow)
+    // the same length, a new mtime: the footer's magic overwritten
+    val mtime = f.lastModified
+    val bytes = Files.readAllBytes(oneGroupFile.toPath)
+    "XXXX".getBytes.copyToArray(bytes, bytes.length - 4)
+    Files.write(f.toPath, bytes)
+    assert(f.setLastModified(mtime + 10000) && f.length === oneGroupFile.length)
+    assert(!foldsNow)
+  }
+
+  test("preparing and explaining a plan sized by row groups start no job and no broadcast") {
+    val path = s"$dir/rg/cold_${java.util.UUID.randomUUID}.parquet"
+    copyOver(oneGroupFile, path)
+    val df = spark.read.parquet(path).groupBy("k").agg(sum("u").as("s")).orderBy("k")
+    smallSplits {
+      assert(jobsStartedBy {
+        assert(broadcastsCreatedBy {
+          fresh(df).queryExecution.explainString(FormattedMode)
+          assert(shuffles(initial(df)).isEmpty)
+        } === 0)
+      } === 0)
+    }
+  }
+
+  test("an aggregate whose stage also waits on an unbuilt broadcast keeps its exchange") {
+    smallSplits {
+      val grouped = oneGroup.groupBy("k").agg(sum("u").as("s"))
+      assert(shuffles(initial(grouped)).isEmpty)
+      // the aggregate runs as its own stage beside the broadcast build
+      val joined = grouped.join(broadcast(dimUnique), "k")
+      val p = initial(joined)
+      assert(shuffles(p).size === 1 && !coalesced(p))
+      assert(shuffles(finalPlan(joined)).size === 1)
+      sameRows(joined, ordered = false, "joined")
+      // a split is not held back: its tasks spread the input either way
+      assert(splits(initial(byK(single).join(broadcast(dimUnique), "k"))) === 1)
+    }
+  }
+
+  test("an unmaterialized query stage in the stage holds a fold back") {
+    smallSplits {
+      val joined = oneGroup.groupBy("k").agg(sum("u").as("s")).join(broadcast(dimUnique), "k")
+      val spark0 = withSQLConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.codegen.wholeStage" -> "false")(fresh(joined).queryExecution.executedPlan)
+      val built = spark0.transform { case b: BroadcastExchangeExec =>
+        BroadcastQueryStageExec(0, b, b.canonicalized) }
+      assert(shuffles(OneTaskExchangeRule(built)).size === 1)
+      // the aggregate alone folds
+      val agg = collectFirst(built) { case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
+        if shuffles(a).nonEmpty => a }.get
+      assert(shuffles(OneTaskExchangeRule(agg)).isEmpty)
+    }
+  }
+
+  test("a sort over an aggregate of one small task folds both exchanges in one preparation") {
+    smallSplits {
+      val df = oneGroup.groupBy("k").agg(sum("u").as("s"), count(lit(1)).as("n")).orderBy("k")
+      val p = initial(df)
+      assert(shuffles(p).isEmpty && folds(p) === 2)
+      assert(jobsStartedBy(noop(fresh(df))) === 1)
+      assert(fresh(df).collect().toSeq === oneReducer(df))
+      // under a window whose stage waits on a broadcast, the window's
+      // exchange stays and the aggregate's, in the window's map stage, folds
+      val ranked = oneGroup.groupBy("k").agg(sum("u").as("s"))
+        .withColumn("r", rank().over(Window.orderBy(col("s").desc, col("k"))))
+        .join(broadcast(dimUnique), "k")
+      val q = initial(ranked)
+      assert(shuffles(q).size === 1 && folds(q) === 1)
+      sameRows(ranked, ordered = false, "ranked")
+    }
+  }
+
+  test("a materialized stage beside a fold does not hold it back") {
+    // both branches read one reused grouping stage; once it has run, the
+    // sort's exchange folds though the union's stage also reads the stage
+    val grouped = two.groupBy("k").agg(sum("u").as("s"))
+    val df = grouped.orderBy("k").union(grouped)
+    val p = finalPlan(df)
+    assert(rangeShuffles(p) === 0 && coalesced(p))
+    sameRows(df, ordered = false, "union")
   }
 }

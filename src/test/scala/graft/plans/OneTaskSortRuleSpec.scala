@@ -200,17 +200,6 @@ class OneTaskSortRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       case e: ShuffleExchangeExec if e.shuffleOrigin != ENSURE_REQUIREMENTS => e }.size === 1)
   }
 
-  /** Broadcasts `body` creates: broadcast ids are handed out in order,
-    * so two probes around it bracket every id it took.
-    */
-  private def broadcastsCreatedBy(body: => Unit): Long = {
-    val sc = spark.sparkContext
-    val before = sc.broadcast(0)
-    body
-    val after = sc.broadcast(0)
-    try after.id - before.id - 1 finally { before.destroy(); after.destroy() }
-  }
-
   test("explain and the prepared plan start no job, build no reader and write nothing") {
     // sizing the scan reads its file listing; building the parquet
     // reader would broadcast the Hadoop conf
