@@ -44,38 +44,20 @@ object Bench {
         "compare across rounds — flat = comparable host)")
     // Spark JOB COUNT per query: scheduling overhead (not data) is the
     // sf1 heavy-tail cost, so the action count is the tuning signal.
-    // Posting to the listener bus is synchronous but DELIVERY is not
-    // (AsyncEventQueue dispatches on its own thread), so an action can
-    // return while its last JobStart is still queued — read the
-    // counter only after it has gone quiet (settledJobs below), or a
-    // straggler increment lands in the NEXT query's window.
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(); ()
-        }
-      })
-    val jobCounts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    // wait (outside the timed section) for the async listener bus to
-    // go quiet before reading the counter — see graft.ListenerSettle
-    def settledJobs(): Int = ListenerSettle.settled(jobCounter)
+    // The ledger drains the listener bus around each query, so every
+    // job of a query lands in its own window and none in the next's.
+    val ledger = RunLedger.attach(spark)
     // noop sink executes the FULL physical plan (count() would let
-    // Catalyst prune every projected expression away)
-    def runIn(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      val j0 = jobCounter.get()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+    // Catalyst prune every projected expression away); returns the
+    // query's (seconds, jobs)
+    def runIn(name: String, dir: String): (Double, Int) = {
+      val (result, w) = ledger.measure(SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+      result.failed.foreach { e =>
         failed += name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val jobs = settledJobs() - j0
-      jobCounts(name) = jobs
-      System.err.println(f"[bench] $name%-22s $secs%8.2f s  $jobs%3d jobs")
+      System.err.println(f"[bench] $name%-22s ${w.seconds}%8.2f s  ${w.jobs}%3d jobs")
       // isolate queries: the dedup/ANN pipelines persist sketch stages
       // that would otherwise accumulate memory pressure across the run;
       // the forced GC (outside the timed section) stops 100 queries'
@@ -86,9 +68,9 @@ object Bench {
       graft.ops.StageCache.releaseAll()
       spark.catalog.clearCache()
       System.gc()
-      secs
+      (w.seconds, w.jobs)
     }
-    def run(name: String): Double = runIn(name, sfDir)
+    def run(name: String): (Double, Int) = runIn(name, sfDir)
     // local iteration aid: SPARK_GRAFT_ONLY=q_a,q_b benches a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -234,8 +216,8 @@ object Bench {
         // strictly additive, and a single-shot sf1 number was observed
         // 1.8x off the quiet-machine cost for the same plan
         sf1Loads(n) = osBean.getSystemLoadAverage
-        val tA = runIn(n, dir); val jA = jobCounts(n)
-        val tB = runIn(n, dir); val jB = jobCounts(n)
+        val (tA, jA) = runIn(n, dir)
+        val (tB, jB) = runIn(n, dir)
         sf1Spreads(n) = math.abs(tA - tB)
         val (t10, j10) = if (tB < tA) (tB, jB) else (tA, jA)
         sf1Jobs(n) = j10
@@ -284,22 +266,22 @@ object Bench {
     }.getOrElse(2)
     val passes = (1 to nPasses).map { p =>
       System.err.println(s"[bench] ---- pass $p/$nPasses ----")
-      names.map { n => val t = run(n); (n, t, jobCounts(n)) }
+      names.map { n => val (t, j) = run(n); (n, t, j) }
     }
     val pass1 = passes.head
     // per-query SPREAD (|t1 - t2|): the mechanical host-noise signal.
     // A big spread on an unchanged query is contention; a tight spread
     // at a higher level than last round is a real regression.
     val spreads = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = pass1.indices.map { i =>
+    val bests = pass1.indices.map { i =>
       val runs = passes.map(_(i))
       val n = runs.head._1
-      val best = runs.minBy(_._2)
       if (runs.size > 1)
         spreads(n) = runs.map(_._2).max - runs.map(_._2).min
-      jobCounts(n) = best._3
-      n -> best._2
+      runs.minBy(_._2)
     }
+    val results = bests.map { case (n, t, _) => n -> t }
+    val bestJobs = bests.map { case (n, _, j) => n -> j }.toMap
     val pass1Sum = pass1.map(_._2).sum
     val pass2Sum = if (passes.size > 1) passes(1).map(_._2).sum else 0.0
     // sf1 alphas: the subset ran FIRST (see above); its exponent needs
@@ -417,12 +399,10 @@ object Bench {
       .map(bySlowest.take).find(k => line(k).length <= 1880)
       .getOrElse(Seq.empty)
     // full dump also carries per-query Spark JOB counts (the action-
-    // count tuning signal; compact line omits them to stay in-window).
-    // jobCounts holds MAIN-run numbers here: the sf1 subset ran first
-    // and snapshotted its own counts into sf1Jobs before the passes
-    // overwrote the shared map.
+    // count tuning signal; compact line omits them to stay in-window),
+    // each from the query's fastest main-pass run
     val jobsPart = s""","jobs":${bySlowest.map { case (n, _) =>
-      "\"" + n + "\":" + jobCounts.getOrElse(n, 0)
+      "\"" + n + "\":" + bestJobs(n)
     }.mkString("{", ",", "}")}"""
     val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":${
       bySlowest.map(entry).mkString("{", ",", "}")}$jobsPart$failedPart$sf1Part$envPart$spreadPart$passesPart,"value":${r2(total)}}"""

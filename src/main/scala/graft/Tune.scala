@@ -111,44 +111,12 @@ object Tune {
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val spill = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-run decomposition counters (r13): shuffle bytes crossing the
-    // exchanges and task-summed GC time — the two candidate mechanisms
-    // whenever a wall-clock alpha exceeds the candidate-volume alpha
-    // (disk-bandwidth-bound exchanges vs heap pressure)
-    val shWrite = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-stage attribution buffer (dumpStages prints it): which
-    // exchange owns the bytes, by stage id/name/tasks
-    val REP_MARK = "__rep_boundary__"
-    val stageLog = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, Long, Long, Int)]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-            shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            gcMs.addAndGet(m.jvmGCTime)
-            stageLog.synchronized {
-              stageLog += ((sc.stageInfo.stageId,
-                sc.stageInfo.name.linesIterator.next().take(72),
-                m.shuffleWriteMetrics.bytesWritten,
-                m.shuffleReadMetrics.totalBytesRead,
-                sc.stageInfo.numTasks)); ()
-            }
-          }
-        }
-      })
+    // per-run decomposition (r13): beside jobs and spill, shuffle
+    // bytes crossing the exchanges and task-summed GC time — the two
+    // candidate mechanisms whenever a wall-clock alpha exceeds the
+    // candidate-volume alpha (disk-bandwidth-bound exchanges vs heap
+    // pressure); dumpStages attributes the bytes to stages
+    val ledger = RunLedger.attach(spark)
     // heap is a PER-INSTRUMENT env pin (r15 VERDICT task 7 / SCALE.md
     // r15): 96g (+AlwaysPreTouch) helps allocation-heavy sf1-tier
     // bench arms but STARVES the page cache that the doc-tier cells'
@@ -166,84 +134,54 @@ object Tune {
         "321-389 s at 96g vs 165-232 s at 32g, identical code); this " +
         "session's cells are NOT comparable to committed doc-tier " +
         "numbers. Re-run without SPARK_DRIVER_MEM=96g.")
-    def time(name: String)(f: => DataFrame): Double = {
-      val ts = (1 to 2).map { _ =>
+    // min-of-2 over count(); returns both reps' windows for dumpStages
+    def time(name: String)(f: => DataFrame): Seq[RunLedger.Window] = {
+      val reps = (1 to 2).map { _ =>
         graft.ops.StageCache.releaseAll()
         spark.catalog.clearCache()
         System.gc()
-        val j0 = jobs.get()
-        val s0 = spill.get()
-        val (w0, r0, g0) = (shWrite.get(), shRead.get(), gcMs.get())
-        val t0 = System.nanoTime()
-        val n = f.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        // listener delivery is async — settle before reading
-        val out = (t, ListenerSettle.settled(jobs) - j0, n, spill.get() - s0,
-          shWrite.get() - w0, shRead.get() - r0, gcMs.get() - g0)
-        // rep-boundary sentinel for dumpStages: Spark SQL stage names
-        // are the ACTION call site, so distinct stages within one
-        // execution commonly share a name — per-execution attribution
-        // needs (name, occurrence-within-rep), and the occurrence
-        // index is only well-defined once the log is split at rep
-        // boundaries (zero-byte row, filtered by every consumer's
-        // >100 MB threshold)
-        stageLog.synchronized { stageLog += ((-1, REP_MARK, 0L, 0L, 0)); () }
-        out
+        val (n, w) = ledger.measure(f.count())
+        (n.get, w)
       }
-      val best = ts.minBy(_._1)
-      println(f"[tune] $name%-28s ${best._1}%7.2f s  ${best._2}%3d jobs  " +
-        f"${best._3}%9d rows  spill ${best._4 / 1048576}%5d MB  " +
-        f"shW ${best._5 / 1048576}%6d MB  shR ${best._6 / 1048576}%6d MB  " +
-        f"gc ${best._7 / 1000.0}%6.1f s")
-      best._1
+      val (n, best) = reps.minBy(_._2.seconds)
+      println(f"[tune] $name%-28s ${best.seconds}%7.2f s  ${best.jobs}%3d jobs  " +
+        f"$n%9d rows  spill ${best.spill / 1048576}%5d MB  " +
+        f"shW ${best.shW / 1048576}%6d MB  shR ${best.shR / 1048576}%6d MB  " +
+        f"gc ${best.gcMs / 1000.0}%6.1f s")
+      reps.map(_._2)
     }
 
-    // Per-execution stage attribution over the listener log. Spark SQL
-    // stage names are the action call site (e.g. "count at
+    // Per-execution stage attribution over the reps of one time() cell.
+    // Spark SQL stage names are the action call site (e.g. "count at
     // Tune.scala:161"), so distinct stages within ONE execution
     // commonly share a name — grouping by name alone collapses them to
-    // a single max row and under-reports the execution's shuffle. The
-    // log is instead split at the rep sentinels time() appends, each
-    // stage gets an occurrence index within its rep (stages of one rep
-    // are logged in stage-id order, and a given logical exchange keeps
-    // its position across reps), and the report is the per-(name,
-    // occurrence) max across reps — reconciling against the cell's
-    // printed shW (a single-execution number), not 2× it.
-    def dumpStages(tag: String): Unit = stageLog.synchronized {
+    // a single max row and under-reports the execution's shuffle. Each
+    // stage instead gets an occurrence index within its rep (a given
+    // logical exchange keeps its position in stage-id order across
+    // reps), and the report is the per-(name, occurrence) max across
+    // reps — reconciling against the cell's printed shW (a
+    // single-execution number), not 2× it.
+    def dumpStages(tag: String, reps: Seq[RunLedger.Window]): Unit = {
       println(s"[tune] -- stages >100MB for $tag (per execution; " +
         "max across the timed reps) --")
-      val reps = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, Long, Long, Int)])
-      stageLog.foreach { s =>
-        if (s._2 == REP_MARK) {
-          if (reps.last.nonEmpty) {
-            reps += scala.collection.mutable.ArrayBuffer
-              .empty[(Int, String, Long, Long, Int)]; ()
-          }
-        } else { reps.last += s; () }
-      }
-      reps.filter(_.nonEmpty)
+      reps
         .flatMap { rep =>
           val occ = scala.collection.mutable.Map.empty[String, Int]
-          rep.sortBy(_._1).map { s =>
-            val i = occ.getOrElse(s._2, 0)
-            occ(s._2) = i + 1
-            ((s._2, i), s)
+          rep.stages.sortBy(_.id).map { s =>
+            val nm = s.name.take(72)
+            val i = occ.getOrElse(nm, 0)
+            occ(nm) = i + 1
+            ((nm, i), s)
           }
         }
         .groupBy(_._1).toSeq
-        .map { case ((nm, i), ss) =>
-          val best = ss.map(_._2).maxBy(s => s._3 max s._4)
-          (best._1, nm, i, best._3, best._4, best._5)
+        .map { case ((nm, i), ss) => (nm, i, ss.map(_._2).maxBy(s => s.shW max s.shR)) }
+        .filter { case (_, _, s) => s.shW > 100000000L || s.shR > 100000000L }
+        .sortBy(_._3.id)
+        .foreach { case (nm, i, s) =>
+          println(f"[tune]   stage ${s.id}%4d #$i $nm%-70s  " +
+            f"shW ${s.shW / 1048576}%6d MB  shR ${s.shR / 1048576}%6d MB  ${s.tasks}%4d tasks")
         }
-        .filter(s => s._4 > 100000000L || s._5 > 100000000L)
-        .sortBy(_._1)
-        .foreach { case (id, nm, i, w, r, nt) =>
-          println(f"[tune]   stage $id%4d #$i $nm%-70s  " +
-            f"shW ${w / 1048576}%6d MB  shR ${r / 1048576}%6d MB  $nt%4d tasks")
-        }
-      stageLog.clear()
     }
 
     // The production minhash pipeline pinned to one side of the
@@ -279,12 +217,10 @@ object Tune {
         spark.conf.set("spark.sql.shuffle.partitions", "128")
         for (block <- 1 to 2) {
           for ((label, pf) <- Seq(("1phase", "off"), ("2ph16", "16"))) {
-            stageLog.synchronized(stageLog.clear())
             spark.conf.set(Dedup.VerifyPrefilterConfKey, pf)
-            time(f"mh $label%s @1000x b$block") {
+            dumpStages(s"$label b$block", time(f"mh $label%s @1000x b$block") {
               Dedup.minhashPairs(d1000, "doc_id", "text", 2, 16, 8, 0.1)
-            }
-            dumpStages(s"$label b$block")
+            })
           }
         }
         spark.conf.unset(Dedup.VerifyPrefilterConfKey)
@@ -332,11 +268,10 @@ object Tune {
           val d = spark.read.parquet(path)
           spark.conf.set("spark.sql.shuffle.partitions", p.toString)
           for (block <- 1 to 2) {
-            stageLog.synchronized(stageLog.clear())
-            time(f"mh carry $tname b$block")(minhashOnRoute(d, carryRoute))
-            dumpStages(s"carry $tname b$block")
-            time(f"mh rv    $tname b$block")(minhashOnRoute(d, rendezvousRoute))
-            dumpStages(s"rv $tname b$block")
+            dumpStages(s"carry $tname b$block",
+              time(f"mh carry $tname b$block")(minhashOnRoute(d, carryRoute)))
+            dumpStages(s"rv $tname b$block",
+              time(f"mh rv    $tname b$block")(minhashOnRoute(d, rendezvousRoute)))
           }
         }
 
@@ -360,18 +295,13 @@ object Tune {
         for (p <- Seq(256, 512, 1024)) {
           spark.conf.set("spark.sql.shuffle.partitions", p.toString)
           println(f"[tune] /tmp free before p=$p: $freeGb%.1f GB")
-          val t0 = System.nanoTime()
-          val s0 = spill.get(); val (w0, r0, g0) =
-            (shWrite.get(), shRead.get(), gcMs.get())
           try {
-            val n = Dedup.minhashPairs(d2000, "doc_id", "text", 2, 16, 8, 0.1)
-              .count()
-            val t = (System.nanoTime() - t0) / 1e9
-            println(f"[tune] minhash_fast @10M p=$p%-5d ${t}%7.2f s  " +
-              f"$n%9d rows  spill ${(spill.get() - s0) / 1048576}%6d MB  " +
-              f"shW ${(shWrite.get() - w0) / 1048576}%6d MB  " +
-              f"shR ${(shRead.get() - r0) / 1048576}%6d MB  " +
-              f"gc ${(gcMs.get() - g0) / 1000.0}%6.1f s")
+            val (n, w) = ledger.measure(
+              Dedup.minhashPairs(d2000, "doc_id", "text", 2, 16, 8, 0.1).count())
+            println(f"[tune] minhash_fast @10M p=$p%-5d ${w.seconds}%7.2f s  " +
+              f"${n.get}%9d rows  spill ${w.spill / 1048576}%6d MB  " +
+              f"shW ${w.shW / 1048576}%6d MB  shR ${w.shR / 1048576}%6d MB  " +
+              f"gc ${w.gcMs / 1000.0}%6.1f s")
           } catch {
             case e: Exception =>
               println(s"[tune] @10M p=$p FAILED: ${e.getMessage.take(200)}")

@@ -18,4 +18,12 @@ object GraftShim {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every listener has been handed every event posted so
+    * far (`listenerBus` is private[spark]). Delivery is asynchronous,
+    * so a listener's counters are complete only after this returns;
+    * a bus still busy after a minute fails with a TimeoutException.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -1,10 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -42,30 +41,23 @@ abstract class SparkTestBase extends AnyFunSuite {
     try after.id - before.id - 1 finally { before.destroy(); after.destroy() }
   }
 
-  /** Spark jobs that `body` starts on this thread. Listener delivery is
-    * asynchronous but in post order, so once a sentinel job started
-    * after `body` has been delivered, every job of `body` has been.
+  /** Spark jobs that `body` starts on this thread, counted once the
+    * listener bus has delivered every event `body` posted.
     */
   def jobsStartedBy(body: => Unit): Int = {
     val sc = spark.sparkContext
     val tag = s"jobs-${java.util.UUID.randomUUID}"
     val n = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`tag`) => n.incrementAndGet()
-          case Some(g) if g == s"$tag-sentinel" => sentinel.countDown()
-          case _ =>
-        }
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == tag))
+          n.incrementAndGet()
     }
     sc.addSparkListener(l)
     try {
       sc.setJobGroup(tag, "counted")
       body
-      sc.setJobGroup(s"$tag-sentinel", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never delivered")
+      GraftShim.drainListenerBus(sc)
       n.get
     } finally {
       sc.clearJobGroup()
